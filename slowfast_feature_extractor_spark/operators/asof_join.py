@@ -24,8 +24,9 @@ Semantics knobs mirror ``pandas.merge_asof``:
 - ``tolerance_seconds`` → matches older than the tolerance are nulled.
 
 Ties among multiple right rows at the same (keys, ts) are resolved
-deterministically: the one with the greatest payload struct wins (callers
-wanting a specific winner should pre-deduplicate the right side).
+deterministically: the one with the greatest payload struct wins, compared
+field by field in ``right_cols`` order (callers wanting a specific winner
+put its key first in ``right_cols`` or pre-deduplicate the right side).
 
 Scale notes (10^12-row target): the plan is one shuffle hash-partitioned
 on the by-keys with an in-partition sort — the same cost envelope as a
@@ -133,8 +134,8 @@ def asof_join(
         # TWO consumers below (the per-chunk-last carry aggregate and
         # the union's base side): without a persist each re-evaluates
         # the full left+right upstream — in composed plans
-        # (pit_dual_rate_chunked_from) that is the entire chunked
-        # window pipeline twice
+        # (pit_dual_rate_from(chunk_trunc=...)) that is the entire
+        # chunked window pipeline twice
         merged = merged.withColumn("__chunk", chunk).persist(
             StorageLevel.MEMORY_AND_DISK
         )

@@ -550,9 +550,14 @@ def _verify_candidates(
     5.8 s). Arrays are distinct by construction (shingle_table
     array_distincts per doc), so set-semantics ``array_intersect``
     counts exactly the shared-shingle rows the old join counted.
+
+    ``threshold`` must be > 0: zero-overlap candidate pairs reach the
+    filter with jaccard 0.0, so a non-positive threshold would emit them.
     """
     from pyspark import StorageLevel
 
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
     cand = cand.persist(StorageLevel.DISK_ONLY)
     n_cand = cand.count()
     docsets = sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))

@@ -1817,19 +1817,6 @@ def frame_sample(
     )
 
 
-def resize_stub(data: bytes, out_w: int, out_h: int):  # pragma: no cover - stub
-    """Resize over non-MJPEG video / subsampled-JPEG bytes needs a
-    production codec to decode first (cv2.resize in the reference,
-    reference/datasets/videoset.py:91-95). The stdlib-decodable paths
-    are real: ``resize_nearest(decode_image(data)["pixels"], w, h)``
-    for BMP/PNG/baseline-JPEG stills, and
-    ``decode_avi(data)["frames"]`` → ``decode_jpeg`` → resize for
-    MJPEG-in-AVI video."""
-    raise NotImplementedError(
-        "non-MJPEG video codecs not available in this environment"
-    )
-
-
 # ------------------------------------------------------------- video (AVI)
 
 

@@ -18,10 +18,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from slowfast_feature_extractor_spark.functions.timeutil import epoch_us
+from slowfast_feature_extractor_spark.operators.skew import carry_window
+from slowfast_feature_extractor_spark.operators.windows import _entity_window, _order_cols
 
 
 def sessionize(
@@ -32,6 +34,7 @@ def sessionize(
     session_col: str = "session_id",
     index_col: str = "session_idx",
     tiebreak: Sequence[str] | str | None = None,
+    chunk: Column | None = None,
 ) -> DataFrame:
     """Assign a session id per entity: a new session starts when the gap
     to the previous event strictly exceeds ``gap_seconds``.
@@ -39,22 +42,37 @@ def sessionize(
     ``session_idx`` is 1-based per entity; ``session_id`` is the string
     ``{entity}#{idx}`` (the analog of the reference's constructed task
     keys ``patient_{p}_task_{a}_...``, reference/just_test_v1.py:1561).
+    Existing index/session columns are replaced (re-sessionizing).
+
+    ``chunk``: optional expression monotone in ``ts`` per entity (e.g.
+    ``F.date_trunc("month", F.col("ts"))``) enabling the skew-robust
+    plan (operators/skew.py): gap detection runs per (entity, chunk)
+    seeded with a ONE-row carry (the entity's last row before the
+    chunk), so the first row of every chunk sees its true predecessor;
+    the chunk-local session count is then offset by the session starts
+    of the entity's earlier chunks — a session spanning a chunk boundary
+    contributes no start in the later chunk, so the index carries over
+    exactly. Same results as the plain plan.
     """
-    order = [F.col(ts).asc()]
-    if tiebreak is not None:
-        tb = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak)
-        order += [F.col(c).asc() for c in tb]
-    w = Window.partitionBy(entity).orderBy(*order)
-    prev = F.lag(F.col(ts)).over(w)
     gap_us = int(round(gap_seconds * 1_000_000))
-    is_new = F.when(
-        prev.isNull() | ((epoch_us(F.col(ts)) - epoch_us(prev)) > F.lit(gap_us)),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    run = Window.partitionBy(entity).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = df.withColumn(index_col, F.sum(is_new).over(run))
+
+    def index(rows: DataFrame, w: WindowSpec, real: Column) -> DataFrame:
+        prev = F.lag(F.col(ts)).over(w)
+        is_new = F.when(
+            real
+            & (prev.isNull() | ((epoch_us(F.col(ts)) - epoch_us(prev)) > F.lit(gap_us))),
+            F.lit(1),
+        ).otherwise(F.lit(0))
+        run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        return rows.withColumn(index_col, F.sum(is_new).over(run))
+
+    if chunk is None:
+        out = index(df, _entity_window(entity, ts, tiebreak), F.lit(True))
+    else:
+        out = carry_window(
+            df, entity, _order_cols(ts, tiebreak), chunk, 1, (), index, index_col,
+            chunk_total=F.max(index_col),
+        )
     return out.withColumn(
         session_col, F.concat_ws("#", F.col(entity).cast("string"), F.col(index_col))
     )

@@ -457,7 +457,11 @@ def knn_ivf(
     no iterations — fully replayable by a SQL oracle (the
     ``semantic_dedup`` pattern), with squared distances rounded to 6
     decimals before ranking so GEMM-computed and pairwise-computed
-    floats order identically across engines."""
+    floats order identically across engines.
+
+    Full probe (``n_probe >= n_cells``) overrides ``quantizer="kmeans"``
+    with ``"seed"`` and ignores ``fit_fraction``: the top-k table is
+    provably the same, but cell assignments are the seed quantizer's."""
     import numpy as np
 
     if n_probe >= n_cells and quantizer == "kmeans":

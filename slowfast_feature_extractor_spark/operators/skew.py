@@ -1,12 +1,15 @@
-"""Skew-robust trailing windows: range-partition-with-carry.
+"""Skew-robust entity-sequential operators: range-partition-with-carry.
 
 The plain window operators partition by entity, so ONE hot url (a
 million-revisit page at Common-Crawl scale) lands its whole history in
-ONE task — the open risk flagged in round 1. This operator splits every
-entity's timeline into time chunks (default: day — the same axis the
-Iceberg layout partitions on, SURVEY §4) and runs the trailing-window
-family per (entity, chunk) instead, so a hot entity parallelizes across
-its chunks.
+ONE task — the open risk flagged in round 1. Every entity-sequential
+operator therefore takes a ``chunk=`` expression (``sessionize``,
+``dual_rate_features``, ``asof_join``; ``featurize_pages`` and
+``pit_dual_rate_from`` take a ``chunk_trunc`` unit): each entity's
+timeline is split into time chunks (e.g. day — the same axis the
+Iceberg layout partitions on, SURVEY §4) and the window family runs per
+(entity, chunk) instead, so a hot entity parallelizes across its chunks.
+:func:`carry_window` is that pass, shared by the window operators.
 
 Correctness is restored by a *carry*: a ROWS frame of ≤ ``slow_rows``
 ending inside chunk k can reach back at most ``slow_rows`` rows, so it
@@ -17,21 +20,21 @@ Those carry rows are computed from per-chunk *tails* (the last
 pure whole-stage-codegen expressions (r7; the r6 pandas fold shipped
 every tail row through Python): the per-entity work is
 O(chunks² × slow_rows) array element ops over tails only, never the
-full history. Unbounded aggregates (``n_hist_rows``) come from a
-per-chunk prefix-count table (cumsum over the tiny
-(entity, chunk, count) relation).
+full history. Unbounded running counts (``n_hist_rows``, the session
+index) are shifted by a per-chunk prefix table (cumsum over the tiny
+(entity, chunk, total) relation).
 
-Equality with the single-partition operator is exact and tested
+Equality with the single-partition plan is exact and tested
 (tests/test_skew.py): same columns, same values, any chunking.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from collections.abc import Callable, Sequence
 
-from slowfast_feature_extractor_spark.operators.windows import emit_rate_aggs
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import functions as F
 
 
 def shuffle_partition_count(spark) -> int:
@@ -56,8 +59,7 @@ def chunk_carries(
     ``slow_rows`` rows that precede the chunk in the entity's timeline,
     re-labelled with the chunk they carry into. ``base`` must already
     hold a ``__chunk`` column monotone (per entity) in the order
-    columns. Shared by the chunked dual-rate operator and the chunked
-    flagship (plans/featurize.py).
+    columns. Feeds :func:`carry_window`.
 
     Pure JVM (r7): carry(chunk k) = the last ``slow_rows`` rows, by
     (chunk, order), among tail rows with chunk < k — tail rows outside
@@ -125,205 +127,96 @@ def chunk_carries(
     )
 
 
-def chunk_prefix_counts(base: DataFrame, entity: str) -> DataFrame:
-    """(entity, __chunk, __prefix) — rows strictly before each chunk,
-    from a cumsum over the tiny per-chunk count relation (feeds the
-    unbounded aggregates that a bounded carry cannot reconstruct)."""
-    counts = base.groupBy(entity, "__chunk").agg(F.count(F.lit(1)).alias("__cnt"))
+def chunk_prefix_counts(
+    rows: DataFrame, entity: str, per_chunk: Column | None = None
+) -> DataFrame:
+    """(entity, __chunk, __prefix) — the sum of ``per_chunk`` (default:
+    the row count) over the entity's strictly earlier chunks, from a
+    cumsum over the tiny per-chunk relation (feeds the unbounded running
+    counts that a bounded carry cannot reconstruct)."""
+    if per_chunk is None:
+        per_chunk = F.count(F.lit(1))
+    totals = rows.groupBy(entity, "__chunk").agg(per_chunk.alias("__cnt"))
     w_chunks = (
         Window.partitionBy(entity)
         .orderBy("__chunk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    return counts.select(
+    return totals.select(
         entity,
         "__chunk",
         F.coalesce(F.sum("__cnt").over(w_chunks), F.lit(0)).alias("__prefix"),
     )
 
 
-def sessionize_chunked(
+def carry_window(
     df: DataFrame,
-    entity: str = "url",
-    ts: str = "warc_ts",
-    gap_seconds: float = 30 * 24 * 3600.0,
-    session_col: str = "session_id",
-    index_col: str = "session_idx",
-    tiebreak: str | None = None,
-    chunk: Column | None = None,
+    entity: str,
+    order_cols: Sequence[str],
+    chunk: Column,
+    carry_rows: int,
+    measures: Sequence[str],
+    emit: Callable[[DataFrame, WindowSpec, Column], DataFrame],
+    running: str,
+    chunk_total: Column | None = None,
 ) -> DataFrame:
-    """Skew-robust gap sessionizer — value-exact vs
-    ``operators.sessionize.sessionize`` (parity-tested).
+    """Run a window family per (entity, chunk) — the ``chunk=`` arm of
+    every entity-sequential window operator. ``chunk`` must be
+    deterministic and monotone in the order columns per entity.
 
-    The plain sessionizer's lag+cumsum runs one entity in one task; a
-    hot url serializes. Here gap detection runs per (entity, time-chunk)
-    seeded with a ONE-row carry (the entity's last row before the
-    chunk), so the first row of every chunk sees its true global
-    predecessor; the 1-based session index is then
-    ``(# session starts in earlier chunks) + (local running count)``,
-    where the per-chunk start counts come from a tiny
-    (entity, chunk, starts) relation cumsum'd per entity — a session
-    spanning a chunk boundary contributes no start in the later chunk,
-    so the index carries over exactly. ``chunk`` must be monotone in
-    ``ts`` per entity (default ``to_date(ts)``)."""
-    from slowfast_feature_extractor_spark.functions.timeutil import epoch_us
+    ``emit(merged, w, real)`` attaches the family's columns over ``w``
+    (partitioned by (entity, chunk), ordered by ``order_cols``), the
+    same callable the operator's plain arm runs over the entity window.
+    ``merged`` is the input plus, ahead of each chunk's rows, copies of
+    the entity's last ``carry_rows`` rows before the chunk; carry rows
+    hold only ``entity``, ``order_cols`` and ``measures`` (the rest is
+    null) and are filtered out after the window, so no frame of the
+    family may reach back more than ``carry_rows`` rows. ``real`` is
+    true on input rows only, for counts and flags that must skip
+    carries.
 
-    gap_us = int(round(gap_seconds * 1_000_000))
-    chunk_expr = F.to_date(F.col(ts)) if chunk is None else chunk
-    order_cols = [ts] + ([tiebreak] if tiebreak else [])
-
-    # parity with the plain sessionizer's withColumn semantics: if the
-    # input already carries index/session columns (re-sessionizing with
-    # a different gap), REPLACE them — keeping them in the projection
-    # below would emit duplicate names and break the first downstream
-    # reference with AMBIGUOUS_REFERENCE
-    cols = [c for c in df.columns if c not in (index_col, session_col)]
-    base = df.drop(index_col, session_col).withColumn("__chunk", chunk_expr)
-    carries = chunk_carries(base, entity, order_cols, slow_rows=1)
-
-    merged = base.withColumn("__carry", F.lit(0)).unionByName(
-        carries.withColumn("__carry", F.lit(1))
+    ``running`` is a chunk-local running count the family emits; it is
+    shifted by the total of the entity's earlier chunks: their row
+    counts, or ``chunk_total`` aggregated over each chunk's output rows
+    (that output is persisted, since it then feeds two consumers)."""
+    base = df.withColumn("__chunk", chunk)
+    carries = chunk_carries(
+        base.select(entity, *order_cols, *measures, "__chunk"),
+        entity, list(order_cols), carry_rows,
     )
-    # pin the window's partition count (AQE advisory-size coalescing
-    # collapses byte-tiny (entity, chunk) shuffles — see the chunked
-    # window operators above)
-    n_part = shuffle_partition_count(df.sparkSession)
-    merged = merged.repartition(n_part, entity, "__chunk")
-
+    # carry rows sort first in their chunk: they come from strictly
+    # earlier chunks, hence earlier order keys
+    merged = base.withColumn("__carry", F.lit(0)).unionByName(
+        carries.withColumn("__carry", F.lit(1)), allowMissingColumns=True
+    )
+    # pin the window's partition count: the (entity, chunk) shuffle is
+    # tiny in BYTES, so AQE's advisory-size coalescing collapses it to a
+    # handful of partitions and serializes the window stage (measured:
+    # 139 day-chunks ran on 5 partitions, 8.8s vs 2.6s); an
+    # explicit-count repartition is exempt from AQE coalesce and already
+    # satisfies the window's clustering requirement
+    merged = merged.repartition(
+        shuffle_partition_count(df.sparkSession), entity, "__chunk"
+    )
     w = Window.partitionBy(entity, "__chunk").orderBy(
         *[F.col(c).asc() for c in order_cols]
     )
-    prev = F.lag(F.col(ts)).over(w)
-    is_new = F.when(
-        (F.col("__carry") == 0)
-        & (prev.isNull() | ((epoch_us(F.col(ts)) - epoch_us(prev)) > F.lit(gap_us))),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = merged.withColumn("__local_idx", F.sum(is_new).over(run)).filter(
-        F.col("__carry") == 0
-    )
-    # TWO consumers (the output rows and the per-chunk session-start
-    # prefix): without a persist the starts branch re-executes the whole
-    # scan→tails→fold→union→window chain — the projections differ, so
-    # Catalyst plans twin subtrees and ReusedExchange never fires
-    # (measured: the twin 48-task map stages were the top-2 stages of
-    # the sf1.0 profile, ~250 s of the 287 s total executor time)
-    local = local.persist(StorageLevel.MEMORY_AND_DISK)
-
-    starts = local.groupBy(entity, "__chunk").agg(
-        F.max("__local_idx").alias("__starts")
-    )
-    w_chunks = (
-        Window.partitionBy(entity)
-        .orderBy("__chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = starts.select(
-        entity,
-        "__chunk",
-        F.coalesce(F.sum("__starts").over(w_chunks), F.lit(0)).alias("__prefix"),
-    )
-    out = (
-        local.join(prefix, [entity, "__chunk"], "left")
-        .withColumn(
-            index_col, F.coalesce(F.col("__prefix"), F.lit(0)) + F.col("__local_idx")
-        )
-        .withColumn(
-            session_col,
-            F.concat_ws("#", F.col(entity).cast("string"), F.col(index_col)),
-        )
-    )
-    return out.select(*cols, index_col, session_col)
-
-
-def dual_rate_features_chunked(
-    df: DataFrame,
-    entity: str = "url",
-    ts: str = "warc_ts",
-    measure: str = "value",
-    fast_rows: int = 8,
-    slow_rows: int = 64,
-    strict: bool = True,
-    tiebreak: str | None = None,
-    chunk: Column | None = None,
-    round_to: int | None = None,
-    prefix_fast: str = "fast",
-    prefix_slow: str = "slow",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Skew-robust equivalent of ``windows.dual_rate_features``.
-
-    ``carry_cols`` are extra input columns carried verbatim through the
-    window pass into the output (inert in every aggregate/order) — they
-    let a composition filter/annotate the feature rows directly instead
-    of joining the source back in on the row key.
-
-    Returns a slim feature table keyed by (entity, ts[, tiebreak]) with
-    the same aggregate columns ({fast,slow}_{avg,sum,min,max,cnt},
-    n_hist_rows, max_input_ts) — exactly equal to the single-partition
-    operator's values. ``chunk`` defaults to ``to_date(ts)``; any
-    deterministic, per-entity-monotone-in-ts expression works. Size
-    chunks so rows-per-chunk >> ``slow_rows``: each chunk pays a
-    ≤ ``slow_rows``-row carry, so day chunks on a million-revisit url
-    are ideal while SPARSE entities want coarser chunks (or the plain
-    operator — chunking buys nothing when one entity fits one task).
-
-    Requires ``fast_rows <= slow_rows`` (the carry holds ``slow_rows``
-    rows, which bounds every frame).
-    """
-    if fast_rows > slow_rows:
-        raise ValueError("fast_rows must be <= slow_rows (carry bound)")
-    end = -1 if strict else 0
-    chunk_expr = F.to_date(F.col(ts)) if chunk is None else chunk
-    order_cols = [ts] + ([tiebreak] if tiebreak else [])
-
-    keep = [entity, *order_cols, measure, *carry_cols]
-    base = df.select(*keep).withColumn("__chunk", chunk_expr)
-
-    carries = chunk_carries(base, entity, order_cols, slow_rows)
-    prefix = chunk_prefix_counts(base, entity)
-
-    # --- merged window pass over (entity, chunk): carry rows sort first
-    # (they come from strictly earlier chunks, hence earlier ts)
-    merged = base.withColumn("__carry", F.lit(0)).unionByName(
-        carries.withColumn("__carry", F.lit(1))
-    )
-    # pin the window's partition count (same AQE advisory-size pitfall
-    # as the carry fold above: a byte-tiny (entity, chunk) shuffle
-    # coalesces to a handful of partitions and serializes the window
-    # stage); explicit-count repartition is exempt and satisfies the
-    # window's clustering requirement
-    n_part = shuffle_partition_count(df.sparkSession)
-    merged = merged.repartition(n_part, entity, "__chunk")
-    w = Window.partitionBy(entity, "__chunk").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    out = emit_rate_aggs(
-        merged, w, measure, end,
-        ((prefix_fast, fast_rows), (prefix_slow, slow_rows)), round_to,
-    )
-    hist = w.rowsBetween(Window.unboundedPreceding, end)
-    out = (
-        out.withColumn(
-            "__local_hist",
-            F.count(F.when(F.col("__carry") == 0, F.lit(1))).over(hist),
-        )
-        .withColumn("max_input_ts", F.max(F.col(ts)).over(hist))
-        .filter(F.col("__carry") == 0)
-    )
-    # join the tiny prefix relation on the window's own partition keys —
-    # the big side keeps its partitioning (no extra exchange)
-    out = out.join(prefix, [entity, "__chunk"], "left").withColumn(
-        "n_hist_rows", F.coalesce(F.col("__prefix"), F.lit(0)) + F.col("__local_hist")
-    )
-    return out.select(
-        entity,
-        *order_cols,
-        measure,
-        *carry_cols,
-        *[f"{p}_{a}" for p in (prefix_fast, prefix_slow)
-          for a in ("avg", "sum", "min", "max", "cnt")],
-        "n_hist_rows",
-        "max_input_ts",
+    out = emit(merged, w, F.col("__carry") == 0).filter(F.col("__carry") == 0)
+    if chunk_total is None:
+        prefix = chunk_prefix_counts(base, entity)
+    else:
+        # without a persist the totals branch re-executes the whole
+        # scan→tails→carries→union→window chain — the projections
+        # differ, so Catalyst plans twin subtrees and ReusedExchange
+        # never fires (measured: the twin map stages were the top-2
+        # stages of the sf1.0 sessionize profile, ~250 s of 287 s)
+        out = out.persist(StorageLevel.MEMORY_AND_DISK)
+        prefix = chunk_prefix_counts(out, entity, chunk_total)
+    # the tiny prefix relation joins on the window's own partition keys
+    # — the big side keeps its partitioning (no extra exchange)
+    cols = [c for c in out.columns if c not in ("__chunk", "__carry")]
+    return (
+        out.join(prefix, [entity, "__chunk"], "left")
+        .withColumn(running, F.coalesce(F.col("__prefix"), F.lit(0)) + F.col(running))
+        .select(*cols)
     )

@@ -24,8 +24,15 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+
+from slowfast_feature_extractor_spark.operators.skew import carry_window
+
+
+def _order_cols(ts: str, tiebreak: Sequence[str] | str | None) -> list[str]:
+    tb = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or ())
+    return [ts, *tb]
 
 
 def _entity_window(
@@ -36,39 +43,9 @@ def _entity_window(
     when (entity, ts) is not unique; without it, callers must guarantee
     unique (entity, ts) — the natural key of a crawl-snapshot table."""
     keys = [entity] if isinstance(entity, str) else list(entity)
-    order = [F.col(ts).asc()]
-    if tiebreak is not None:
-        tb = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak)
-        order += [F.col(c).asc() for c in tb]
-    return Window.partitionBy(*keys).orderBy(*order)
-
-
-def emit_rate_aggs(
-    out: DataFrame,
-    w,
-    measure: str,
-    end: int,
-    rates: Sequence[tuple[str, int]],
-    round_to: int | None = None,
-) -> DataFrame:
-    """Attach the {prefix}_{avg,sum,min,max,cnt} aggregate family for
-    each (prefix, frame_rows) over the given window spec — the single
-    source of truth shared by the plain and the chunked (skew-robust)
-    operators, whose exact column/value parity is contract-tested."""
-    m = F.col(measure)
-    for p, k in rates:
-        frame = w.rowsBetween(end - (k - 1), end)
-        avg, s = F.avg(m).over(frame), F.sum(m).over(frame)
-        if round_to is not None:
-            avg, s = F.round(avg, round_to), F.round(s, round_to)
-        out = (
-            out.withColumn(f"{p}_avg", avg)
-            .withColumn(f"{p}_sum", s)
-            .withColumn(f"{p}_min", F.min(m).over(frame))
-            .withColumn(f"{p}_max", F.max(m).over(frame))
-            .withColumn(f"{p}_cnt", F.count(m).over(frame))
-        )
-    return out
+    return Window.partitionBy(*keys).orderBy(
+        *[F.col(c).asc() for c in _order_cols(ts, tiebreak)]
+    )
 
 
 def dual_rate_features(
@@ -83,6 +60,7 @@ def dual_rate_features(
     prefix_slow: str = "slow",
     round_to: int | None = None,
     tiebreak: Sequence[str] | str | None = None,
+    chunk: Column | None = None,
 ) -> DataFrame:
     """Attach fast (fine) + slow (coarse) trailing-window aggregates of
     ``measure`` to every row, plus leakage-audit columns.
@@ -95,18 +73,48 @@ def dual_rate_features(
     ``n_hist_rows`` (total strictly-earlier rows for the entity) and
     ``max_input_ts`` (latest contributing timestamp — the leakage bound;
     the audit asserts max_input_ts < ts everywhere when strict).
+
+    ``chunk``: optional expression monotone in ``ts`` per entity (e.g.
+    ``F.to_date(F.col("ts"))``) enabling the skew-robust plan
+    (operators/skew.py): the family runs per (entity, chunk), each chunk
+    seeded with the ``slow_rows`` rows before it, and ``n_hist_rows``
+    adds the row counts of earlier chunks. Same columns and values as
+    the plain plan; requires ``fast_rows <= slow_rows`` (the carry bound).
+    Size chunks so rows-per-chunk >> ``slow_rows``: each chunk pays a
+    ≤ ``slow_rows``-row carry, so day chunks on a million-revisit url are
+    ideal while SPARSE entities want coarser chunks (or the plain plan —
+    chunking buys nothing when one entity fits one task).
     """
     end = -1 if strict else 0
-    w = _entity_window(entity, ts, tiebreak)
-    out = emit_rate_aggs(
-        df, w, measure, end,
-        ((prefix_fast, fast_rows), (prefix_slow, slow_rows)), round_to,
+    m = F.col(measure)
+
+    def family(rows: DataFrame, w: WindowSpec, real: Column) -> DataFrame:
+        out = rows
+        for p, k in ((prefix_fast, fast_rows), (prefix_slow, slow_rows)):
+            frame = w.rowsBetween(end - (k - 1), end)
+            avg, s = F.avg(m).over(frame), F.sum(m).over(frame)
+            if round_to is not None:
+                avg, s = F.round(avg, round_to), F.round(s, round_to)
+            out = (
+                out.withColumn(f"{p}_avg", avg)
+                .withColumn(f"{p}_sum", s)
+                .withColumn(f"{p}_min", F.min(m).over(frame))
+                .withColumn(f"{p}_max", F.max(m).over(frame))
+                .withColumn(f"{p}_cnt", F.count(m).over(frame))
+            )
+        hist = w.rowsBetween(Window.unboundedPreceding, end)
+        return out.withColumn(
+            "n_hist_rows", F.count(F.when(real, F.lit(1))).over(hist)
+        ).withColumn("max_input_ts", F.max(F.col(ts)).over(hist))
+
+    if chunk is None:
+        return family(df, _entity_window(entity, ts, tiebreak), F.lit(True))
+    if fast_rows > slow_rows:
+        raise ValueError("fast_rows must be <= slow_rows (carry bound)")
+    return carry_window(
+        df, entity, _order_cols(ts, tiebreak), chunk, slow_rows, [measure],
+        family, "n_hist_rows",
     )
-    hist = w.rowsBetween(Window.unboundedPreceding, end)
-    out = out.withColumn("n_hist_rows", F.count(F.lit(1)).over(hist)).withColumn(
-        "max_input_ts", F.max(F.col(ts)).over(hist)
-    )
-    return out
 
 
 def windowed_vector(

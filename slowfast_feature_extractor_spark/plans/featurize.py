@@ -23,20 +23,18 @@ break the time ordering within an entity).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from slowfast_feature_extractor_spark.functions.extraction import extract_text_udf
 from slowfast_feature_extractor_spark.functions.vector import resample_udf
 from slowfast_feature_extractor_spark.operators.asof_join import asof_join
-from slowfast_feature_extractor_spark.operators.sessionize import sessionize  # noqa: F401
-from slowfast_feature_extractor_spark.operators.skew import (
-    chunk_carries,
-    chunk_prefix_counts,
-    shuffle_partition_count,
-)
+from slowfast_feature_extractor_spark.operators.sessionize import sessionize
+from slowfast_feature_extractor_spark.operators.skew import carry_window
 from slowfast_feature_extractor_spark.operators.windows import dual_rate_features
 
+# no finer than featurize_pages' day anchors (see _windowed)
 _CHUNK_TRUNCS = ("day", "week", "month", "year")
 
 
@@ -219,6 +217,22 @@ def auto_chunk_decision(
     return _EAGER_DECISION_CACHE[key]
 
 
+def _resolve_chunk_trunc(
+    chunk_trunc: str | None, df: DataFrame, entity: str, threshold: int, hot: str
+) -> str | None:
+    """``chunk_trunc`` as a trunc unit or None (the plain plan):
+    ``"auto"`` becomes ``hot`` when :func:`auto_chunk_decision` finds an
+    entity with at least ``threshold`` rows, else None."""
+    if chunk_trunc == "auto":
+        return hot if auto_chunk_decision(df, entity, threshold) else None
+    if chunk_trunc is not None and chunk_trunc not in _CHUNK_TRUNCS:
+        raise ValueError(
+            f"chunk_trunc must be None, 'auto' or one of {_CHUNK_TRUNCS}, "
+            f"got {chunk_trunc!r}"
+        )
+    return chunk_trunc
+
+
 def salted_buckets(
     df: DataFrame, key: str = "url", buckets: int = 32, salt: int = 0, col: str = "bucket"
 ) -> DataFrame:
@@ -297,21 +311,18 @@ def featurize_pages(
     # (reference/just_test_v1.py:544-583). Chunked path: the same family
     # over (url, time-chunk) partitions with a ≤ slow_rows-row carry.
     order = ["warc_ts"] + ([tiebreak] if tiebreak else [])
-    if chunk_trunc == "auto":
-        chunk_trunc = auto_chunk_decision(pages, "url", auto_chunk_threshold)
+    chunk_trunc = _resolve_chunk_trunc(
+        chunk_trunc, pages, "url", auto_chunk_threshold, "day"
+    )
     if chunk_trunc is not None:
         # the chunked path branches df three ways (carry extraction,
         # prefix counts, merged window pass); persist the thin post-UDF
         # projection so the extraction UDF honours the Stage-1
         # evaluated-EXACTLY-once invariant instead of re-running per
-        # branch (pit_dual_rate_chunked_from does the same for its
-        # sessionized stream)
-        from pyspark import StorageLevel
-
+        # branch (pit_dual_rate_from does the same for its sessionized
+        # stream)
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        windowed = _windowed_chunked(df, order, fast_rows, slow_rows, chunk_trunc)
-    else:
-        windowed = _windowed_plain(df, order, fast_rows, slow_rows)
+    windowed = _windowed(df, order, fast_rows, slow_rows, chunk_trunc)
     out = windowed.withColumn(
         "fast_vec", resample_udf(fast_len)(F.col("__fast_raw"))
     ).withColumn("slow_vec", resample_udf(slow_len)(F.col("__slow_raw")))
@@ -327,50 +338,16 @@ def featurize_pages(
     )
 
 
-def _windowed_plain(
-    df: DataFrame, order: list[str], fast_rows: int, slow_rows: int
-) -> DataFrame:
-    w = Window.partitionBy("url").orderBy(*order)
-    fast_frame = w.rowsBetween(-fast_rows, -1)
-    slow_frame = w.rowsBetween(-slow_rows, -1)
-    hist_frame = w.rowsBetween(Window.unboundedPreceding, -1)
-    carry_frame = w.rowsBetween(Window.unboundedPreceding, 0)
-
-    day = F.to_date("warc_ts")
-    is_anchor = F.lag(day).over(w).isNull() | (F.lag(day).over(w) != day)
-
-    # All window families in ONE pass over one Exchange+Sort; the slow
-    # pathway list is masked to anchors (the reference's sparse sampling,
-    # reference/test_net.py:69-74) and the as-of fusion is the running
-    # last(ignorenulls) carry-forward of that raw list — J4 collapsed
-    # into W2/W3's partition, zero extra shuffle (the general two-table
-    # case uses operators.asof_join). Consecutive Window nodes preserve
-    # partitioning+ordering, so no UDF may appear between them: both
-    # resample UDFs run once, at the tail, after every window.
-    return (
-        df.withColumn("__fast_raw", F.collect_list("measure").over(fast_frame))
-        .withColumn(
-            "__slow_at_anchor",
-            F.when(is_anchor, F.collect_list("measure").over(slow_frame)),
-        )
-        .withColumn("n_hist_rows", F.count(F.lit(1)).over(hist_frame))
-        .withColumn("max_input_ts", F.max("warc_ts").over(hist_frame))
-        .withColumn(
-            "__slow_raw", F.last("__slow_at_anchor", ignorenulls=True).over(carry_frame)
-        )
-    )
-
-
-def _windowed_chunked(
+def _windowed(
     df: DataFrame,
     order: list[str],
     fast_rows: int,
     slow_rows: int,
-    chunk_trunc: str,
+    chunk_trunc: str | None,
 ) -> DataFrame:
-    """The flagship window family over (url, time-chunk) partitions —
-    range-partition-with-carry (operators/skew.py), exactly equal to
-    :func:`_windowed_plain`.
+    """The flagship window family over url partitions, or with
+    ``chunk_trunc`` over (url, time-chunk) partitions —
+    range-partition-with-carry (operators/skew.py), exactly equal.
 
     Why exactness holds with day-or-coarser chunks:
 
@@ -388,62 +365,48 @@ def _windowed_chunked(
       (a bounded carry can't count unbounded history) — supplied by the
       cumsum over the per-chunk count relation.
     """
+
+    def family(rows: DataFrame, w: WindowSpec, real: Column) -> DataFrame:
+        fast_frame = w.rowsBetween(-fast_rows, -1)
+        slow_frame = w.rowsBetween(-slow_rows, -1)
+        hist_frame = w.rowsBetween(Window.unboundedPreceding, -1)
+        carry_frame = w.rowsBetween(Window.unboundedPreceding, 0)
+
+        day = F.to_date("warc_ts")
+        is_anchor = F.lag(day).over(w).isNull() | (F.lag(day).over(w) != day)
+
+        # All window families in ONE pass over one Exchange+Sort; the
+        # slow pathway list is masked to anchors (the reference's sparse
+        # sampling, reference/test_net.py:69-74) and the as-of fusion is
+        # the running last(ignorenulls) carry-forward of that raw list —
+        # J4 collapsed into W2/W3's partition, zero extra shuffle (the
+        # general two-table case uses operators.asof_join). Consecutive
+        # Window nodes preserve partitioning+ordering, so no UDF may
+        # appear between them: both resample UDFs run once, at the tail,
+        # after every window.
+        return (
+            rows.withColumn("__fast_raw", F.collect_list("measure").over(fast_frame))
+            .withColumn(
+                "__slow_at_anchor",
+                F.when(is_anchor, F.collect_list("measure").over(slow_frame)),
+            )
+            .withColumn(
+                "n_hist_rows", F.count(F.when(real, F.lit(1))).over(hist_frame)
+            )
+            .withColumn("max_input_ts", F.max("warc_ts").over(hist_frame))
+            .withColumn(
+                "__slow_raw",
+                F.last("__slow_at_anchor", ignorenulls=True).over(carry_frame),
+            )
+        )
+
+    if chunk_trunc is None:
+        return family(df, Window.partitionBy("url").orderBy(*order), F.lit(True))
     if fast_rows > slow_rows:
         raise ValueError("fast_rows must be <= slow_rows (carry bound)")
-    if chunk_trunc not in _CHUNK_TRUNCS:
-        raise ValueError(
-            f"chunk_trunc must be one of {_CHUNK_TRUNCS} (no finer than the "
-            f"day anchors), got {chunk_trunc!r}"
-        )
-    base = df.withColumn("__chunk", F.date_trunc(chunk_trunc, F.col("warc_ts")))
-    carries = chunk_carries(base, "url", order, slow_rows)
-    prefix = chunk_prefix_counts(base, "url")
-
-    merged = base.withColumn("__carry", F.lit(0)).unionByName(
-        carries.withColumn("__carry", F.lit(1))
-    )
-    # pin the window's partition count: the (url, chunk) shuffle is tiny
-    # in BYTES, so AQE's advisory-size coalescing collapses it to a
-    # handful of partitions and serializes the window + resample-UDF
-    # stage (measured: 139 day-chunks ran on 5 partitions, 8.8s vs 2.6s);
-    # an explicit-count repartition is exempt from AQE coalesce and
-    # already satisfies the window's clustering requirement
-    n_part = shuffle_partition_count(df.sparkSession)
-    merged = merged.repartition(n_part, "url", "__chunk")
-    w = Window.partitionBy("url", "__chunk").orderBy(*[F.col(c).asc() for c in order])
-    fast_frame = w.rowsBetween(-fast_rows, -1)
-    slow_frame = w.rowsBetween(-slow_rows, -1)
-    hist_frame = w.rowsBetween(Window.unboundedPreceding, -1)
-    carry_frame = w.rowsBetween(Window.unboundedPreceding, 0)
-
-    day = F.to_date("warc_ts")
-    is_anchor = F.lag(day).over(w).isNull() | (F.lag(day).over(w) != day)
-
-    windowed = (
-        merged.withColumn("__fast_raw", F.collect_list("measure").over(fast_frame))
-        .withColumn(
-            "__slow_at_anchor",
-            F.when(is_anchor, F.collect_list("measure").over(slow_frame)),
-        )
-        .withColumn(
-            "__local_hist",
-            F.count(F.when(F.col("__carry") == 0, F.lit(1))).over(hist_frame),
-        )
-        .withColumn("max_input_ts", F.max("warc_ts").over(hist_frame))
-        .withColumn(
-            "__slow_raw", F.last("__slow_at_anchor", ignorenulls=True).over(carry_frame)
-        )
-        .filter(F.col("__carry") == 0)
-    )
-    # tiny per-chunk relation joined on the window's own partition keys —
-    # the big side keeps its partitioning (no extra exchange)
-    return (
-        windowed.join(prefix, ["url", "__chunk"], "left")
-        .withColumn(
-            "n_hist_rows",
-            F.coalesce(F.col("__prefix"), F.lit(0)) + F.col("__local_hist"),
-        )
-        .drop("__chunk", "__carry", "__local_hist", "__prefix")
+    return carry_window(
+        df, "url", order, F.date_trunc(chunk_trunc, F.col("warc_ts")),
+        slow_rows, ["measure"], family, "n_hist_rows",
     )
 
 
@@ -509,160 +472,52 @@ def pit_dual_rate_events(
     return pit_dual_rate_from(ev, fast_rows, slow_rows, session_gap_s)
 
 
-def pit_dual_rate_chunked_from(
-    ev: DataFrame,
-    fast_rows: int = 8,
-    slow_rows: int = 64,
-    session_gap_s: float = 1800.0,
-    chunk_trunc: str = "month",
-) -> DataFrame:
-    """Fully skew-robust composition of the flagship events query: every
-    entity-sequential stage runs per (user, time-chunk) with a carry —
-    gap sessionization (``skew.sessionize_chunked``), both dual-rate
-    window families (``skew.dual_rate_features_chunked``), and the as-of
-    fusion (``asof_join(chunk=)``). Value-EXACT vs
-    :func:`pit_dual_rate_from` (each stage is parity-tested and the
-    composition is driver-checked against the SAME oracle), so a
-    million-event user parallelizes across its chunks at every stage
-    instead of serializing the pipeline through one task."""
-    from pyspark.sql import functions as _F
-
-    from slowfast_feature_extractor_spark.operators.skew import (
-        dual_rate_features_chunked,
-        sessionize_chunked,
-    )
-
-    chunk = _F.date_trunc(chunk_trunc, _F.col("ts"))
-    ev = sessionize_chunked(
-        ev, entity="user_id", ts="ts", gap_seconds=session_gap_s,
-        tiebreak="event_id", chunk=chunk,
-    )
-    # three branches (feature windows, view windows, click projection)
-    # read the sessionized stream; persist it so the chunked
-    # sessionizer's carry fold runs once, not per branch (columnar
-    # batches, spills past memory)
-    from pyspark import StorageLevel
-
-    ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # event_type/session_idx ride through the window pass (inert carry
-    # columns), so the click rows are a FILTER on the feature table —
-    # the r6 plan re-read the persisted stream a third time and paid a
-    # 1M-row equi-join on (user, ts, event_id) just to re-attach
-    # session_idx to its own rows
-    feats = dual_rate_features_chunked(
-        ev, entity="user_id", ts="ts", measure="value_cents",
-        fast_rows=fast_rows, slow_rows=slow_rows, strict=True,
-        tiebreak="event_id", chunk=chunk,
-        carry_cols=("event_type", "session_idx"),
-    )
-
-    views = ev.filter(F.col("event_type") == "view")
-    view_feats = dual_rate_features_chunked(
-        views, entity="user_id", ts="ts", measure="value_cents",
-        fast_rows=1, slow_rows=slow_rows, strict=True,
-        tiebreak="event_id", chunk=chunk,
-        prefix_slow="slow_view",
-    ).select(
-        "user_id", "ts",
-        F.col("slow_view_avg"), F.col("slow_view_cnt"),
-    )
-
-    clicks = (
-        feats.filter(F.col("event_type") == "click")
-        .select(
-            "user_id", "ts", "event_id", "session_idx",
-            F.round("fast_avg", 6).alias("fast_avg"),
-            F.col("fast_cnt"),
-            F.round("slow_avg", 6).alias("slow_avg"),
-            F.col("slow_cnt"),
-        )
-    )
-    out = asof_join(
-        clicks,
-        view_feats,
-        on="ts",
-        by=("user_id",),
-        right_cols=["slow_view_avg", "slow_view_cnt"],
-        allow_exact_matches=True,
-        matched_ts_col="view_ts",
-        chunk=_F.date_trunc(chunk_trunc, _F.col("ts")),
-    )
-    return out.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "session_idx",
-        "fast_avg",
-        "fast_cnt",
-        "slow_avg",
-        "slow_cnt",
-        "view_ts",
-        F.round("slow_view_avg", 6).alias("slow_view_avg"),
-        "slow_view_cnt",
-    )
-
-
-def pit_dual_rate_auto(
-    ev: DataFrame,
-    fast_rows: int = 8,
-    slow_rows: int = 64,
-    session_gap_s: float = 1800.0,
-    chunk_threshold: int = 50_000,
-    chunk_trunc: str = "month",
-) -> DataFrame:
-    """The events flagship with the chunk-carry machinery engaged ONLY
-    when a hot entity actually exists (VERDICT r5 #2): the zero-job
-    :func:`auto_chunk_decision` sketch (parquet footers + a driver-side
-    row-group sample for bare scans) picks the plain plan on uniform
-    corpora — where forced chunking costs ~6× pure overhead — and the
-    fully chunked composition (:func:`pit_dual_rate_chunked_from`) when
-    some entity holds ≥ ``chunk_threshold`` rows and one task would
-    otherwise serialize that entity's whole history at every
-    entity-sequential stage. Both plans are value-exact vs the same
-    oracle; the decision is performance-only."""
-    decision = auto_chunk_decision(ev, "user_id", chunk_threshold)
-    if decision is not None:
-        return pit_dual_rate_chunked_from(
-            ev, fast_rows, slow_rows, session_gap_s, chunk_trunc=chunk_trunc
-        )
-    return pit_dual_rate_from(ev, fast_rows, slow_rows, session_gap_s)
-
-
 def pit_dual_rate_from(
     ev: DataFrame,
     fast_rows: int = 8,
     slow_rows: int = 64,
     session_gap_s: float = 1800.0,
+    chunk_trunc: str | None = None,
+    auto_chunk_threshold: int = 50_000,
 ) -> DataFrame:
     """Same plan over any events-shaped DataFrame
-    (event_id, ts, user_id, event_type, value_cents)."""
+    (event_id, ts, user_id, event_type, value_cents).
+
+    ``chunk_trunc`` (``"day" | "week" | "month" | "year"``) runs every
+    entity-sequential stage per (user, time-chunk) with a carry — gap
+    sessionization, both dual-rate window families and the as-of fusion
+    (``chunk=`` on each operator) — so a million-event user parallelizes
+    across its chunks instead of serializing the pipeline through one
+    task. ``"auto"`` (VERDICT r5 #2) picks month chunks only when the
+    zero-job :func:`auto_chunk_decision` sketch sees a user with at
+    least ``auto_chunk_threshold`` rows; on uniform corpora forced
+    chunking costs ~6× pure overhead. ``None`` is the plain plan. Every
+    setting is value-exact vs the same oracle.
+
+    A click matches the latest view by (ts, event_id): the view's
+    event_id leads the as-of payload, whose greatest value wins a tie."""
+    chunk_trunc = _resolve_chunk_trunc(
+        chunk_trunc, ev, "user_id", auto_chunk_threshold, "month"
+    )
+    chunk = None if chunk_trunc is None else F.date_trunc(chunk_trunc, F.col("ts"))
     ev = sessionize(ev, entity="user_id", ts="ts", gap_seconds=session_gap_s,
-                    tiebreak="event_id")
+                    tiebreak="event_id", chunk=chunk)
+    if chunk is not None:
+        # three branches (feature windows, view windows, click rows)
+        # read the sessionized stream; persist it so the chunked
+        # sessionizer's carry pass runs once, not per branch
+        ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
 
+    window_args = dict(entity="user_id", ts="ts", measure="value_cents",
+                       strict=True, tiebreak="event_id", chunk=chunk)
     fast = dual_rate_features(
-        ev,
-        entity="user_id",
-        ts="ts",
-        measure="value_cents",
-        fast_rows=fast_rows,
-        slow_rows=slow_rows,
-        strict=True,
-        tiebreak="event_id",
+        ev, fast_rows=fast_rows, slow_rows=slow_rows, **window_args
     )
-
-    views = ev.filter(F.col("event_type") == "view")
-    vw = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-slow_rows, -1)  # up to slow_rows strictly-earlier views
-    )
-    view_feats = views.select(
-        "user_id",
-        "ts",
-        F.avg("value_cents").over(vw).alias("slow_view_avg"),
-        F.count("value_cents").over(vw).alias("slow_view_cnt"),
-    )
+    # up to slow_rows strictly-earlier views
+    view_feats = dual_rate_features(
+        ev.filter(F.col("event_type") == "view"), fast_rows=1,
+        slow_rows=slow_rows, prefix_slow="slow_view", **window_args,
+    ).select("user_id", "ts", "event_id", "slow_view_avg", "slow_view_cnt")
 
     clicks = fast.filter(F.col("event_type") == "click").select(
         "user_id",
@@ -679,9 +534,10 @@ def pit_dual_rate_from(
         view_feats,
         on="ts",
         by=("user_id",),
-        right_cols=["slow_view_avg", "slow_view_cnt"],
+        right_cols=["event_id", "slow_view_avg", "slow_view_cnt"],
         allow_exact_matches=True,
         matched_ts_col="view_ts",
+        chunk=chunk,
     )
     return out.select(
         "user_id",

@@ -43,6 +43,7 @@ from slowfast_feature_extractor_spark.operators.windows import (
 from slowfast_feature_extractor_spark.plans.featurize import (
     featurize_pages,
     pit_dual_rate_events,
+    pit_dual_rate_from,
 )
 from slowfast_feature_extractor_spark.sources.tables import parallelize_scan
 
@@ -76,24 +77,18 @@ def q_pit_dual_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pit_dual_rate_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events flagship behind the zero-job skew chooser (VERDICT r5
-    #2): plain plan on uniform corpora, the fully-chunked composition
-    only when the hot-entity sketch crosses the threshold. Same oracle
-    as pit_dual_rate — both arms are value-exact."""
-    from slowfast_feature_extractor_spark.plans.featurize import pit_dual_rate_auto
-
-    return pit_dual_rate_auto(_ev(spark, sf_dir))
+    #2): plain plan on uniform corpora, every entity-sequential stage
+    chunked only when the hot-entity sketch crosses the threshold. Same
+    oracle as pit_dual_rate — both arms are value-exact."""
+    return pit_dual_rate_from(_ev(spark, sf_dir), chunk_trunc="auto")
 
 
 def q_pit_dual_rate_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events flagship with EVERY entity-sequential stage on the
     skew path — chunked sessionize + chunked dual-rate windows + chunked
-    as-of carry (plans/featurize.pit_dual_rate_chunked_from). Same
+    as-of carry (``pit_dual_rate_from(chunk_trunc="month")``). Same
     oracle as pit_dual_rate: the composition is value-exact."""
-    from slowfast_feature_extractor_spark.plans.featurize import (
-        pit_dual_rate_chunked_from,
-    )
-
-    return pit_dual_rate_chunked_from(_ev(spark, sf_dir))
+    return pit_dual_rate_from(_ev(spark, sf_dir), chunk_trunc="month")
 
 
 ORACLE_PIT_DUAL_RATE = f"""
@@ -297,17 +292,13 @@ WINDOW
 
 def q_window_dual_rate_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew path of W2/W3: range-partition-with-carry (operators/skew.py)
-    — hot entities split across day chunks, bounded tails carried —
+    — hot entities split across time chunks, bounded tails carried —
     checked against the SAME oracle as window_dual_rate (results are
     exactly equal by construction)."""
-    from slowfast_feature_extractor_spark.operators.skew import (
-        dual_rate_features_chunked,
-    )
-
     # month chunks: the fixture is SPARSE (~2 rows/user/day), so day
     # chunks would emit a 64-row carry per ~2-row chunk (the operator
     # targets dense hot entities where rows-per-chunk >> slow_rows)
-    out = dual_rate_features_chunked(
+    out = dual_rate_features(
         _ev(spark, sf_dir), entity="user_id", ts="ts", measure="value_cents",
         fast_rows=8, slow_rows=64, strict=True, round_to=6, tiebreak="event_id",
         chunk=F.to_date(F.date_trunc("month", F.col("ts"))),
@@ -417,11 +408,9 @@ FROM s
 def q_sessionize_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 with the hot-entity skew path: gap sessionization per
     (user, month-chunk) with a one-row carry + per-chunk session-start
-    prefix (operators/skew.sessionize_chunked) — value-exact vs the
-    plain sessionizer, same oracle."""
-    from slowfast_feature_extractor_spark.operators.skew import sessionize_chunked
-
-    out = sessionize_chunked(
+    prefix (``sessionize(chunk=)``) — value-exact vs the plain
+    sessionizer, same oracle."""
+    out = sessionize(
         _ev(spark, sf_dir), entity="user_id", ts="ts", gap_seconds=1800.0,
         tiebreak="event_id", chunk=F.date_trunc("month", F.col("ts")),
     )
@@ -8019,7 +8008,7 @@ def q_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 via Spark's NATIVE session windows: ``F.session_window(ts,
     '30 minutes')`` in a plain groupBy — the JVM built-in that the
     engine's other sessionizers complement (window-scan `sessionize`,
-    skew-chunked `sessionize_chunked`, stateful-streaming
+    skew-chunked `sessionize(chunk=)`, stateful-streaming
     `sessionize_streamed`). No Python anywhere; Spark merges
     overlapping windows in a post-shuffle sort pass per key.
 

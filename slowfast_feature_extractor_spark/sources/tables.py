@@ -162,7 +162,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         for name in TABLE_NAMES
     }
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

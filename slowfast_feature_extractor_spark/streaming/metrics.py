@@ -73,15 +73,3 @@ def late_drop_count(query) -> int:
         for op in _ops(p):
             total += int(op.get("numRowsDroppedByWatermark", 0) or 0)
     return total
-
-
-def state_metrics(query) -> dict[str, int]:
-    """Aggregate state-operator counters over recent progress:
-    late drops, total state rows (last batch), rows updated."""
-    out = {"late_dropped": 0, "rows_updated": 0, "state_rows": 0}
-    for p in query.recentProgress:
-        for op in _ops(p):
-            out["late_dropped"] += int(op.get("numRowsDroppedByWatermark", 0) or 0)
-            out["rows_updated"] += int(op.get("numRowsUpdated", 0) or 0)
-            out["state_rows"] = int(op.get("numRowsTotal", 0) or 0)
-    return out

@@ -101,6 +101,18 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert not any(5 in p for p in out)
 
 
+@pytest.mark.parametrize("dedup, banding", [
+    ("minhash_lsh_dedup", {"num_hashes": 8, "bands": 4}),
+    ("minhash_oph_dedup", {"num_perm": 8, "bands": 4}),
+])
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+def test_lsh_dedup_rejects_non_positive_threshold(docs, dedup, banding, threshold):
+    """Zero-overlap candidates reach verification with jaccard 0.0, so a
+    non-positive threshold would emit them: the shared verify refuses it."""
+    with pytest.raises(ValueError, match="threshold must be > 0"):
+        getattr(DD, dedup)(docs, threshold=threshold, **banding)
+
+
 def test_minhash_candidates_superset_check(docs):
     sigs = DD.minhash_signatures(docs)
     rows = {r["id"]: [r[f"mh{i}"] for i in range(8)] for r in sigs.collect()}

@@ -6,10 +6,15 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
+from conftest import SF_TINY
 from pyspark.sql import functions as F
 
+from slowfast_feature_extractor_spark.operators.sessionize import sessionize
 from slowfast_feature_extractor_spark.operators.windows import dual_rate_features
-from slowfast_feature_extractor_spark.plans.featurize import salted_buckets
+from slowfast_feature_extractor_spark.plans.featurize import (
+    pit_dual_rate_from,
+    salted_buckets,
+)
 
 
 @pytest.fixture(scope="module")
@@ -53,54 +58,61 @@ def test_salted_buckets_spread_hot_key(spark, skewed):
     assert n == 16
 
 
-def _canon_feats(df, entity):
-    cols = [entity, "ts", "event_id"] if "event_id" in df.columns else [entity, "warc_ts"]
-    rows = df.collect()
-    def key(r):
-        return tuple(str(r[c]) for c in cols)
-    out = {}
+_FEATS = (
+    "fast_avg", "fast_sum", "fast_min", "fast_max", "fast_cnt",
+    "slow_avg", "slow_sum", "slow_min", "slow_max", "slow_cnt",
+    "n_hist_rows", "max_input_ts",
+)
+
+
+def _chunk(unit, ts="ts"):
+    return None if unit is None else F.date_trunc(unit, F.col(ts))
+
+
+@pytest.fixture(scope="module")
+def events(spark):
+    return spark.read.parquet(f"{SF_TINY}/events.parquet").withColumn(
+        "value_cents", F.round(F.col("value") * 100).cast("long")
+    )
+
+
+def _bruteforce_dual_rate(rows, fast_rows, slow_rows):
+    """Strict trailing windows per user, ordered by (ts, event_id), by a
+    sequential scan — integer cents keep every sum and average exact."""
+    from collections import defaultdict
+
+    per_user = defaultdict(list)
     for r in rows:
-        out[key(r)] = tuple(
-            r[c] for c in (
-                "fast_avg", "fast_sum", "fast_min", "fast_max", "fast_cnt",
-                "slow_avg", "slow_sum", "slow_min", "slow_max", "slow_cnt",
-                "n_hist_rows", "max_input_ts",
-            )
-        )
+        per_user[r["user_id"]].append(r)
+    out = {}
+    for u, evs in per_user.items():
+        evs.sort(key=lambda r: (r["ts"], r["event_id"]))
+        vals = [r["value_cents"] for r in evs]
+        for i, r in enumerate(evs):
+            feats = []
+            for k in (fast_rows, slow_rows):
+                win = vals[max(0, i - k):i]
+                feats += ([sum(win) / len(win), sum(win), min(win), max(win)]
+                          if win else [None] * 4) + [len(win)]
+            feats += [i, evs[i - 1]["ts"] if i else None]
+            out[(u, r["ts"], r["event_id"])] = tuple(feats)
     return out
 
 
-def test_chunked_windows_equal_single_partition(spark):
-    """Range-partition-with-carry == plain entity-partitioned windows,
-    exactly, on real fixture data chunked by day."""
-    from pyspark.sql import functions as F
-
-    from slowfast_feature_extractor_spark.operators.skew import (
-        dual_rate_features_chunked,
+@pytest.mark.parametrize("unit", [None, "day", "month"])
+def test_chunked_windows_equal_single_partition(spark, events, unit):
+    """dual_rate_features, plain or range-partition-with-carry, equals a
+    sequential brute force exactly on real fixture data; the chunked plan
+    keeps every input column, like the plain one."""
+    out = dual_rate_features(
+        events, entity="user_id", ts="ts", measure="value_cents",
+        fast_rows=8, slow_rows=64, strict=True, tiebreak="event_id",
+        chunk=_chunk(unit),
     )
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "value_cents", F.round(F.col("value") * 100).cast("long")
-    )
-    want = _canon_feats(
-        dual_rate_features(
-            ev, entity="user_id", ts="ts", measure="value_cents",
-            fast_rows=8, slow_rows=64, strict=True, tiebreak="event_id",
-        ).select(
-            "user_id", "ts", "event_id",
-            "fast_avg", "fast_sum", "fast_min", "fast_max", "fast_cnt",
-            "slow_avg", "slow_sum", "slow_min", "slow_max", "slow_cnt",
-            "n_hist_rows", "max_input_ts",
-        ),
-        "user_id",
-    )
-    got = _canon_feats(
-        dual_rate_features_chunked(
-            ev, entity="user_id", ts="ts", measure="value_cents",
-            fast_rows=8, slow_rows=64, strict=True, tiebreak="event_id",
-        ),
-        "user_id",
-    )
+    assert out.columns == events.columns + list(_FEATS)
+    got = {(r["user_id"], r["ts"], r["event_id"]): tuple(r[c] for c in _FEATS)
+           for r in out.collect()}
+    want = _bruteforce_dual_rate(events.collect(), 8, 64)
     assert len(got) == len(want) > 0
     assert got == want
 
@@ -108,15 +120,9 @@ def test_chunked_windows_equal_single_partition(spark):
 def test_chunked_windows_split_hot_entity(spark, skewed):
     """The hot entity's window work runs partitioned by (entity, chunk):
     correctness holds and the plan partitions on the chunked key."""
-    from pyspark.sql import functions as F
-
-    from slowfast_feature_extractor_spark.operators.skew import (
-        dual_rate_features_chunked,
-    )
-
-    out = dual_rate_features_chunked(
+    out = dual_rate_features(
         skewed, entity="url", ts="warc_ts", measure="value",
-        fast_rows=8, slow_rows=64, strict=True,
+        fast_rows=8, slow_rows=64, strict=True, chunk=F.to_date("warc_ts"),
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "__chunk" in plan and "hashpartitioning(url" in plan
@@ -125,6 +131,12 @@ def test_chunked_windows_split_hot_entity(spark, skewed):
     last = hot.orderBy(F.col("warc_ts").desc()).limit(1).collect()[0]
     assert last["fast_avg"] == pytest.approx(sum(range(4991, 4999)) / 8)
     assert last["n_hist_rows"] == 4999
+
+
+def test_chunked_dual_rate_rejects_fast_above_slow(skewed):
+    """The carry holds slow_rows rows, which must bound every frame."""
+    with pytest.raises(ValueError, match="carry bound"):
+        dual_rate_features(skewed, fast_rows=9, slow_rows=8, chunk=F.to_date("warc_ts"))
 
 
 @pytest.mark.parametrize("exact", [True, False])
@@ -165,39 +177,40 @@ def test_chunked_asof_equals_unchunked(spark, exact):
     assert cross_day, "fixture has no cross-chunk matches; chunk test vacuous"
 
 
-@pytest.mark.parametrize("chunk_expr", [None, "month"])
-def test_sessionize_chunked_exact_parity(spark, chunk_expr):
-    """sessionize_chunked == sessionize on every row, any chunking —
-    including sessions that span chunk boundaries."""
-    from pyspark.sql import functions as F
+def _bruteforce_sessions(rows, gap_s):
+    from collections import defaultdict
 
-    from slowfast_feature_extractor_spark.operators.sessionize import sessionize
-    from slowfast_feature_extractor_spark.operators.skew import sessionize_chunked
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    chunk = None if chunk_expr is None else F.date_trunc(chunk_expr, F.col("ts"))
-    plain = sessionize(ev, entity="user_id", ts="ts", gap_seconds=1800.0,
-                       tiebreak="event_id")
-    chunked = sessionize_chunked(ev, entity="user_id", ts="ts", gap_seconds=1800.0,
-                                 tiebreak="event_id", chunk=chunk)
-    a = {(r["user_id"], r["event_id"]): (r["session_idx"], r["session_id"])
-         for r in plain.collect()}
-    b = {(r["user_id"], r["event_id"]): (r["session_idx"], r["session_id"])
-         for r in chunked.collect()}
-    assert a == b
-    assert set(chunked.columns) == set(plain.columns)
+    per_user = defaultdict(list)
+    for r in rows:
+        per_user[r["user_id"]].append(r)
+    out = {}
+    for u, evs in per_user.items():
+        evs.sort(key=lambda r: (r["ts"], r["event_id"]))
+        idx = 0
+        for i, r in enumerate(evs):
+            if i == 0 or (r["ts"] - evs[i - 1]["ts"]).total_seconds() > gap_s:
+                idx += 1
+            out[(u, r["event_id"])] = (idx, f"{u}#{idx}")
+    return out
 
 
-def test_sessionize_chunked_boundary_session():
+@pytest.mark.parametrize("chunk_expr", [None, "day", "month"])
+def test_sessionize_chunked_exact_parity(spark, events, chunk_expr):
+    """sessionize, plain or chunked, equals a sequential brute force on
+    every row — including sessions that span chunk boundaries."""
+    out = sessionize(events, entity="user_id", ts="ts", gap_seconds=1800.0,
+                     tiebreak="event_id", chunk=_chunk(chunk_expr))
+    got = {(r["user_id"], r["event_id"]): (r["session_idx"], r["session_id"])
+           for r in out.collect()}
+    assert got == _bruteforce_sessions(events.collect(), 1800.0)
+    assert out.columns == events.columns + ["session_idx", "session_id"]
+
+
+def test_sessionize_chunked_boundary_session(spark):
     """Crafted case: one session straddles a day-chunk boundary (gap
     below threshold across midnight) — the index must NOT restart."""
     import pandas as pd
 
-    from slowfast_feature_extractor_spark.operators.sessionize import sessionize
-    from slowfast_feature_extractor_spark.operators.skew import sessionize_chunked
-    from slowfast_feature_extractor_spark.session import get_spark
-
-    spark = get_spark(cpus=4, shuffle_partitions=8)
     rows = [
         ("u1", "2024-01-01 23:50:00", 1),
         ("u1", "2024-01-02 00:05:00", 2),  # 15 min gap, crosses midnight
@@ -206,70 +219,80 @@ def test_sessionize_chunked_boundary_session():
     ]
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["user_id", "ts", "event_id"])
-    ).withColumn("ts", __import__("pyspark.sql.functions", fromlist=["col"]).col("ts").cast("timestamp"))
-    plain = {r["event_id"]: r["session_idx"] for r in sessionize(
-        df, entity="user_id", ts="ts", gap_seconds=1800.0, tiebreak="event_id").collect()}
-    chunked = {r["event_id"]: r["session_idx"] for r in sessionize_chunked(
-        df, entity="user_id", ts="ts", gap_seconds=1800.0, tiebreak="event_id").collect()}
-    assert plain == chunked
-    assert chunked[1] == chunked[2] == 1  # midnight-straddling session intact
-    assert chunked[3] == 2
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    for unit in (None, "day", "month"):
+        got = {r["event_id"]: r["session_idx"] for r in sessionize(
+            df, entity="user_id", ts="ts", gap_seconds=1800.0,
+            tiebreak="event_id", chunk=_chunk(unit)).collect()}
+        # midnight-straddling session intact; u2 numbers its own sessions
+        assert got == {1: 1, 2: 1, 3: 2, 4: 1}, unit
 
 
-def test_pit_flagship_fully_chunked_parity(spark):
-    """The composed skew-path flagship (chunked sessionize + chunked
-    dual-rate windows + chunked as-of) equals the plain pipeline
-    row-for-row."""
-    from pyspark.sql import functions as F
-
-    from slowfast_feature_extractor_spark.plans.featurize import (
-        pit_dual_rate_chunked_from,
-        pit_dual_rate_from,
+def _pit_matches_oracle(spark, fn):
+    from slowfast_feature_extractor_spark.plans.compare import compare
+    from slowfast_feature_extractor_spark.plans.queries import (
+        ORACLE_PIT_DUAL_RATE,
+        _ev,
     )
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "value_cents", F.round(F.col("value") * 100).cast("long")
-    )
-    key = ["user_id", "ts", "event_id"]
-    a = pit_dual_rate_from(ev).sort(*key).collect()
-    b = pit_dual_rate_chunked_from(ev).sort(*key).collect()
-    assert len(a) == len(b) and len(a) > 0
-    for ra, rb in zip(a, b):
-        assert ra.asDict() == rb.asDict(), (ra, rb)
+    ok, msg = compare(spark, SF_TINY, lambda s, d: fn(_ev(s, d)), ORACLE_PIT_DUAL_RATE)
+    assert ok, msg
 
 
-def test_pit_flagship_auto_chunk_dispatch(spark):
-    """VERDICT r5 #2: the auto flagship engages the chunk-carry
-    machinery only above the hot-entity threshold — plain plan (no
-    grouped-map python node) on the uniform fixture, chunked plan when
-    the threshold is forced down to fixture scale, both value-exact."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("unit", [None, "day", "month"])
+def test_pit_flagship_fully_chunked_parity(spark, unit):
+    """The events flagship with every entity-sequential stage chunked
+    (sessionize + both dual-rate window families + as-of) matches the
+    DuckDB oracle row-for-row, like the plain plan."""
+    _pit_matches_oracle(spark, lambda ev: pit_dual_rate_from(ev, chunk_trunc=unit))
 
-    from slowfast_feature_extractor_spark.plans.featurize import (
-        pit_dual_rate_auto,
-        pit_dual_rate_from,
-    )
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-        "value_cents", F.round(F.col("value") * 100).cast("long")
-    )
+def test_pit_flagship_auto_chunk_dispatch(spark, events):
+    """VERDICT r5 #2: chunk_trunc="auto" engages the chunk-carry
+    machinery only above the hot-entity threshold — plain plan on the
+    uniform fixture, chunked plan when the threshold is forced down to
+    fixture scale, both value-exact."""
 
     def plan(df):
         return df._jdf.queryExecution().toString()
 
     # the chunk-carry machinery's fingerprint is the __chunk key column
-    # (r7: the carry fold is pure JVM — no grouped-map Python node left)
-    auto_plain = pit_dual_rate_auto(ev)  # uniform corpus -> plain arm
+    auto_plain = pit_dual_rate_from(events, chunk_trunc="auto")  # uniform corpus
     assert "__chunk" not in plan(auto_plain)
-    auto_chunked = pit_dual_rate_auto(ev, chunk_threshold=2)  # forced skew arm
+    auto_chunked = pit_dual_rate_from(events, chunk_trunc="auto",
+                                      auto_chunk_threshold=2)  # forced skew arm
     assert "__chunk" in plan(auto_chunked)
+    for threshold in (50_000, 2):
+        _pit_matches_oracle(spark, lambda ev: pit_dual_rate_from(
+            ev, chunk_trunc="auto", auto_chunk_threshold=threshold))
 
-    key = ["user_id", "ts", "event_id"]
-    a = pit_dual_rate_from(ev).sort(*key).collect()
-    b = auto_chunked.sort(*key).collect()
-    assert len(a) == len(b) and len(a) > 0
-    for ra, rb in zip(a, b):
-        assert ra.asDict() == rb.asDict(), (ra, rb)
+
+@pytest.mark.parametrize("unit", [None, "day", "month"])
+def test_pit_flagship_tied_views_take_latest_event_id(spark, unit):
+    """Two views at the same ts: every click at or after them matches the
+    latest by (ts, event_id), the oracle's as-of order. Hand-computed:
+    view 3's strictly-earlier views are 1 and 2 (500 + 100 cents)."""
+    from datetime import datetime, timedelta
+
+    # the later clicks fall in the next day and month: under chunking
+    # their match arrives through the as-of carry
+    t0 = datetime(2024, 1, 31, 23, 59, 45)
+    s = timedelta(seconds=1)
+    rows = [
+        (1, t0, 7, "view", 5.0),
+        (2, t0 + 10 * s, 7, "view", 1.0),
+        (3, t0 + 10 * s, 7, "view", 3.0),
+        (4, t0 + 10 * s, 7, "click", 0.0),
+        (5, t0 + 20 * s, 7, "click", 0.0),
+        (6, t0 + 20 * s, 7, "click", 0.0),
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
+    ).withColumn("value_cents", F.round(F.col("value") * 100).cast("long"))
+    out = pit_dual_rate_from(ev, chunk_trunc=unit).collect()
+    got = {r["event_id"]: (r["view_ts"], r["slow_view_avg"], r["slow_view_cnt"])
+           for r in out}
+    assert got == {e: (t0 + 10 * s, 300.0, 2) for e in (4, 5, 6)}
 
 
 def test_chunked_dual_rate_parity_with_null_ts_rows(spark):
@@ -278,26 +301,16 @@ def test_chunked_dual_rate_parity_with_null_ts_rows(spark):
     entity's EARLIEST chunk (pandas groupby would silently drop it)."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
-    from slowfast_feature_extractor_spark.operators.skew import (
-        dual_rate_features_chunked,
-    )
-    from slowfast_feature_extractor_spark.operators.windows import (
-        dual_rate_features,
-    )
-
     rows = [("u", None, 1.0), ("u", None, 2.0)] + [
         ("u", dt.datetime(2024, 1, 1 + d, 12, 0, 0), float(d)) for d in range(6)
     ]
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, value double")
     kw = dict(entity="url", ts="warc_ts", measure="value", fast_rows=2, slow_rows=4)
-    plain = dual_rate_features(df, **kw)
-    chunked = dual_rate_features_chunked(df, **kw)
-    cols = sorted(set(plain.columns) & set(chunked.columns))
-    a = sorted((tuple(r) for r in plain.select(*cols).collect()), key=str)
-    b = sorted((tuple(r) for r in chunked.select(*cols).collect()), key=str)
-    assert a == b
+    want = sorted((tuple(r) for r in dual_rate_features(df, **kw).collect()), key=str)
+    for unit in ("day", "month"):
+        chunked = dual_rate_features(df, chunk=_chunk(unit, "warc_ts"), **kw)
+        got = sorted((tuple(r) for r in chunked.collect()), key=str)
+        assert got == want, unit
 
 
 def test_shuffle_partition_count_tolerates_auto(spark):
@@ -330,31 +343,26 @@ def test_sessionize_chunked_resessionize_no_duplicate_columns(spark):
     emitting ambiguous duplicates."""
     import datetime as dt
 
-    from pyspark.sql import functions as F
-
-    from slowfast_feature_extractor_spark.operators.sessionize import sessionize
-    from slowfast_feature_extractor_spark.operators.skew import sessionize_chunked
-
     rows = [
         ("u", dt.datetime(2024, 1, 1, 0, 0), 1),
         ("u", dt.datetime(2024, 1, 1, 3, 0), 2),
         ("u", dt.datetime(2024, 1, 2, 0, 0), 3),
     ]
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, event_id long")
-    once = sessionize_chunked(
-        df, entity="url", ts="warc_ts", gap_seconds=3600.0, tiebreak="event_id"
+    day = F.to_date("warc_ts")
+    once = sessionize(
+        df, entity="url", ts="warc_ts", gap_seconds=3600.0, tiebreak="event_id",
+        chunk=day,
     )
-    again = sessionize_chunked(
-        once, entity="url", ts="warc_ts", gap_seconds=7200.0, tiebreak="event_id"
+    again = sessionize(
+        once, entity="url", ts="warc_ts", gap_seconds=7200.0, tiebreak="event_id",
+        chunk=day,
     )
-    assert again.columns.count("session_idx") == 1
-    assert again.columns.count("session_id") == 1
-    plain = sessionize(
-        once, entity="url", ts="warc_ts", gap_seconds=7200.0, tiebreak="event_id"
-    )
-    got = {(r["event_id"], r["session_idx"]) for r in again.collect()}
-    want = {(r["event_id"], r["session_idx"]) for r in plain.collect()}
-    assert got == want
+    assert again.columns == once.columns
+    # gaps 3 h and 21 h both exceed 2 h: three sessions
+    assert {(r["event_id"], r["session_idx"]) for r in again.collect()} == {
+        (1, 1), (2, 2), (3, 3)
+    }
     # the filter that used to raise AMBIGUOUS_REFERENCE
     assert again.filter(F.col("session_idx") >= 0).count() == 3
 
