@@ -119,16 +119,18 @@ def fingerprint(col: Column) -> Column:
 
 def shingles(col: Column, n: int = 3) -> Column:
     """Word n-gram shingles as an array<string>; empty array when the
-    document has fewer than ``n`` tokens."""
+    document has fewer than ``n`` tokens.
+
+    Built by zipping ``n`` shifted slices of the token array. A lambda
+    slicing the tokens once per shingle would re-split the whole text
+    for every shingle — higher-order-function bodies get no common
+    subexpression elimination — which is O(tokens²) per document."""
     toks = tokens(col)
     n_sh = F.size(toks) - F.lit(n - 1)
-    return F.when(
-        n_sh >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.slice(toks, 1, n_sh)
+    for k in range(2, n + 1):
+        grams = F.zip_with(grams, F.slice(toks, k, n_sh), lambda a, b: F.concat_ws(" ", a, b))
+    return F.when(n_sh >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
 def min_shingle_hash(col: Column, n: int = 3) -> Column:

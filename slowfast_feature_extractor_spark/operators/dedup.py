@@ -353,13 +353,21 @@ def containment_pairs(
     )
 
 
-def _salted_hash(shingle: Column, i: int, hash_fn: str) -> Column:
-    """The i-th MinHash permutation proxy: hash the (salt, shingle-hash)
-    pair to a fresh int64. md5 mode salts by string-prefixing (portable
-    to DuckDB); xx64 mode feeds the salt as an extra xxhash64 argument."""
-    if hash_fn == "md5":
-        return md5i64(F.concat(F.lit(f"{i}:"), shingle.cast("string")))
-    return F.xxhash64(F.lit(i), shingle)
+# md5i64 as SQL text, for expressions built as one parsed string
+_MD5I64_SQL = "CAST(conv(substring(md5({}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def _minhash_aggs(num_hashes: int, hash_fn: str) -> list[Column]:
+    """``mh_i = min(hash64(i, shingle))``: the i-th MinHash permutation
+    proxy hashes the (salt, shingle-hash) pair to a fresh int64. md5 mode
+    salts by string-prefixing (portable to DuckDB); xx64 mode feeds the
+    salt as an extra xxhash64 argument. Built as SQL text: one expression
+    per slot instead of ~10 Column calls, each a JVM round trip."""
+    def salted(i):
+        if hash_fn == "md5":
+            return _MD5I64_SQL.format(f"concat('{i}:', CAST(shingle AS STRING))")
+        return f"xxhash64({i}, shingle)"
+    return [F.expr(f"min({salted(i)}) AS mh{i}") for i in range(num_hashes)]
 
 
 def minhash_signatures(
@@ -375,11 +383,7 @@ def minhash_signatures(
     are dropped (nothing to hash). One partial-aggregatable groupBy
     whose shuffle rows are (id, num_hashes × int64)."""
     sh = shingle_table(df, id_col, text_col, n, hash_fn)
-    aggs = [
-        F.min(_salted_hash(F.col("shingle"), i, hash_fn)).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
+    return sh.groupBy("id").agg(*_minhash_aggs(num_hashes, hash_fn))
 
 
 def lsh_params(
@@ -438,14 +442,14 @@ def band_buckets(
     rows = num_hashes // bands
     per_band = []
     for b in range(bands):
-        cols = [F.col(f"mh{b * rows + r}") for r in range(rows)]
+        cols = [f"mh{b * rows + r}" for r in range(rows)]
         if hash_fn == "md5":
-            bucket = md5i64(F.concat_ws("|", *[c.cast("string") for c in cols]))
+            parts = ", ".join(f"CAST({c} AS STRING)" for c in cols)
+            per_band.append(_MD5I64_SQL.format(f"concat_ws('|', {parts})"))
         else:
-            bucket = F.xxhash64(*cols)
-        per_band.append(bucket)
-    return signatures.select(
-        "id", F.posexplode(F.array(*per_band)).alias("band", "bucket")
+            per_band.append(f"xxhash64({', '.join(cols)})")
+    return signatures.selectExpr(
+        "id", f"posexplode(array({', '.join(per_band)})) AS (band, bucket)"
     )
 
 
@@ -486,7 +490,6 @@ def minhash_lsh_dedup(
     bands: int | None = None,
     threshold: float = 0.5,
     hash_fn: str = "md5",
-    broadcast_limit: int = 2_000_000,
 ) -> DataFrame:
     """MinHash-LSH candidates verified with exact Jaccard ≥ threshold.
     Output (id_a, id_b, jaccard).
@@ -509,27 +512,26 @@ def minhash_lsh_dedup(
     index — and memory pressure is ~100x lower), and it degrades to
     disk blocks instead of failing when the index outgrows the cache.
     The eager count prevents concurrent downstream stages from racing to
-    materialize it twice."""
+    materialize it twice; it is the only build-time job. Candidates and
+    verification stay lazy, their join strategy chosen at run time
+    (:func:`_verify_candidates`). ``threshold`` must be > 0 and is
+    checked first, so a rejected call runs no job and caches nothing."""
     from pyspark import StorageLevel
 
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
     if (num_hashes is None) != (bands is None):
         raise ValueError("pass both num_hashes and bands, or neither")
     if num_hashes is None:
         num_hashes, bands = lsh_params(threshold)
     sh = shingle_table(df, id_col, text_col, n, hash_fn).persist(StorageLevel.MEMORY_AND_DISK)
     sh.count()
-    aggs = [
-        F.min(_salted_hash(F.col("shingle"), i, hash_fn)).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = sh.groupBy("id").agg(*aggs)
+    sigs = sh.groupBy("id").agg(*_minhash_aggs(num_hashes, hash_fn))
     cand = minhash_lsh_candidates(sigs, num_hashes, bands, hash_fn)
-    return _verify_candidates(sh, cand, threshold, broadcast_limit)
+    return _verify_candidates(sh, cand, threshold)
 
 
-def _verify_candidates(
-    sh: DataFrame, cand: DataFrame, threshold: float, broadcast_limit: int
-) -> DataFrame:
+def _verify_candidates(sh: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
     """Exact-Jaccard verification of LSH candidate pairs against the
     persisted shingle index ``sh``; shared by the salted-hash and OPH
     signature paths. Output (id_a, id_b, jaccard >= threshold).
@@ -551,66 +553,35 @@ def _verify_candidates(
     array_distincts per doc), so set-semantics ``array_intersect``
     counts exactly the shared-shingle rows the old join counted.
 
-    ``threshold`` must be > 0: zero-overlap candidate pairs reach the
-    filter with jaccard 0.0, so a non-positive threshold would emit them.
-    """
-    from pyspark import StorageLevel
+    The bare (id_a, id_b) pairs join the per-doc arrays twice and Spark
+    picks each strategy at run time: with AQE on (``session.get_spark``)
+    a side is broadcast only when its materialized shuffle output is
+    under ``spark.sql.adaptive.autoBroadcastJoinThreshold``, so a
+    candidate blow-up stays a spillable sort-merge join; with AQE off
+    the static size estimate decides.
 
-    if threshold <= 0:
-        raise ValueError(f"threshold must be > 0, got {threshold}")
-    cand = cand.persist(StorageLevel.DISK_ONLY)
-    n_cand = cand.count()
+    ``threshold`` must be > 0 (the callers check it before any work):
+    zero-overlap candidate pairs reach the filter with jaccard 0.0, so a
+    non-positive threshold would emit them.
+    """
     docsets = sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))
-    # The candidate set is tiny relative to the corpus (that is LSH's
-    # whole point), so broadcast the bare (id_a, id_b) pairs against the
-    # doc-array table (hash probe, no sort) — BUT only while cand
-    # actually fits an executor: a loose threshold or a
-    # duplicate-riddled web corpus can produce hundreds of millions of
-    # candidate pairs, and an unconditional F.broadcast would OOM the
-    # driver/executors (r1+r2 flagged exactly this). Past
-    # ``broadcast_limit`` rows (~16 bytes each ⇒ default cap ≈ 32 MB)
-    # fall back to plain equi-joins keyed on id: both sides stay one
-    # row per doc / per pair, so the joins shuffle array payloads
-    # proportional to the candidate set, never the index. Only the bare
-    # pair table is ever broadcast — the array-carrying sides always
-    # stream. The count is free: cand is persisted and feeds the join
-    # either way.
-    if n_cand <= broadcast_limit:
-        a_side = docsets.join(
-            F.broadcast(cand), docsets["id"] == cand["id_a"]
-        ).select("id_a", "id_b", F.col("__shs").alias("__sa"))
-        both = docsets.join(a_side, docsets["id"] == a_side["id_b"]).select(
-            "id_a", "id_b", "__sa", F.col("__shs").alias("__sb")
-        )
-    else:
-        # pinned spillable merge joins: past the guard nothing may be
-        # broadcast, not even by stats (a counted persisted cand looks
-        # tiny to Catalyst on small inputs but the guard exists for the
-        # corpora where it is not)
-        both = (
-            cand.hint("merge")
-            .join(docsets.withColumnsRenamed({"id": "id_a", "__shs": "__sa"}), "id_a")
-            .hint("merge")
-            .join(docsets.withColumnsRenamed({"id": "id_b", "__shs": "__sb"}), "id_b")
-        )
+    both = cand.join(
+        docsets.withColumnsRenamed({"id": "id_a", "__shs": "__sa"}), "id_a"
+    ).join(docsets.withColumnsRenamed({"id": "id_b", "__shs": "__sb"}), "id_b")
     return (
-        both.select(
+        both.selectExpr(
             "id_a",
             "id_b",
-            F.size(F.array_intersect("__sa", "__sb")).alias("inter"),
-            F.size("__sa").alias("sz_a"),
-            F.size("__sb").alias("sz_b"),
+            "size(array_intersect(__sa, __sb)) AS inter",
+            "size(__sa) AS sz_a",
+            "size(__sb) AS sz_b",
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
+        .selectExpr(
+            "id_a",
+            "id_b",
+            "round(CAST(inter AS DOUBLE) / (sz_a + sz_b - inter), 6) AS jaccard",
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -674,9 +645,8 @@ def _oph_sig_from_shingles(sh: DataFrame, num_perm: int, hash_fn: str) -> DataFr
     # borrow hash is computed once per empty slot (the `acc IS NOT
     # NULL` short-circuit keeps later iterations free).
     if hash_fn == "md5":
-        borrow = (
-            "CAST(conv(substring(md5(concat(CAST(j AS STRING), ':', "
-            f"CAST(_arr[pmod(i + j, {P})] AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+        borrow = _MD5I64_SQL.format(
+            f"concat(CAST(j AS STRING), ':', CAST(_arr[pmod(i + j, {P})] AS STRING))"
         )
     else:
         borrow = f"xxhash64(j, _arr[pmod(i + j, {P})])"
@@ -706,15 +676,17 @@ def minhash_oph_dedup(
     bands: int | None = None,
     threshold: float = 0.5,
     hash_fn: str = "md5",
-    broadcast_limit: int = 2_000_000,
 ) -> DataFrame:
     """MinHash-LSH near-dup with OPH signatures: identical banding,
     candidate join, and exact-Jaccard verification as
     :func:`minhash_lsh_dedup` — only the signature aggregation differs
     (one hash pass instead of ``num_perm``). Output (id_a, id_b,
-    jaccard >= threshold)."""
+    jaccard >= threshold). As there, ``threshold`` > 0 is checked before
+    any work and the shingle-index count is the only build-time job."""
     from pyspark import StorageLevel
 
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
     if (num_perm is None) != (bands is None):
         raise ValueError("pass both num_perm and bands, or neither")
     if num_perm is None:
@@ -725,7 +697,7 @@ def minhash_oph_dedup(
     sh.count()
     sigs = _oph_sig_from_shingles(sh, num_perm, hash_fn)
     cand = minhash_lsh_candidates(sigs, num_perm, bands, hash_fn)
-    return _verify_candidates(sh, cand, threshold, broadcast_limit)
+    return _verify_candidates(sh, cand, threshold)
 
 
 def dedup_clusters(
@@ -746,15 +718,16 @@ def dedup_clusters(
     groupBy; lineage is cut with localCheckpoint so plans stay flat.
     The driver loop coordinates ITERATIONS (a scalar count per round),
     never data — this is how iterative graph algorithms are expressed on
-    Spark (Pregel-style).
+    Spark (Pregel-style). ``pairs`` is evaluated once, into the
+    checkpointed edge set the nodes are read from.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).distinct()
+    both_ways = F.array(
+        F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+        F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+    )
+    edges = pairs.select(F.inline(both_ways)).distinct().localCheckpoint(eager=True)
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "lbl", F.col("id")
     ).localCheckpoint(eager=True)
@@ -820,11 +793,14 @@ def dedup_clusters_star(
     minimum of its closed neighborhood; small-star: every node links
     its (smaller) neighbors and itself to the neighborhood minimum.
     Both preserve connectivity; the joint fixpoint is one star per
-    component, rooted at the component minimum.
+    component, rooted at the component minimum. ``pairs`` is evaluated
+    once, into a checkpoint both the edges and the nodes are read from.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    raw = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    raw = pairs.select(
+        F.col(id_a).alias("u"), F.col(id_b).alias("v")
+    ).localCheckpoint(eager=True)
     edges = (
         raw.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("src"), F.least("u", "v").alias("dst"))
@@ -839,7 +815,6 @@ def dedup_clusters_star(
         raw.select(F.col("u").alias("id"))
         .unionByName(raw.select(F.col("v").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     for _ in range(max_iter):

@@ -108,9 +108,106 @@ def test_minhash_lsh_finds_near_dups(docs):
 @pytest.mark.parametrize("threshold", [0.0, -0.5])
 def test_lsh_dedup_rejects_non_positive_threshold(docs, dedup, banding, threshold):
     """Zero-overlap candidates reach verification with jaccard 0.0, so a
-    non-positive threshold would emit them: the shared verify refuses it."""
-    with pytest.raises(ValueError, match="threshold must be > 0"):
-        getattr(DD, dedup)(docs, threshold=threshold, **banding)
+    non-positive threshold would emit them: both entry points refuse it
+    before any work — no job runs and no shingle index is left cached."""
+    sc = docs.sparkSession.sparkContext
+    group = f"reject-threshold-{dedup}-{threshold}"
+    persisted = sc._jsc.getPersistentRDDs().size()
+    sc.setJobGroup(group, "non-positive threshold")
+    try:
+        with pytest.raises(ValueError, match="threshold must be > 0"):
+            getattr(DD, dedup)(docs, threshold=threshold, **banding)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def _lsh_pairs(df, dedup, banding, threshold=0.3):
+    return {(r.id_a, r.id_b): r.jaccard for r in
+            getattr(DD, dedup)(df, threshold=threshold, **banding).collect()}
+
+
+@pytest.mark.parametrize("dedup, banding", [
+    ("minhash_lsh_dedup", {"num_hashes": 8, "bands": 4}),
+    ("minhash_oph_dedup", {"num_perm": 8, "bands": 4}),
+])
+def test_lsh_dedup_build_persists_only_shingle_index(spark, dedup, banding):
+    """Building the query persists one RDD — the shingle index — and
+    leaves candidate generation and verification lazy (no candidate
+    cache to leak)."""
+    # a corpus no other test builds, so its index is not already cached
+    df = spark.createDataFrame(
+        DOCS + [(6, f"a corpus only the {dedup} persist test builds")],
+        schema="doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    out = getattr(DD, dedup)(df, threshold=0.3, **banding)
+    assert sc._jsc.getPersistentRDDs().size() == before + 1
+    assert {(r.id_a, r.id_b) for r in out.collect()} >= {(1, 2)}
+
+
+@pytest.mark.parametrize("dedup, banding", [
+    ("minhash_lsh_dedup", {"num_hashes": 8, "bands": 4}),
+    ("minhash_oph_dedup", {"num_perm": 8, "bands": 4}),
+])
+def test_lsh_dedup_empty_shingleless_and_null_ids(spark, dedup, banding):
+    """Hostile inputs: an empty corpus and an all-shingle-less corpus
+    give zero pairs without error; NULL doc ids never surface in a pair,
+    even when their texts duplicate each other and a keyed doc."""
+    schema = "doc_id long, text string"
+    empty = spark.createDataFrame([], schema)
+    assert _lsh_pairs(empty, dedup, banding) == {}
+    shingleless = spark.createDataFrame(
+        [(1, "xy"), (2, ""), (3, None), (4, "two words")], schema
+    )
+    assert _lsh_pairs(shingleless, dedup, banding) == {}
+    dup = DOCS[0][1]
+    nulls = spark.createDataFrame(
+        [(None, dup), (None, dup), (None, DOCS[3][1]), (10, dup), (11, dup)],
+        schema,
+    )
+    out = _lsh_pairs(nulls, dedup, banding)
+    assert out == {(10, 11): 1.0}
+
+
+def test_lsh_pairs_independent_of_join_strategy(spark, docs):
+    """The verification joins carry no strategy hint, so Spark picks it
+    at run time. With both broadcast thresholds off the executed final
+    plan has no broadcast hash join, and with AQE off the static planner
+    decides; either way the verified pairs equal the default run's."""
+    banding = {"num_hashes": 8, "bands": 4}
+    base = _lsh_pairs(docs, "minhash_lsh_dedup", banding)
+    assert (1, 2) in base
+
+    def run_with(conf):
+        saved = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            df = DD.minhash_lsh_dedup(docs, threshold=0.3, **banding)
+            pairs = {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
+            return pairs, df._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    no_bhj, plan = run_with({
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    })
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" in plan
+    assert no_bhj == base
+    no_aqe, _ = run_with({"spark.sql.adaptive.enabled": "false"})
+    assert no_aqe == base
 
 
 def test_minhash_candidates_superset_check(docs):
@@ -118,6 +215,39 @@ def test_minhash_candidates_superset_check(docs):
     rows = {r["id"]: [r[f"mh{i}"] for i in range(8)] for r in sigs.collect()}
     assert rows[1] == rows[2]  # identical docs -> identical signatures
     assert len(rows) == 4  # doc 5 has no shingles
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xx64"])
+def test_minhash_signatures_and_bands_match_column_formulas(docs, hash_fn):
+    """The signature slots and band buckets are built as SQL text; each
+    must equal its documented formula written with Column functions:
+    mh_i = min(hash64(i, shingle)), bucket = hash64 of the band's slots."""
+    from pyspark.sql import functions as F
+
+    def salted(i):
+        if hash_fn == "md5":
+            return DD.md5i64(F.concat(F.lit(f"{i}:"), F.col("shingle").cast("string")))
+        return F.xxhash64(F.lit(i), F.col("shingle"))
+
+    sigs = DD.minhash_signatures(docs, num_hashes=4, hash_fn=hash_fn)
+    ref = DD.shingle_table(docs, hash_fn=hash_fn).groupBy("id").agg(
+        *[F.min(salted(i)).alias(f"mh{i}") for i in range(4)]
+    )
+    assert sorted(sigs.collect()) == sorted(ref.collect())
+
+    def bucket(cols):
+        if hash_fn == "md5":
+            return DD.md5i64(F.concat_ws("|", *[F.col(c).cast("string") for c in cols]))
+        return F.xxhash64(*cols)
+
+    bands = DD.band_buckets(sigs, 4, 2, hash_fn)
+    ref_bands = ref.select(
+        "id",
+        F.posexplode(F.array(bucket(["mh0", "mh1"]), bucket(["mh2", "mh3"]))).alias(
+            "band", "bucket"
+        ),
+    )
+    assert sorted(bands.collect()) == sorted(ref_bands.collect())
 
 
 def test_simhash(docs):
@@ -219,31 +349,6 @@ def test_minhash_xx64_mode_exact_subset(docs):
     for pair, j in xx.items():
         assert exact[pair] == j
     assert (1, 2) in xx  # exact dup always collides in every band
-
-
-def test_minhash_broadcast_guard_falls_back(docs):
-    """broadcast_limit=0 forces the shuffle-hash verification join; the
-    result is identical and the plan carries no explicit broadcast of
-    the candidate set (VERDICT r2 item 4: unguarded F.broadcast(cand)
-    overflows on a duplicate-riddled corpus)."""
-    base = {(r.id_a, r.id_b): r.jaccard for r in
-            DD.minhash_lsh_dedup(docs, num_hashes=8, bands=4, threshold=0.3).collect()}
-    def physical(df):
-        return df._jdf.queryExecution().toString().split("== Physical Plan ==")[-1]
-
-    default_df = DD.minhash_lsh_dedup(docs, num_hashes=8, bands=4, threshold=0.3)
-    guarded_df = DD.minhash_lsh_dedup(docs, num_hashes=8, bands=4, threshold=0.3, broadcast_limit=0)
-    # the explicit candidate broadcast is gone (Catalyst may still
-    # broadcast the stats-known tiny corpus-side aggregates on this
-    # fixture; those are its call, not the guarded hint)
-    assert physical(guarded_df).count("BroadcastExchange") < physical(
-        default_df
-    ).count("BroadcastExchange")
-    assert physical(guarded_df).count("SortMergeJoin") > physical(
-        default_df
-    ).count("SortMergeJoin")  # spillable merge joins replace the broadcast
-    guarded = {(r.id_a, r.id_b): r.jaccard for r in guarded_df.collect()}
-    assert guarded == base
 
 
 def test_lsh_params_s_curve():
@@ -422,6 +527,29 @@ def test_dedup_clusters_star_keeps_self_pair_singletons(spark):
     plain = sorted(tuple(r) for r in dedup_clusters(pairs).collect())
     star = sorted(tuple(r) for r in dedup_clusters_star(pairs).collect())
     assert plain == star == [(1, 1), (2, 1), (3, 1), (7, 7), (9, 9)]
+
+
+@pytest.mark.parametrize("cc", ["dedup_clusters", "dedup_clusters_star"])
+def test_dedup_clusters_evaluate_pairs_once(spark, cc):
+    """Both CC variants read ``pairs`` in exactly one pass, however many
+    rounds they run: an upstream pair stage (LSH candidates and
+    verification, say) is not re-run per round or per derived set."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    chain = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (30, 30)]
+    pairs = spark.createDataFrame(chain, "id_a long, id_b long").select(
+        F.udf(tap, "long")("id_a").alias("id_a"), "id_b"
+    )
+    got = sorted(tuple(r) for r in getattr(DD, cc)(pairs).collect())
+    assert got == [(i, 1) for i in range(1, 10)] + [(20, 20), (21, 20), (30, 30)]
+    assert seen.value == len(chain)
 
 
 def test_winnow_guarantee_any_alignment(spark):

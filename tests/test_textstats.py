@@ -55,6 +55,19 @@ def test_shingles_and_fingerprint(docs):
     assert len(fp5) == 32  # md5 hex of normalized text
 
 
+@pytest.mark.parametrize("n", [1, 2, 3, 4])
+def test_shingles_match_python_reference(spark, n):
+    """Every shingle string, in order, equals the space-joined window of
+    ``n`` consecutive non-empty tokens; a NULL text has none."""
+    rows = DOCS + [(6, None), (7, "a b c d e f g h")]
+    df = spark.createDataFrame(rows, schema="doc_id long, text string")
+    out = df.select("doc_id", TS.shingles(F.col("text"), n).alias("sh"))
+    got = {r.doc_id: r.sh for r in out.collect()}
+    for doc_id, text in rows:
+        toks = [t for t in (text or "").split(" ") if t]
+        assert got[doc_id] == [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)], doc_id
+
+
 def test_nfc_normalize_parity_with_duckdb(spark):
     """Spark UDF (unicodedata) vs DuckDB (utf8proc) NFC byte parity on
     every transformation class: combining marks, multi-mark canonical
