@@ -2,32 +2,35 @@
 
 The reference's media path is: opaque bytes → decode → resize →
 normalize → feature (reference/datasets/videoset.py:66-139). Here media
-are opaque ``binary`` columns with typed metadata; the decode/feature
-step runs as Arrow-batched ``mapInPandas`` so bytes cross the JVM↔Python
-boundary once per batch, never per row.
+are opaque ``binary`` columns with typed metadata; every decode/feature
+operator runs through one Arrow-batched loop, :func:`map_blobs`, so
+bytes cross the JVM↔Python boundary once per batch, never per row, and
+the P9 frame-validity rule lives in one place.
 
-Two media paths are REAL end-to-end with stdlib-only codecs:
+Four media paths are REAL end-to-end with stdlib-only codecs:
 
 - audio: :func:`decode_audio` parses WAV containers with ``wave``
   (header + PCM frames, byte round-trip tested); :func:`audio_meta`
-  runs it Arrow-batched with an analytic DuckDB oracle
-  (``multimodal_audio``);
+  reduces the PCM to amplitude aggregates (``multimodal_audio``) and
+  :func:`audio_spectral` to rFFT peak bins (``audio_spectral``);
 - image: :func:`decode_image` parses uncompressed 24-bit BMP with
   ``struct`` (BGR order, bottom-up rows, 4-byte padding — pixel
   round-trip tested), compressed PNG with :func:`decode_png`
   (stdlib zlib inflate + full scanline filter reconstruction, types
-  0-4; 8-bit gray/RGB/RGBA/gray+alpha and 1/2/4/8-bit palette with
-  tRNS), AND sequential + progressive JPEG with
+  0-4; gray/RGB/RGBA/gray+alpha at 8/16-bit, 1/2/4/8-bit gray and
+  palette with tRNS, sequential or Adam7), AND JPEG with
   :func:`decode_jpeg` (marker walk, canonical Huffman entropy decode,
-  SOF2 spectral-selection/successive-approximation scans, restart
-  intervals, dequantize, exact IDCT, JFIF color convert — grayscale,
-  4:4:4, AND chroma-subsampled 4:2:0/4:2:2/4:1:1 via the
-  MCU-interleaved scan walk + replication upsampling);
-  :func:`resize_nearest` is a real resize kernel, and
+  sequential and SOF2 progressive scans, restart intervals,
+  dequantize, exact IDCT, JFIF color convert — grayscale, 4:4:4, AND
+  chroma-subsampled 4:2:0/4:2:2/4:1:1 via the MCU-interleaved scan
+  walk + replication upsampling — plus SOF3 lossless with exact
+  samples); :func:`resize_nearest` is a real resize kernel, and
   :func:`image_meta` chains decode → resize → channel sums with
   analytic oracles (``multimodal_image``, ``multimodal_png``,
-  ``multimodal_jpeg``, ``multimodal_jpeg_prog``,
-  ``multimodal_jpeg_420``);
+  ``multimodal_png_palette``, ``multimodal_png_adam7``,
+  ``multimodal_png16``, ``multimodal_jpeg``, ``multimodal_jpeg_prog``,
+  ``multimodal_jpeg_420``); ``multimodal_jpeg_lossless`` checks the
+  lossless samples;
 - video: :func:`decode_avi` parses MJPEG-in-AVI RIFF containers and
   JPEG-decodes sampled frames (``multimodal_video``);
 - GIF: :func:`decode_gif` decodes GIF87a/89a — real LZW entropy
@@ -37,18 +40,23 @@ Two media paths are REAL end-to-end with stdlib-only codecs:
   (``multimodal_gif``).
 
 Non-MJPEG video codecs and the exotic JPEG modes (hierarchical,
-lossless, arithmetic-coded, non-integer sampling ratios) still need a
-production codec (PIL/cv2 — absent in this container): those raise
-``NotImplementedError`` while their Spark-side plumbing (schema,
-batching, UDF signature, partitioning) is exercised by
-:func:`media_meta`'s deterministic fake featurizer.
+arithmetic-coded, non-integer sampling ratios) need a production codec
+(PIL/cv2): those raise ``NotImplementedError`` while their Spark-side
+plumbing (schema, batching, UDF signature, partitioning) is exercised
+by :func:`media_meta`'s deterministic fake featurizer.
+
+The ``synth_*`` encoders write the fixtures the tests and registry rows
+decode; the JPEG ones share one byte writer (:class:`_JpegWriter`) and
+the PNG ones one chunk writer (:func:`_png_encode`).
 """
 
 from __future__ import annotations
 
 import functools
 import hashlib
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,6 +65,56 @@ from pyspark.sql import functions as F
 META_SCHEMA = (
     "doc_id long, n_bytes long, digest string, f1 double, f2 double, f3 double, f4 double"
 )
+
+
+def map_blobs(
+    df: DataFrame,
+    id_col: str,
+    blob_col: str,
+    schema: str,
+    fn: Callable[[bytes | None], list[tuple]],
+) -> DataFrame:
+    """The one Arrow-batched per-blob loop every media operator runs
+    (the reference's per-clip decode → feature loop,
+    reference/datasets/videoset.py:66-139): ``(id_col, blob_col)``
+    cross the JVM↔Python boundary once per Arrow batch through
+    ``mapInPandas``, and ``fn(blob)`` — ``blob`` is ``bytes`` or
+    ``None`` — returns that blob's output rows as tuples of the columns
+    of ``schema`` after the first. ``schema`` is a flat DDL string whose
+    first column receives the blob's id.
+
+    P9 frame-validity rule: when ``fn`` raises, the blob yields exactly
+    ONE row, its id with nulls in every other column, and none of the
+    rows ``fn`` built before failing, so no consumer sees a document
+    as both decoded and undecodable. Operators that give ``None`` a
+    meaning of their own (:func:`media_meta`, :func:`frame_sample`)
+    handle it inside ``fn``; decoders let it raise."""
+    names = [c.split()[0] for c in schema.split(",")]
+    nulls = [(None,) * (len(names) - 1)]
+
+    def _per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for i, b in zip(pdf[id_col], pdf[blob_col]):
+                try:
+                    rows = list(fn(None if b is None else bytes(b)))
+                except Exception:
+                    rows = nulls
+                out.extend((i, *r) for r in rows)
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(
+        _per_batch, schema=schema
+    )
+
+
+def _rgb_sums(pixels) -> tuple[int, int, int]:
+    """Exact integer R, G, B sums of an HxWxC uint8 array (alpha
+    ignored)."""
+    import numpy as np
+
+    s = pixels[:, :, :3].astype(np.int64).sum(axis=(0, 1))
+    return int(s[0]), int(s[1]), int(s[2])
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -176,9 +234,6 @@ def decode_png(data: bytes):
     fine for fixture-scale images, and a production deployment swaps
     one function (decode_image) for a native codec without touching
     the Spark plumbing."""
-    import struct
-    import zlib
-
     import numpy as np
 
     if len(data) < 8 or data[:8] != _PNG_SIG:
@@ -320,6 +375,42 @@ def _png_expand16(px8):
     return rows
 
 
+def _png_chunk(typ: bytes, payload: bytes) -> bytes:
+    crc = zlib.crc32(typ + payload) & 0xFFFFFFFF
+    return struct.pack(">I", len(payload)) + typ + payload + struct.pack(">I", crc)
+
+
+def _png_encode(
+    grid, to_rows, fbpp, filter_cycle, bitdepth, colortype, interlace, chunks=()
+) -> bytes:
+    """The PNG writer both encoders share: signature, IHDR, the extra
+    ``(type, payload)`` ``chunks`` (PLTE/tRNS), one zlib IDAT and IEND,
+    each chunk with its CRC. ``grid`` is the (h, w[, ch]) sample grid
+    and ``to_rows`` turns it, or one Adam7 pass of it, into scanline
+    bytes; ``interlace`` 0 filters the whole grid as one stream, any
+    other value filters each non-empty Adam7 pass on its own."""
+    height, width = grid.shape[:2]
+    passes = [grid]
+    if interlace != 0:
+        passes = [grid[y0::dy, x0::dx] for x0, y0, dx, dy in _ADAM7]
+        passes = [p for p in passes if p.shape[0] and p.shape[1]]
+    lines = bytearray()
+    for sub in passes:
+        _png_filter_rows(lines, to_rows(sub), fbpp, filter_cycle)
+    ihdr = struct.pack(
+        ">IIBBBBB", width, height, bitdepth, colortype, 0, 0, interlace
+    )
+    return _PNG_SIG + b"".join(
+        _png_chunk(typ, payload)
+        for typ, payload in [
+            (b"IHDR", ihdr),
+            *chunks,
+            (b"IDAT", zlib.compress(bytes(lines), 6)),
+            (b"IEND", b""),
+        ]
+    )
+
+
 def synth_png(
     width: int,
     height: int,
@@ -338,9 +429,6 @@ def synth_png(
     value, low byte deterministic junk the decoder's MSB reduction must
     discard); ``interlace=1`` emits the seven Adam7 passes, each
     independently filtered at its own pass width."""
-    import struct
-    import zlib
-
     import numpy as np
 
     if bitdepth not in (8, 16):
@@ -350,35 +438,15 @@ def synth_png(
     for y in range(height):
         for x in range(width):
             px[y, x] = pixel_fn(x, y)[:ch]
-    fbpp = ch * (bitdepth // 8)
-    lines = bytearray()
-    if interlace == 0:
-        rows = _png_expand16(px) if bitdepth == 16 else px.reshape(height, width * ch)
-        _png_filter_rows(lines, rows, fbpp, filter_cycle)
-    else:
-        for x0, y0, dx, dy in _ADAM7:
-            sub = px[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            rows = (
-                _png_expand16(sub)
-                if bitdepth == 16
-                else sub.reshape(sub.shape[0], sub.shape[1] * ch)
-            )
-            _png_filter_rows(lines, rows, fbpp, filter_cycle)
 
-    def chunk(typ: bytes, payload: bytes) -> bytes:
-        crc = zlib.crc32(typ + payload) & 0xFFFFFFFF
-        return struct.pack(">I", len(payload)) + typ + payload + struct.pack(">I", crc)
+    def to_rows(g):
+        if bitdepth == 16:
+            return _png_expand16(g)
+        return g.reshape(g.shape[0], g.shape[1] * ch)
 
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, bitdepth, 6 if rgba else 2, 0, 0, interlace
-    )
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(lines), 6))
-        + chunk(b"IEND", b"")
+    return _png_encode(
+        px, to_rows, ch * (bitdepth // 8), filter_cycle, bitdepth,
+        6 if rgba else 2, interlace,
     )
 
 
@@ -399,13 +467,9 @@ def synth_png_indexed(
     type-3/0 filters operate), proper CRCs. The generator behind the
     ``multimodal_png_palette`` registry row and the indexed/gray
     round-trip tests."""
-    import struct
-    import zlib
-
     import numpy as np
 
     grid = np.asarray(indices, dtype=np.int64)
-    height, width = grid.shape
     if bitdepth not in (1, 2, 4, 8):
         raise ValueError("bitdepth must be 1, 2, 4 or 8")
     if grid.min() < 0 or grid.max() >= (1 << bitdepth):
@@ -426,34 +490,14 @@ def synth_png_indexed(
             bits = np.concatenate([bits, np.zeros((h, pad), dtype=np.uint8)], axis=1)
         return np.packbits(bits, axis=1)
 
-    lines = bytearray()
-    if interlace == 0:
-        _png_filter_rows(lines, pack(grid), 1, filter_cycle)
-    else:  # Adam7 over packed sub-byte rows, one filtered stream per pass
-        for x0, y0, dx, dy in _ADAM7:
-            sub = grid[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            _png_filter_rows(lines, pack(sub), 1, filter_cycle)
-
-    def chunk(typ: bytes, payload: bytes) -> bytes:
-        crc = zlib.crc32(typ + payload) & 0xFFFFFFFF
-        return struct.pack(">I", len(payload)) + typ + payload + struct.pack(">I", crc)
-
-    colortype = 0 if gray else 3
-    out = _PNG_SIG + chunk(
-        b"IHDR",
-        struct.pack(">IIBBBBB", width, height, bitdepth, colortype, 0, 0, interlace),
-    )
+    chunks = []
     if not gray:
-        plte = bytearray()
-        for r, g, b in palette:
-            plte += bytes((r, g, b))
-        out += chunk(b"PLTE", bytes(plte))
+        chunks.append((b"PLTE", b"".join(bytes((r, g, b)) for r, g, b in palette)))
         if trns is not None:
-            out += chunk(b"tRNS", bytes(trns))
-    out += chunk(b"IDAT", zlib.compress(bytes(lines), 6)) + chunk(b"IEND", b"")
-    return out
+            chunks.append((b"tRNS", bytes(trns)))
+    return _png_encode(
+        grid, pack, 1, filter_cycle, bitdepth, 0 if gray else 3, interlace, chunks
+    )
 
 
 # ------------------------------------------------------------- JPEG
@@ -836,8 +880,6 @@ def decode_jpeg(data: bytes):
     need a production codec and raise NotImplementedError. Reference decode analog:
     reference/datasets/videoset.py:66-95 (cv2 over compressed frames)
     — the same decode step, zero third-party deps."""
-    import struct
-
     import numpy as np
 
     if len(data) < 4 or data[:2] != b"\xff\xd8":
@@ -1042,6 +1084,121 @@ def decode_jpeg(data: bytes):
     return {"width": width, "height": height, "bpp": 24, "pixels": px3}
 
 
+class _JpegWriter:
+    """The byte layer the four JPEG encoders share: SOI on creation,
+    marker segments, MSB-first entropy bits with 0xFF00 stuffing, 1-bit
+    padding to a byte boundary, RSTn markers numbered from 0 in each
+    scan, and EOI."""
+
+    def __init__(self) -> None:
+        self.out = bytearray(b"\xff\xd8")
+        self.acc = self.nbits = self.rst = 0
+
+    def seg(self, marker: int, payload: bytes) -> None:
+        self.out += struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+    def sof(
+        self, marker: int, precision: int, width: int, height: int, sampling
+    ) -> None:
+        """Frame header: components 1..n with the (h << 4) | v bytes in
+        ``sampling``, all on quant table 0."""
+        payload = struct.pack(">BHHB", precision, height, width, len(sampling))
+        for cid, hv in enumerate(sampling, 1):
+            payload += bytes([cid, hv, 0])
+        self.seg(marker, payload)
+
+    def dht(self, tc_th: int, bits, vals) -> None:
+        self.seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
+
+    def sos(self, comp_ids: list[int], ss: int, se: int, ah_al: int) -> None:
+        """Scan header, every component on Huffman tables 0."""
+        payload = bytes([len(comp_ids)])
+        for cid in comp_ids:
+            payload += bytes([cid, 0x00])
+        self.seg(0xDA, payload + bytes([ss, se, ah_al]))
+        self.rst = 0
+
+    def put(self, code: int, n: int) -> None:
+        acc = (self.acc << n) | code
+        nb = self.nbits + n
+        while nb >= 8:
+            byte = (acc >> (nb - 8)) & 0xFF
+            self.out.append(byte)
+            if byte == 0xFF:
+                self.out.append(0x00)
+            nb -= 8
+            acc &= (1 << nb) - 1
+        self.acc, self.nbits = acc, nb
+
+    def put_mag(self, v: int, t: int) -> None:
+        """The ``t`` magnitude bits of ``v`` (negatives as v + 2^t - 1,
+        T.81 F.1.2.1)."""
+        if t:
+            self.put(v if v >= 0 else v + (1 << t) - 1, t)
+
+    def put_dc(self, codes: dict, diff: int) -> None:
+        """A difference coded as its size category, then its magnitude."""
+        t = int(diff).bit_length()
+        self.put(*codes[t])
+        self.put_mag(diff, t)
+
+    def pad(self) -> None:
+        if self.nbits:
+            p = 8 - self.nbits
+            self.put((1 << p) - 1, p)
+
+    def restart(self) -> None:
+        self.pad()
+        self.out += bytes([0xFF, 0xD0 | (self.rst % 8)])
+        self.rst += 1
+
+    def finish(self) -> bytes:
+        self.pad()
+        return bytes(self.out + b"\xff\xd9")
+
+
+def _jpeg_dct_writer(
+    sof: int, width: int, height: int, sampling, ac_symbols, restart_interval: int
+):
+    """A writer primed with the header the three DCT encoders share:
+    flat-8 DQT (q00=8 makes flat blocks decode bit-exactly), SOF, the
+    DC (categories 0..11, 4-bit codes) and AC (8-bit codes) DHTs, and
+    DRI when ``restart_interval`` > 0. Returns (writer, dc_codes,
+    ac_codes)."""
+    dc_bits, dc_vals, dc_codes = _jpeg_encoder_tables(tuple(range(12)), 4)
+    ac_bits, ac_vals, ac_codes = _jpeg_encoder_tables(tuple(ac_symbols), 8)
+    w = _JpegWriter()
+    w.seg(0xDB, bytes([0x00]) + bytes([8] * 64))  # quant table 0, flat 8
+    w.sof(sof, 8, width, height, sampling)
+    w.dht(0x00, dc_bits, dc_vals)
+    w.dht(0x10, ac_bits, ac_vals)
+    if restart_interval:
+        w.seg(0xDD, struct.pack(">H", restart_interval))
+    return w, dc_codes, ac_codes
+
+
+def _jpeg_put_block(
+    w: _JpegWriter, dc_codes, ac_codes, pred: list, ci: int, dc: int, acs=()
+) -> None:
+    """One sequential-mode block: the DC difference from component
+    ``ci``'s predictor, the ``(zigzag_k, value)`` ACs as run/size
+    symbols (ZRL for runs over 15), and EOB unless k=63 was coded."""
+    w.put_dc(dc_codes, dc - pred[ci])
+    pred[ci] = dc
+    last = 0
+    for k, av in acs:
+        run = k - last - 1
+        while run > 15:
+            w.put(*ac_codes[0xF0])  # ZRL: 16 zeros
+            run -= 16
+        s = int(av if av >= 0 else -av).bit_length()
+        w.put(*ac_codes[(run << 4) | s])
+        w.put_mag(av, s)
+        last = k
+    if last < 63:
+        w.put(*ac_codes[0x00])  # EOB
+
+
 def synth_jpeg(
     width: int,
     height: int,
@@ -1065,124 +1222,31 @@ def synth_jpeg(
     that many MCUs (byte-aligned pad, predictor reset).
     ``interleaved=False`` emits one full-band SOS PER COMPONENT
     (T.81-legal non-interleaved sequential — each scan walks its
-    component's own block grid), the encoding some real encoders emit
-    for grayscale-heavy or legacy images."""
-    import struct
-
+    component's own block grid, restarts count blocks), the encoding
+    some real encoders emit for grayscale-heavy or legacy images."""
     if width % 8 or height % 8:
         raise ValueError("synth_jpeg needs multiple-of-8 dimensions")
-    dc_bits, dc_vals, dc_codes = _jpeg_encoder_tables(tuple(range(12)), 4)
-    ac_bits, ac_vals, ac_codes = _jpeg_encoder_tables(tuple(_JPEG_AC_SYMBOLS), 8)
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(struct.pack(">BBH", 0xFF, marker, len(payload) + 2))
-        out.extend(payload)
-
-    zz_q = bytes([8] * 64)
-    seg(0xDB, bytes([0x00]) + zz_q)  # quant table 0, flat 8
     ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    for cid in range(1, ncomp + 1):
-        sof += bytes([cid, 0x11, 0])
-    seg(0xC0, sof)
-    seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    if restart_interval:
-        seg(0xDD, struct.pack(">H", restart_interval))
-
-    bitbuf: list[int] = [0, 0]  # acc, nbits
-
-    def put(code: int, n: int) -> None:
-        acc, nb = bitbuf
-        acc = (acc << n) | code
-        nb += n
-        while nb >= 8:
-            byte = (acc >> (nb - 8)) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-            nb -= 8
-            acc &= (1 << nb) - 1
-        bitbuf[0], bitbuf[1] = acc, nb
-
-    def pad_align() -> None:
-        if bitbuf[1]:  # byte-align with 1-bits
-            pad = 8 - bitbuf[1]
-            put((1 << pad) - 1, pad)
-
-    def enc_block(ci: int, bx: int, by: int, pred: list) -> None:
-        vals = block_fn(bx, by)
-        v = vals[0] if (gray or ci == 0) else vals[ci]
-        dc = int(v) - 128  # quantized DC with q00=8: round(8v'/8)
-        diff = dc - pred[ci]
-        pred[ci] = dc
-        t = diff.bit_length() if diff else 0
-        code, ln = dc_codes[t]
-        put(code, ln)
-        if t:
-            put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        acs = ac_fn(bx, by, ci) if ac_fn is not None else []
-        last = 0
-        for k, av in acs:
-            run = k - last - 1
-            while run > 15:
-                zc, zl = ac_codes[0xF0]  # ZRL: 16 zeros
-                put(zc, zl)
-                run -= 16
-            s = int(av if av >= 0 else -av).bit_length()
-            code, ln = ac_codes[(run << 4) | s]
-            put(code, ln)
-            put(av if av >= 0 else av + (1 << s) - 1, s)
-            last = k
-        if last < 63:
-            code, ln = ac_codes[0x00]  # EOB
-            put(code, ln)
-
-    def sos(comp_ids: list[int]) -> None:
-        payload = bytes([len(comp_ids)])
-        for cid in comp_ids:
-            payload += bytes([cid, 0x00])
-        seg(0xDA, payload + bytes([0, 63, 0]))
-
-    if interleaved:
-        sos(list(range(1, ncomp + 1)))
+    w, dc_codes, ac_codes = _jpeg_dct_writer(
+        0xC0, width, height, [0x11] * ncomp, _JPEG_AC_SYMBOLS, restart_interval
+    )
+    bw = width // 8
+    scans = [list(range(ncomp))] if interleaved else [[ci] for ci in range(ncomp)]
+    for comps in scans:
+        w.sos([ci + 1 for ci in comps], 0, 63, 0)
         pred = [0] * ncomp
-        mcu = 0
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    pad_align()
-                    out.extend(
-                        bytes([0xFF, 0xD0 | ((mcu // restart_interval - 1) % 8)])
-                    )
-                    pred = [0] * ncomp
-                mcu += 1
-                for ci in range(ncomp):
-                    enc_block(ci, bx, by, pred)
-        pad_align()
-    else:
-        # one full-band scan per component; restart counts data units
-        for ci in range(ncomp):
-            sos([ci + 1])
-            pred = [0] * ncomp
-            unit = 0
-            for by in range(height // 8):
-                for bx in range(width // 8):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        pad_align()
-                        out.extend(
-                            bytes(
-                                [0xFF, 0xD0 | ((unit // restart_interval - 1) % 8)]
-                            )
-                        )
-                        pred = [0] * ncomp
-                    unit += 1
-                    enc_block(ci, bx, by, pred)
-            pad_align()
-    out.extend(b"\xff\xd9")
-    return bytes(out)
+        for n in range(bw * (height // 8)):
+            if restart_interval and n and n % restart_interval == 0:
+                w.restart()
+                pred = [0] * ncomp
+            by, bx = divmod(n, bw)
+            for ci in comps:
+                vals = block_fn(bx, by)
+                v = vals[0] if (gray or ci == 0) else vals[ci]
+                acs = ac_fn(bx, by, ci) if ac_fn is not None else ()
+                _jpeg_put_block(w, dc_codes, ac_codes, pred, ci, int(v) - 128, acs)
+        w.pad()
+    return w.finish()
 
 
 _JPEG_SAMPLINGS = {"420": (2, 2), "422": (2, 1), "411": (4, 1)}
@@ -1210,8 +1274,6 @@ def synth_jpeg_subsampled(
     lossless — what makes the analytic oracle possible. Dimensions
     must be multiples of the MCU size (16x16 for 4:2:0, 16x8 for
     4:2:2, 32x8 for 4:1:1)."""
-    import struct
-
     if sampling not in _JPEG_SAMPLINGS:
         raise ValueError(f"sampling must be one of {sorted(_JPEG_SAMPLINGS)}")
     hy, vy = _JPEG_SAMPLINGS[sampling]
@@ -1219,77 +1281,26 @@ def synth_jpeg_subsampled(
         raise ValueError(
             f"synth_jpeg_subsampled({sampling}) needs {8*hy}x{8*vy}-multiple dims"
         )
-    dc_bits, dc_vals, dc_codes = _jpeg_encoder_tables(tuple(range(12)), 4)
-    ac_bits, ac_vals, ac_codes = _jpeg_encoder_tables(tuple(_JPEG_AC_SYMBOLS), 8)
-
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(struct.pack(">BBH", 0xFF, marker, len(payload) + 2))
-        out.extend(payload)
-
-    seg(0xDB, bytes([0x00]) + bytes([8] * 64))  # quant table 0, flat 8
-    sof = struct.pack(">BHHB", 8, height, width, 3)
-    sof += bytes([1, (hy << 4) | vy, 0])  # Y subsampled-relative = max
-    sof += bytes([2, 0x11, 0]) + bytes([3, 0x11, 0])  # Cb, Cr
-    seg(0xC0, sof)
-    seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    if restart_interval:
-        seg(0xDD, struct.pack(">H", restart_interval))
-    seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-
-    bitbuf: list[int] = [0, 0]  # acc, nbits
-
-    def put(code: int, n: int) -> None:
-        acc, nb = bitbuf
-        acc = (acc << n) | code
-        nb += n
-        while nb >= 8:
-            byte = (acc >> (nb - 8)) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-            nb -= 8
-            acc &= (1 << nb) - 1
-        bitbuf[0], bitbuf[1] = acc, nb
-
-    eob_code, eob_len = ac_codes[0x00]
-
-    def put_block(ci: int, value: int) -> None:
-        dc = int(value) - 128  # quantized DC with q00=8
-        diff = dc - pred[ci]
-        pred[ci] = dc
-        t = diff.bit_length() if diff else 0
-        code, ln = dc_codes[t]
-        put(code, ln)
-        if t:
-            put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        put(eob_code, eob_len)
-
+    # Y's sampling factors are the maxima, so Cb/Cr ride at 1x1
+    w, dc_codes, ac_codes = _jpeg_dct_writer(
+        0xC0, width, height, [(hy << 4) | vy, 0x11, 0x11], _JPEG_AC_SYMBOLS,
+        restart_interval,
+    )
+    w.sos([1, 2, 3], 0, 63, 0)
     pred = [0, 0, 0]
     mcux, mcuy = width // (8 * hy), height // (8 * vy)
     for m in range(mcux * mcuy):
         my, mx = divmod(m, mcux)
         if restart_interval and m and m % restart_interval == 0:
-            if bitbuf[1]:  # byte-align with 1-bits before the marker
-                pad = 8 - bitbuf[1]
-                put((1 << pad) - 1, pad)
-            out.extend(
-                bytes([0xFF, 0xD0 | ((m // restart_interval - 1) % 8)])
-            )
+            w.restart()
             pred = [0, 0, 0]
         for bv in range(vy):
             for bh in range(hy):
-                put_block(0, y_block_fn(mx * hy + bh, my * vy + bv))
-        cb, cr = chroma_block_fn(mx, my)
-        put_block(1, cb)
-        put_block(2, cr)
-    if bitbuf[1]:
-        pad = 8 - bitbuf[1]
-        put((1 << pad) - 1, pad)
-    out.extend(b"\xff\xd9")
-    return bytes(out)
+                luma = y_block_fn(mx * hy + bh, my * vy + bv)
+                _jpeg_put_block(w, dc_codes, ac_codes, pred, 0, int(luma) - 128)
+        for ci, v in enumerate(chroma_block_fn(mx, my), 1):
+            _jpeg_put_block(w, dc_codes, ac_codes, pred, ci, int(v) - 128)
+    return w.finish()
 
 
 def synth_jpeg_progressive(
@@ -1306,23 +1317,24 @@ def synth_jpeg_progressive(
     refinement (raw bits, Al=0), then per-component non-interleaved AC
     first scans (Ss=1..63, Al=1, EOB-run coding) and AC refinement
     scans (Ah=1, Al=0: newly-significant ±1 placement + correction
-    bits, mirroring T.81 G.1.2). The entropy layer shares NOTHING with
-    the baseline writer, so baseline-vs-progressive pixel parity on the
-    same coefficients is a meaningful cross-check of the progressive
-    decode path. With q00=8 flat DC-only blocks decode bit-exactly
-    (the same analytic-oracle property as synth_jpeg; the Al=1 DC
-    split is lossless: (dc>>1)<<1 | (dc&1) == dc). ``restart_interval``
-    emits DRI + per-scan RSTn markers with predictor/EOB-run reset."""
-    import struct
-
+    bits, mirroring T.81 G.1.2). Only the byte layer (segments, bit
+    stuffing, padding, RSTn) is shared with the baseline writer; the
+    scan script and its entropy coding are separate, so
+    baseline-vs-progressive pixel parity on the same coefficients is a
+    meaningful cross-check of the progressive decode path. With q00=8
+    flat DC-only blocks decode bit-exactly (the same analytic-oracle
+    property as synth_jpeg; the Al=1 DC split is lossless:
+    (dc>>1)<<1 | (dc&1) == dc). ``restart_interval`` emits DRI +
+    per-scan RSTn markers with predictor/EOB-run reset."""
     if width % 8 or height % 8:
         raise ValueError("synth_jpeg_progressive needs multiple-of-8 dimensions")
-    dc_bits, dc_vals, dc_codes = _jpeg_encoder_tables(tuple(range(12)), 4)
-    # progressive AC alphabet adds EOBn (r<<4, r<15) to run/size + ZRL
-    ac_syms = tuple((r << 4) | s for r in range(16) for s in range(0, 11))
-    ac_bits, ac_vals, ac_codes = _jpeg_encoder_tables(ac_syms, 8)
-
     ncomp = 1 if gray else 3
+    # progressive AC alphabet adds EOBn (r<<4, r<15) to run/size + ZRL
+    ac_syms = [(r << 4) | s for r in range(16) for s in range(0, 11)]
+    w, dc_codes, ac_codes = _jpeg_dct_writer(
+        0xC2, width, height, [0x11] * ncomp, ac_syms, restart_interval
+    )
+
     bw, bh = width // 8, height // 8
     # quantized coefficients per component per block (zigzag index)
     dc = [[0] * (bh * bw) for _ in range(ncomp)]
@@ -1337,122 +1349,66 @@ def synth_jpeg_progressive(
                 if ac_fn is not None:
                     ac[ci][n] = {k: av for k, av in ac_fn(bx, by, ci) if av}
 
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(struct.pack(">BBH", 0xFF, marker, len(payload) + 2))
-        out.extend(payload)
-
-    seg(0xDB, bytes([0x00]) + bytes([8] * 64))
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    for cid in range(1, ncomp + 1):
-        sof += bytes([cid, 0x11, 0])
-    seg(0xC2, sof)  # SOF2: progressive DCT
-    seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    if restart_interval:
-        seg(0xDD, struct.pack(">H", restart_interval))
-
-    bitbuf: list[int] = [0, 0]  # acc, nbits
-
-    def put(code: int, n: int) -> None:
-        acc, nb = bitbuf
-        acc = (acc << n) | code
-        nb += n
-        while nb >= 8:
-            byte = (acc >> (nb - 8)) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-            nb -= 8
-            acc &= (1 << nb) - 1
-        bitbuf[0], bitbuf[1] = acc, nb
-
-    def pad() -> None:
-        if bitbuf[1]:
-            p = 8 - bitbuf[1]
-            put((1 << p) - 1, p)
-
-    rst = [0]
-
-    def restart() -> None:
-        pad()
-        out.extend(bytes([0xFF, 0xD0 | (rst[0] % 8)]))
-        rst[0] += 1
-
-    def sos(comp_ids: list[int], ss: int, se: int, ah: int, al: int) -> None:
-        payload = bytes([len(comp_ids)])
-        for cid in comp_ids:
-            payload += bytes([cid, 0x00])
-        payload += bytes([ss, se, (ah << 4) | al])
-        seg(0xDA, payload)
-        rst[0] = 0
-
     def put_huff(sym: int) -> None:
-        code, ln = ac_codes[sym]
-        put(code, ln)
+        w.put(*ac_codes[sym])
 
+    def flush_eob(run: list, pending: list) -> None:
+        """Emit the open EOB run as one EOBn symbol + its extra bits,
+        then the correction bits its blocks owe (refinement only)."""
+        if not run[0]:
+            return
+        if run[0] > 32767:
+            raise ValueError("EOB run exceeds a single EOBn symbol")
+        cat = run[0].bit_length() - 1
+        put_huff(cat << 4)
+        if cat:
+            w.put(run[0] - (1 << cat), cat)
+        for b in pending:
+            w.put(b, 1)
+        pending.clear()
+        run[0] = 0
+
+    all_ids = list(range(1, ncomp + 1))
     # --- scan 1: DC first, interleaved, Al=1 (arithmetic-shift PT) ---
-    sos(list(range(1, ncomp + 1)), 0, 0, 0, 1)
+    w.sos(all_ids, 0, 0, 0x01)
     pred = [0] * ncomp
     for n in range(bh * bw):
         if restart_interval and n and n % restart_interval == 0:
-            restart()
+            w.restart()
             pred = [0] * ncomp
         for ci in range(ncomp):
             v = dc[ci][n] >> 1
-            diff = v - pred[ci]
+            w.put_dc(dc_codes, v - pred[ci])
             pred[ci] = v
-            t = (diff if diff >= 0 else -diff).bit_length()
-            code, ln = dc_codes[t]
-            put(code, ln)
-            if t:
-                put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    pad()
+    w.pad()
 
     # --- scan 2: DC refinement, Al=0 — one raw bit per block/comp ---
-    sos(list(range(1, ncomp + 1)), 0, 0, 1, 0)
+    w.sos(all_ids, 0, 0, 0x10)
     for n in range(bh * bw):
         if restart_interval and n and n % restart_interval == 0:
-            restart()
+            w.restart()
         for ci in range(ncomp):
-            put(dc[ci][n] & 1, 1)
-    pad()
+            w.put(dc[ci][n] & 1, 1)
+    w.pad()
 
     def pt(v: int, al: int) -> int:  # AC point transform: sign-magnitude
         return -((-v) >> al) if v < 0 else v >> al
 
     # --- scans 3..: per-component AC first (Ss=1, Se=63, Al=1) ---
     for ci in range(ncomp):
-        sos([ci + 1], 1, 63, 0, 1)
-        run = [0]
-
-        def flush_eob(run=run, pending=None):
-            if not run[0]:
-                return
-            if run[0] > 32767:
-                raise ValueError("EOB run exceeds a single EOBn symbol")
-            cat = run[0].bit_length() - 1
-            put_huff(cat << 4)
-            if cat:
-                put(run[0] - (1 << cat), cat)
-            if pending:
-                for b in pending:
-                    put(b, 1)
-                pending.clear()
-            run[0] = 0
-
+        w.sos([ci + 1], 1, 63, 0x01)
+        run, pending = [0], []
         for n in range(bh * bw):
             if restart_interval and n and n % restart_interval == 0:
-                flush_eob()
-                restart()
+                flush_eob(run, pending)
+                w.restart()
             vals = sorted(
                 (k, pt(v, 1)) for k, v in ac[ci][n].items() if pt(v, 1) != 0
             )
             if not vals:
                 run[0] += 1
                 continue
-            flush_eob()
+            flush_eob(run, pending)
             last = 0
             for k, av in vals:
                 zeros = k - last - 1
@@ -1461,36 +1417,21 @@ def synth_jpeg_progressive(
                     zeros -= 16
                 s = (av if av >= 0 else -av).bit_length()
                 put_huff((zeros << 4) | s)
-                put(av if av >= 0 else av + (1 << s) - 1, s)
+                w.put_mag(av, s)
                 last = k
             if last < 63:
                 run[0] += 1
-        flush_eob()
-        pad()
+        flush_eob(run, pending)
+        w.pad()
 
     # --- final scans: per-component AC refinement (Ah=1, Al=0) ---
     for ci in range(ncomp):
-        sos([ci + 1], 1, 63, 1, 0)
+        w.sos([ci + 1], 1, 63, 0x10)
         run, pending = [0], []
-
-        def flush_eob(run=run, pending=pending):
-            if not run[0]:
-                return
-            if run[0] > 32767:
-                raise ValueError("EOB run exceeds a single EOBn symbol")
-            cat = run[0].bit_length() - 1
-            put_huff(cat << 4)
-            if cat:
-                put(run[0] - (1 << cat), cat)
-            for b in pending:
-                put(b, 1)
-            pending.clear()
-            run[0] = 0
-
         for n in range(bh * bw):
             if restart_interval and n and n % restart_interval == 0:
-                flush_eob()
-                restart()
+                flush_eob(run, pending)
+                w.restart()
             t = ac[ci][n]
             hist = {k for k, v in t.items() if pt(v, 1)}
             newly = {k for k, v in t.items() if k not in hist and abs(v) == 1}
@@ -1500,7 +1441,7 @@ def synth_jpeg_progressive(
                 run[0] += 1
                 pending.extend(abs(t[k]) & 1 for k in sorted(hist))
                 continue
-            flush_eob()
+            flush_eob(run, pending)
             last_new = max(newly)
             k, zeros, bits = 1, 0, []
             while k <= last_new:
@@ -1508,16 +1449,16 @@ def synth_jpeg_progressive(
                     # symbol, then sign bit, then the correction bits
                     # the decoder reads while advancing (T.81 order)
                     put_huff((zeros << 4) | 1)
-                    put(1 if t[k] > 0 else 0, 1)
+                    w.put(1 if t[k] > 0 else 0, 1)
                     for b in bits:
-                        put(b, 1)
+                        w.put(b, 1)
                     zeros, bits = 0, []
                 elif k in hist:
                     bits.append(abs(t[k]) & 1)
                 elif zeros == 15:
                     put_huff(0xF0)  # ZRL consumes this 16th zero-history
                     for b in bits:
-                        put(b, 1)
+                        w.put(b, 1)
                     zeros, bits = 0, []
                 else:
                     zeros += 1
@@ -1526,11 +1467,10 @@ def synth_jpeg_progressive(
                 # tail of this block opens an EOB run
                 run[0] += 1
                 pending.extend(abs(t[k]) & 1 for k in sorted(hist) if k > last_new)
-        flush_eob()
-        pad()
+        flush_eob(run, pending)
+        w.pad()
 
-    out.extend(b"\xff\xd9")
-    return bytes(out)
+    return w.finish()
 
 
 def decode_image(data: bytes):
@@ -1538,16 +1478,15 @@ def decode_image(data: bytes):
     24-bit BMP via stdlib ``struct`` (BITMAPFILEHEADER + BITMAPINFOHEADER
     + bottom-up padded BGR rows) and compressed PNG via
     :func:`decode_png` (stdlib zlib + full filter reconstruction) →
-    dict(width, height, bpp, pixels HxWxC uint8, RGB/RGBA), plus
-    sequential AND progressive JPEG via :func:`decode_jpeg`.
-    The reference decodes frames with cv2
-    (reference/datasets/videoset.py:66-95); all paths here are
-    stdlib-only, real, and oracle-checked (``multimodal_image``,
-    ``multimodal_png``, ``multimodal_jpeg``, ``multimodal_jpeg_prog``).
-    Subsampled-chroma JPEG still needs a production codec and raises
+    dict(width, height, bpp, pixels HxWxC uint8, RGB/RGBA), plus JPEG
+    via :func:`decode_jpeg` (sequential, progressive and lossless;
+    grayscale, 4:4:4 and 4:2:0/4:2:2/4:1:1 chroma) and GIF via
+    :func:`decode_gif` (first composited frame). The reference decodes
+    frames with cv2 (reference/datasets/videoset.py:66-95); all paths
+    here are stdlib-only, real, and oracle-checked
+    (``multimodal_image``, ``multimodal_png*``, ``multimodal_jpeg*``).
+    Other containers and the hierarchical/arithmetic JPEG modes raise
     NotImplementedError."""
-    import struct
-
     import numpy as np
 
     if len(data) >= 8 and data[:8] == _PNG_SIG:
@@ -1592,8 +1531,6 @@ def synth_bmp(width: int, height: int, pixel_fn) -> bytes:
     24-bit BMP blob (struct-packed headers, 4-byte-padded BGR rows) —
     the deterministic generator behind the image fixtures and the
     ``multimodal_image`` registry row."""
-    import struct
-
     row_stride = (width * 3 + 3) & ~3
     img_size = row_stride * height
     out = bytearray()
@@ -1630,46 +1567,28 @@ def image_meta(
     id_col: str = "doc_id",
     resize_to: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Arrow-batched REAL decode of a BMP binary column →
+    """Arrow-batched REAL decode of an image binary column (any
+    container :func:`decode_image` reads) →
     (doc_id, width, height, bpp, sum_r, sum_g, sum_b[, rs_sum_r,
     rs_sum_g, rs_sum_b]): header metadata plus integer channel sums
     (exact cross-engine hashes), optionally after a real
-    nearest-neighbor resize. Undecodable blobs yield null rows (P9)."""
-    import numpy as np
-
-    cols = ["width", "height", "bpp", "sum_r", "sum_g", "sum_b"]
+    nearest-neighbor resize. Undecodable blobs yield null rows (P9,
+    :func:`map_blobs`)."""
+    cols = ["sum_r", "sum_g", "sum_b"]
     if resize_to is not None:
         cols += ["rs_sum_r", "rs_sum_g", "rs_sum_b"]
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {c: [] for c in ["doc_id", *cols]}
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                rows["doc_id"].append(i)
-                try:
-                    d = decode_image(bytes(b))
-                except Exception:
-                    for c in cols:
-                        rows[c].append(None)
-                    continue
-                px = d["pixels"].astype(np.int64)
-                rows["width"].append(d["width"])
-                rows["height"].append(d["height"])
-                rows["bpp"].append(d["bpp"])
-                for k, c in enumerate(("sum_r", "sum_g", "sum_b")):
-                    rows[c].append(int(px[:, :, k].sum()))
-                if resize_to is not None:
-                    rs = resize_nearest(d["pixels"], *resize_to).astype(np.int64)
-                    for k, c in enumerate(("rs_sum_r", "rs_sum_g", "rs_sum_b")):
-                        rows[c].append(int(rs[:, :, k].sum()))
-            yield pd.DataFrame(rows)
+    def fn(b):
+        d = decode_image(b)
+        row = (d["width"], d["height"], d["bpp"], *_rgb_sums(d["pixels"]))
+        if resize_to is not None:
+            row += _rgb_sums(resize_nearest(d["pixels"], *resize_to))
+        return [row]
 
     schema = "doc_id long, width int, height int, bpp int, " + ", ".join(
-        f"{c} long" for c in cols[3:]
+        f"{c} long" for c in cols
     )
-    return df.select(F.col(id_col), F.col(media_col)).mapInPandas(
-        _batches, schema=schema
-    )
+    return map_blobs(df, id_col, media_col, schema, fn)
 
 
 def decode_audio(data: bytes) -> dict:
@@ -1700,7 +1619,6 @@ def synth_wav(sample_rate: int, channels: int, frames) -> bytes:
     — the deterministic generator behind the audio test fixtures and
     the ``multimodal_audio`` registry row."""
     import io
-    import struct
     import wave as wavelib
 
     flat = []
@@ -1726,44 +1644,23 @@ def audio_meta(
     sum_abs, peak): header metadata plus integer amplitude aggregates
     over the decoded PCM (integers so cross-engine hashes are exact).
     Null/empty blobs yield a null-metadata row rather than failing the
-    batch (the engine's P9 frame-validity policy)."""
+    batch (the engine's P9 frame-validity policy, :func:`map_blobs`)."""
     import numpy as np
 
-    cols = [
-        "sample_rate", "channels", "sample_width", "n_frames",
-        "duration_ms", "sum_abs", "peak",
-    ]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {c: [] for c in ["doc_id", *cols]}
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                rows["doc_id"].append(i)
-                try:
-                    d = decode_audio(bytes(b))
-                except Exception:
-                    for c in cols:
-                        rows[c].append(None)
-                    continue
-                pcm = np.frombuffer(d["pcm"], dtype="<i2").astype("int64")
-                rows["sample_rate"].append(d["sample_rate"])
-                rows["channels"].append(d["channels"])
-                rows["sample_width"].append(d["sample_width"])
-                rows["n_frames"].append(d["n_frames"])
-                rows["duration_ms"].append(
-                    d["n_frames"] * 1000 // d["sample_rate"]
-                )
-                rows["sum_abs"].append(int(np.abs(pcm).sum()))
-                rows["peak"].append(int(np.abs(pcm).max()) if len(pcm) else 0)
-            yield pd.DataFrame(rows)
+    def fn(b):
+        d = decode_audio(b)
+        pcm = np.abs(np.frombuffer(d["pcm"], dtype="<i2").astype("int64"))
+        return [(
+            d["sample_rate"], d["channels"], d["sample_width"], d["n_frames"],
+            d["n_frames"] * 1000 // d["sample_rate"],
+            int(pcm.sum()), int(pcm.max()) if len(pcm) else 0,
+        )]
 
     schema = (
         "doc_id long, sample_rate int, channels int, sample_width int, "
         "n_frames long, duration_ms long, sum_abs long, peak int"
     )
-    return df.select(F.col(id_col), F.col(media_col)).mapInPandas(
-        _batches, schema=schema
-    )
+    return map_blobs(df, id_col, media_col, schema, fn)
 
 
 def fake_feature(n_bytes: int, k: int = 4) -> list[float]:
@@ -1786,34 +1683,30 @@ def frame_sample(
     stands in for a decoded frame; fast = ``num_frames`` evenly-strided
     frames, slow = ``num_frames/alpha`` (pad-repeat-last when short).
     Output one row per (id, pathway, frame_idx) with the frame's md5 —
-    exactly the explode shape a real decoder would feed downstream."""
+    exactly the explode shape a real decoder would feed downstream. A
+    null blob samples as an empty one. Parameters are validated
+    eagerly, as in :func:`video_features`."""
+    _check_rates(num_frames, alpha)
+    if frame_bytes < 1:
+        raise ValueError(f"frame_bytes must be >= 1, got {frame_bytes}")
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def sample(b: bytes, k: int) -> list[bytes]:
-            frames = [b[i:i + frame_bytes] for i in range(0, len(b), frame_bytes)] or [b""]
-            # shared stride sampler (pad-repeat-last, test_net.py:126-136)
-            # — identical source indices to video_features' real decode
-            return [frames[i] for i in sample_indices(len(frames), k)]
+    def fn(b):
+        b = b or b""
+        frames = [b[i:i + frame_bytes] for i in range(0, len(b), frame_bytes)] or [b""]
+        # shared stride sampler (pad-repeat-last, test_net.py:126-136)
+        # — identical source indices to video_features' real decode;
+        # digest over the UPPERCASE HEX of the bytes, so SQL oracles
+        # stay byte-accurate on non-ASCII content (md5 in DuckDB/most
+        # engines takes strings only)
+        return [
+            (pathway, j, hashlib.md5(frames[src].hex().upper().encode()).hexdigest())
+            for pathway, k in (("fast", num_frames), ("slow", num_frames // alpha))
+            for j, src in enumerate(sample_indices(len(frames), k))
+        ]
 
-        for pdf in it:
-            rows = {"doc_id": [], "pathway": [], "frame_idx": [], "frame_md5": []}
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                b = bytes(b) if b is not None else b""
-                for pathway, k in (("fast", num_frames), ("slow", num_frames // alpha)):
-                    for j, fr in enumerate(sample(b, k)):
-                        rows["doc_id"].append(i)
-                        rows["pathway"].append(pathway)
-                        rows["frame_idx"].append(j)
-                        # digest over the UPPERCASE HEX of the bytes, so SQL
-                        # oracles stay byte-accurate on non-ASCII content
-                        # (md5 in DuckDB/most engines takes strings only)
-                        rows["frame_md5"].append(
-                            hashlib.md5(fr.hex().upper().encode()).hexdigest()
-                        )
-            yield pd.DataFrame(rows)
-
-    return df.select(F.col(id_col), F.col(media_col)).mapInPandas(
-        _batches, schema="doc_id long, pathway string, frame_idx int, frame_md5 string"
+    return map_blobs(
+        df, id_col, media_col,
+        "doc_id long, pathway string, frame_idx int, frame_md5 string", fn,
     )
 
 
@@ -1829,8 +1722,6 @@ def synth_avi(frames: list[bytes], width: int, height: int, fps: int = 10) -> by
     parsing inside cv2.VideoCapture, reference/datasets/videoset.py:
     72-103); the synthetic AVIs exercise the engine's parser
     byte-for-byte."""
-    import struct
-
     def chunk(fourcc: bytes, payload: bytes) -> bytes:
         pad = b"\x00" if len(payload) % 2 else b""
         return fourcc + struct.pack("<I", len(payload)) + payload + pad
@@ -1880,8 +1771,6 @@ def decode_avi(data: bytes) -> dict:
     (MJPEG = a baseline JPEG per frame). Non-MJPEG codecs raise
     NotImplementedError. Reference analog: cv2.VideoCapture's demux +
     per-frame decode, reference/datasets/videoset.py:72-103."""
-    import struct
-
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI container")
     width = height = n_frames = None
@@ -1962,90 +1851,55 @@ def video_features(
     (:func:`decode_jpeg` — only sampled frames pay the pixel decode,
     exactly the reference's frame-seek discipline), and emit one row
     per (doc, pathway, frame_idx) with the frame's exact integer RGB
-    sums. Undecodable blobs yield a single null row (P9 guard) —
-    but PARAMETER errors are validated eagerly and raise, so a typo
-    (``num_frames < alpha`` → zero slow frames) cannot masquerade as
-    an entire corpus of undecodable media."""
-    import numpy as np
+    sums. An undecodable blob — a bad container or ANY bad sampled
+    frame — yields a single null row and no frame rows (P9,
+    :func:`map_blobs`), but PARAMETER errors are validated eagerly and
+    raise, so a typo (``num_frames < alpha`` → zero slow frames) cannot
+    masquerade as an entire corpus of undecodable media."""
+    _check_rates(num_frames, alpha)
 
+    def fn(b):
+        v = decode_avi(b)
+        decoded: dict[int, dict] = {}
+        rows = []
+        for pathway, k in (("fast", num_frames), ("slow", num_frames // alpha)):
+            for j, src in enumerate(sample_indices(v["n_frames"], k)):
+                if src not in decoded:
+                    decoded[src] = decode_jpeg(v["frames"][src])
+                d = decoded[src]
+                rows.append((pathway, j, src, d["width"], d["height"], d["bpp"],
+                             *_rgb_sums(d["pixels"])))
+        return rows
+
+    schema = (
+        "doc_id long, pathway string, frame_idx int, src_frame int, "
+        "width int, height int, bpp int, sum_r long, sum_g long, sum_b long"
+    )
+    return map_blobs(df, id_col, media_col, schema, fn)
+
+
+def _check_rates(num_frames: int, alpha: int) -> None:
     if num_frames // alpha < 1:
         raise ValueError(
             f"num_frames // alpha must be >= 1 (got {num_frames}//{alpha}) — "
             "the slow pathway would sample zero frames"
         )
 
-    val_cols = ["pathway", "frame_idx", "src_frame", "width", "height",
-                "bpp", "sum_r", "sum_g", "sum_b"]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in ["doc_id", *val_cols]}
-
-            def emit(doc_id, **kv):
-                rows["doc_id"].append(doc_id)
-                for c in val_cols:
-                    rows[c].append(kv.get(c))
-
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    v = decode_avi(bytes(b))
-                    decoded: dict[int, dict] = {}
-                    for pathway, k in (("fast", num_frames),
-                                       ("slow", num_frames // alpha)):
-                        for j, src in enumerate(sample_indices(v["n_frames"], k)):
-                            if src not in decoded:
-                                decoded[src] = decode_jpeg(v["frames"][src])
-                            d = decoded[src]
-                            px = d["pixels"].astype(np.int64)
-                            emit(
-                                i, pathway=pathway, frame_idx=j, src_frame=src,
-                                width=d["width"], height=d["height"], bpp=d["bpp"],
-                                sum_r=int(px[:, :, 0].sum()),
-                                sum_g=int(px[:, :, 1].sum()),
-                                sum_b=int(px[:, :, 2].sum()),
-                            )
-                except Exception:
-                    emit(i)
-            yield pd.DataFrame(rows)
-
-    schema = (
-        "doc_id long, pathway string, frame_idx int, src_frame int, "
-        "width int, height int, bpp int, sum_r long, sum_g long, sum_b long"
-    )
-    return df.select(F.col(id_col), F.col(media_col)).mapInPandas(
-        _batches, schema=schema
-    )
-
 
 def media_meta(df: DataFrame, media_col: str = "media", id_col: str = "doc_id") -> DataFrame:
     """Arrow-batched metadata + (fake) feature extraction over a binary
-    media column: byte length, md5 digest, 4-dim feature."""
+    media column: byte length, md5 digest, 4-dim feature. A null blob
+    gives n_bytes 0 and a null digest."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            media = pdf[media_col]
-            n = media.map(lambda b: len(b) if b is not None else 0)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": n.astype("int64"),
-                    # md5 of the uppercase hex (portable to string-only
-                    # md5 implementations, byte-accurate on any content)
-                    "digest": media.map(
-                        lambda b: hashlib.md5(b.hex().upper().encode()).hexdigest()
-                        if b is not None
-                        else None
-                    ),
-                }
-            )
-            feats = n.map(fake_feature)
-            for i in range(4):
-                out[f"f{i + 1}"] = feats.map(lambda v, i=i: v[i])
-            yield out
+    def fn(b):
+        if b is None:
+            return [(0, None, *fake_feature(0))]
+        # md5 of the uppercase hex (portable to string-only md5
+        # implementations, byte-accurate on any content)
+        digest = hashlib.md5(b.hex().upper().encode()).hexdigest()
+        return [(len(b), digest, *fake_feature(len(b)))]
 
-    return df.select(F.col(id_col), F.col(media_col)).mapInPandas(
-        _batches, schema=META_SCHEMA
-    )
+    return map_blobs(df, id_col, media_col, META_SCHEMA, fn)
 
 
 # --- GIF (LZW) -------------------------------------------------------
@@ -2212,8 +2066,6 @@ def synth_gif(
     interlace) and a real LZW-compressed codestream in 255-byte
     sub-blocks. The deterministic generator behind the
     ``multimodal_gif`` registry row and the codec round-trip tests."""
-    import struct
-
     import numpy as np
 
     frames = [np.asarray(fr, dtype=np.int64) for fr in frames]
@@ -2274,8 +2126,6 @@ def decode_gif(data: bytes) -> dict:
     restore-to-previous) → dict(width, height, n_frames,
     frames=[HxWx3 uint8 composited canvases], delays). Reference decode
     analog: reference/datasets/videoset.py:66-95."""
-    import struct
-
     import numpy as np
 
     if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
@@ -2378,50 +2228,27 @@ def gif_features(
     df: DataFrame, media_col: str = "media", id_col: str = "doc_id"
 ) -> DataFrame:
     """REAL animated-GIF decode → per-frame channel sums, Arrow-batched
-    (:func:`decode_gif` over ``mapInPandas``): one output row per
+    (:func:`decode_gif` over :func:`map_blobs`): one output row per
     (doc, frame) with the composited frame's exact integer RGB sums.
     Undecodable blobs yield a single null row (the P9 frame-validity
-    guard). The binary column crosses the JVM↔Python boundary once per
-    Arrow batch; decode parallelism is the DataFrame's partitioning, so
-    the operator scales with executors exactly like the reference's
-    per-clip decode loop (reference/datasets/videoset.py:66-103)."""
-    import numpy as np
+    rule). The binary column crosses the JVM↔Python
+    boundary once per Arrow batch; decode parallelism is the
+    DataFrame's partitioning, so the operator scales with executors
+    exactly like the reference's per-clip decode loop
+    (reference/datasets/videoset.py:66-103)."""
 
-    val_cols = ["frame_idx", "width", "height", "n_frames",
-                "sum_r", "sum_g", "sum_b"]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in ["doc_id", *val_cols]}
-
-            def emit(doc_id, **kv):
-                rows["doc_id"].append(doc_id)
-                for c in val_cols:
-                    rows[c].append(kv.get(c))
-
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                try:
-                    g = decode_gif(bytes(b))
-                    for j, fr in enumerate(g["frames"]):
-                        px = fr.astype(np.int64)
-                        emit(
-                            i, frame_idx=j, width=g["width"],
-                            height=g["height"], n_frames=g["n_frames"],
-                            sum_r=int(px[:, :, 0].sum()),
-                            sum_g=int(px[:, :, 1].sum()),
-                            sum_b=int(px[:, :, 2].sum()),
-                        )
-                except Exception:
-                    emit(i)
-            yield pd.DataFrame(rows)
+    def fn(b):
+        g = decode_gif(b)
+        return [
+            (j, g["width"], g["height"], g["n_frames"], *_rgb_sums(fr))
+            for j, fr in enumerate(g["frames"])
+        ]
 
     schema = (
         "doc_id long, frame_idx int, width int, height int, "
         "n_frames int, sum_r long, sum_g long, sum_b long"
     )
-    return df.select(F.col(id_col), F.col(media_col)).mapInPandas(
-        _batches, schema=schema
-    )
+    return map_blobs(df, id_col, media_col, schema, fn)
 
 
 def audio_spectral(
@@ -2437,50 +2264,33 @@ def audio_spectral(
     an exact bin the argmax is exact regardless of float noise, which
     is what makes the ``audio_spectral`` registry row hash-checkable:
     every output is an integer (bins, counts) except the ratio, which
-    is rounded. Batches stream through mapInPandas (one numpy rFFT per
-    clip, vectorized); null/corrupt blobs yield a null row (P9
-    policy)."""
+    is rounded. Batches stream through :func:`map_blobs` (one numpy
+    rFFT per clip, vectorized); null/corrupt/empty blobs yield a null
+    row (P9 policy)."""
     import numpy as np
 
-    cols = ["n_samples", "dom_bin", "second_bin", "dom_ratio_pct"]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {c: [] for c in ["doc_id", *cols]}
-            for i, b in zip(pdf[id_col], pdf[media_col]):
-                rows["doc_id"].append(i)
-                try:
-                    d = decode_audio(bytes(b))
-                    pcm = np.frombuffer(d["pcm"], dtype="<i2").astype(
-                        "float64"
-                    )
-                    ch = d["channels"]
-                    if ch > 1:
-                        pcm = pcm.reshape(-1, ch).mean(axis=1)
-                    if not len(pcm):
-                        raise ValueError("empty clip")
-                except Exception:
-                    for c in cols:
-                        rows[c].append(None)
-                    continue
-                mag = np.abs(np.fft.rfft(pcm))
-                mag[0] = 0.0  # DC carries synthesis offset, not tone
-                order = np.argsort(-mag, kind="stable")
-                dom = int(order[0])
-                second = int(order[1]) if len(order) > 1 else None
-                tot = float(mag.sum())
-                ratio = int(round(100.0 * float(mag[dom]) / tot)) if tot > 0 else 0
-                rows["n_samples"].append(len(pcm))
-                rows["dom_bin"].append(dom)
-                rows["second_bin"].append(second)
-                rows["dom_ratio_pct"].append(ratio)
-            yield pd.DataFrame(rows)
+    def fn(b):
+        d = decode_audio(b)
+        pcm = np.frombuffer(d["pcm"], dtype="<i2").astype("float64")
+        ch = d["channels"]
+        if ch > 1:
+            pcm = pcm.reshape(-1, ch).mean(axis=1)
+        if not len(pcm):
+            raise ValueError("empty clip")
+        mag = np.abs(np.fft.rfft(pcm))
+        mag[0] = 0.0  # DC carries synthesis offset, not tone
+        order = np.argsort(-mag, kind="stable")
+        dom = int(order[0])
+        second = int(order[1]) if len(order) > 1 else None
+        tot = float(mag.sum())
+        ratio = int(round(100.0 * float(mag[dom]) / tot)) if tot > 0 else 0
+        return [(len(pcm), dom, second, ratio)]
 
     schema = (
         "doc_id long, n_samples int, dom_bin int, second_bin int, "
         "dom_ratio_pct int"
     )
-    return df.select(id_col, media_col).mapInPandas(_batches, schema)
+    return map_blobs(df, id_col, media_col, schema, fn)
 
 
 def _jpeg_lossless_predict(
@@ -2553,40 +2363,11 @@ def synth_jpeg_lossless(
     samples bit-for-bit (tests assert it), which is what lets the
     ``multimodal_jpeg_lossless`` oracle recompute aggregates
     analytically."""
-    import struct
-
     dc_bits, dc_vals, codes = _jpeg_encoder_tables(tuple(range(17)), 5)
-    out = bytearray(b"\xff\xd8")
-
-    def seg(marker: int, payload: bytes) -> None:
-        out.extend(struct.pack(">BBH", 0xFF, marker, len(payload) + 2))
-        out.extend(payload)
-
-    sof = struct.pack(">BHHB", precision, height, width, ncomp)
-    for cid in range(1, ncomp + 1):
-        sof += bytes([cid, 0x11, 0])
-    seg(0xC3, sof)
-    seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    sos = bytes([ncomp])
-    for cid in range(1, ncomp + 1):
-        sos += bytes([cid, 0x00])
-    sos += bytes([predictor, 0, pt])
-    seg(0xDA, sos)
-
-    bitbuf: list[int] = [0, 0]
-
-    def put(code: int, n: int) -> None:
-        acc, nb = bitbuf
-        acc = (acc << n) | code
-        nb += n
-        while nb >= 8:
-            byte = (acc >> (nb - 8)) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-            nb -= 8
-            acc &= (1 << nb) - 1
-        bitbuf[0], bitbuf[1] = acc, nb
+    w = _JpegWriter()
+    w.sof(0xC3, precision, width, height, [0x11] * ncomp)
+    w.dht(0x00, dc_bits, dc_vals)
+    w.sos(list(range(1, ncomp + 1)), predictor, 0, pt)
 
     default = 1 << (precision - pt - 1)
     planes = [
@@ -2604,15 +2385,7 @@ def synth_jpeg_lossless(
                 if diff >= 32768 and diff != 32768:
                     diff -= 65536
                 if diff == 32768:
-                    put(*codes[16])
-                    continue
-                t = abs(diff).bit_length()
-                put(*codes[t])
-                if t:
-                    v = diff if diff >= 0 else diff + (1 << t) - 1
-                    put(v & ((1 << t) - 1), t)
-    if bitbuf[1]:
-        pad = 8 - bitbuf[1]
-        put((1 << pad) - 1, pad)
-    out.extend(b"\xff\xd9")
-    return bytes(out)
+                    w.put(*codes[16])  # SSSS=16: no magnitude bits
+                else:
+                    w.put_dc(codes, diff)
+    return w.finish()

@@ -12,6 +12,7 @@ Keys map to the SURVEY §2 inventory in the comments.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -29,6 +30,7 @@ from slowfast_feature_extractor_spark.functions.timeutil import epoch_us
 from slowfast_feature_extractor_spark.functions.vector import cosine_similarity
 from slowfast_feature_extractor_spark.operators import dedup as DD
 from slowfast_feature_extractor_spark.operators import maintenance as MT
+from slowfast_feature_extractor_spark.operators import multimodal as MM
 from slowfast_feature_extractor_spark.operators import similarity as SIM
 from slowfast_feature_extractor_spark.operators.asof_join import asof_join
 from slowfast_feature_extractor_spark.operators.sessionize import (
@@ -63,6 +65,29 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parallelize_scan(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+
+
+def _synth_media(
+    spark: SparkSession, sf_dir: str, col: str, make: Callable[[int, int], bytes]
+) -> DataFrame:
+    """``documents`` as media fixtures: ``(doc_id, col)`` with ``col`` =
+    ``make(doc_id, tlen)``, tlen the text length. The media rows'
+    fixture encoders are per-row Python by design (they GENERATE the
+    blobs; the decode under test is the operator), so ``make`` runs in
+    a scalar pandas UDF — ArrowEvalPython, one Arrow batch per call. A
+    ``make`` that raises fails the query: a broken fixture is a bug,
+    not undecodable media."""
+
+    @F.pandas_udf("binary")
+    def _make(doc_id, tlen):  # type: ignore[no-untyped-def]
+        import pandas as pd
+
+        blobs = [make(int(i), int(t)) for i, t in zip(doc_id, tlen)]
+        return pd.Series(blobs, dtype=object)
+
+    return _docs(spark, sf_dir).select(
+        "doc_id", _make("doc_id", F.length("text").cast("long")).alias(col)
+    )
 
 
 _EV_CENTS_SQL = "SELECT *, CAST(round(value*100) AS BIGINT) AS value_cents FROM events"
@@ -1781,64 +1806,32 @@ def q_multimodal_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decode returns the synth samples bit-for-bit, so the oracle
     recomputes the sample sum / min / max / md5 of the raster order
     ANALYTICALLY from the same md5-derived formula — a predictor,
-    Huffman, or difference-coding bug breaks the hash exactly. Arrow-
-    batched mapInPandas decode (the multimodal_jpeg pattern)."""
-    import pandas as pd
+    Huffman, or difference-coding bug breaks the hash. Arrow-batched
+    decode through operators/multimodal.map_blobs."""
+    import hashlib
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        decode_jpeg,
-        synth_jpeg_lossless,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        def sv(x, y, c):
+            s = f"lj:{doc_id}:{x}:{y}"
+            return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 4096
 
-    d = _docs(spark, sf_dir).select("doc_id")
+        return MM.synth_jpeg_lossless(
+            4 + doc_id % 5, 3 + doc_id % 4, sv, precision=12,
+            predictor=1 + doc_id % 7, ncomp=1,
+        )
 
-    def _synth(it):
-        import hashlib
+    def decode(b: bytes) -> list[tuple]:
+        d = MM.decode_jpeg(b)
+        s = d["samples"][0]
+        raster = " ".join(str(int(v)) for row in s for v in row)
+        return [(d["width"], d["height"], int(s.sum()), int(s.min()),
+                 int(s.max()), hashlib.md5(raster.encode()).hexdigest())]
 
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 4 + doc_id % 5, 3 + doc_id % 4
-
-                def sv(x, y, c, doc_id=doc_id):
-                    s = f"lj:{doc_id}:{x}:{y}"
-                    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 4096
-
-                blob = synth_jpeg_lossless(
-                    w, h, sv, precision=12,
-                    predictor=1 + doc_id % 7, ncomp=1,
-                )
-                out["doc_id"].append(doc_id)
-                out["image"].append(blob)
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, "doc_id long, image binary")
-
-    def _decode(it):
-        for pdf in it:
-            rows = {"doc_id": [], "w": [], "h": [], "sum_s": [],
-                    "min_s": [], "max_s": [], "raster_md5": []}
-            for i, b in zip(pdf["doc_id"], pdf["image"]):
-                d2 = decode_jpeg(bytes(b))
-                s = d2["samples"][0]
-                rows["doc_id"].append(i)
-                rows["w"].append(d2["width"])
-                rows["h"].append(d2["height"])
-                rows["sum_s"].append(int(s.sum()))
-                rows["min_s"].append(int(s.min()))
-                rows["max_s"].append(int(s.max()))
-                import hashlib as hl
-                raster = " ".join(
-                    str(int(v)) for row in s for v in row
-                )
-                rows["raster_md5"].append(hl.md5(raster.encode()).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return img.mapInPandas(
-        _decode,
+    return MM.map_blobs(
+        _synth_media(spark, sf_dir, "image", make), "doc_id", "image",
         "doc_id long, w int, h int, sum_s long, min_s int, max_s int, "
         "raster_md5 string",
+        decode,
     )
 
 
@@ -2089,26 +2082,16 @@ def q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact-bin tones make argmax immune to float noise and the int16
     quantization floor shifts the share by <0.05% — every planted
     ratio sits >=0.17 from a rounding boundary, so the oracle
-    recomputes all outputs ANALYTICALLY from the synth parameters.
-    (The synth loop is per-row Python by design — it generates the
-    fixture; the decode+FFT under test is the Arrow-batched
-    mapInPandas operator.)"""
+    recomputes all outputs ANALYTICALLY from the synth parameters."""
     import math
 
-    import pandas as pd
+    import numpy as np
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        audio_spectral,
-        synth_wav,
-    )
-
-    d = _docs(spark, sf_dir).select("doc_id")
     n = 1024
     amps = [3000, 4500, 6000, 9000]
+    t = np.arange(n, dtype=np.float64)
 
-    def _synth(it):
-        import numpy as np
-
+    def make(doc_id: int, tlen: int) -> bytes:
         # numpy tone synthesis (r7): the listcomp made 2*1024 math.sin
         # calls per doc — ~100M at sf1.0, the row's dominant CPU.
         # Output-safe: the refactored argument/libm path perturbs a
@@ -2117,24 +2100,15 @@ def q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
         # magnitude gaps, integer dom_ratio_pct with a planted >=0.17
         # margin) tolerates the full int16 quantization floor — orders
         # of magnitude coarser. Oracle replay confirms at both SFs.
-        t = np.arange(n, dtype=np.float64)
-        for pdf in it:
-            out = {"doc_id": [], "audio": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                b1 = 20 + doc_id % 200
-                b2 = 250 + doc_id % 150
-                a2 = amps[doc_id % 4]
-                wave = np.rint(
-                    12000.0 * np.sin((2 * math.pi * b1 / n) * t)
-                    + a2 * np.sin((2 * math.pi * b2 / n) * t)
-                ).astype(np.int64)
-                out["doc_id"].append(doc_id)
-                out["audio"].append(synth_wav(16000, 1, wave.tolist()))
-            yield pd.DataFrame(out)
+        b1 = 20 + doc_id % 200
+        b2 = 250 + doc_id % 150
+        wave = np.rint(
+            12000.0 * np.sin((2 * math.pi * b1 / n) * t)
+            + amps[doc_id % 4] * np.sin((2 * math.pi * b2 / n) * t)
+        ).astype(np.int64)
+        return MM.synth_wav(16000, 1, wave.tolist())
 
-    wav = d.mapInPandas(_synth, "doc_id long, audio binary")
-    return audio_spectral(wav)
+    return MM.audio_spectral(_synth_media(spark, sf_dir, "audio", make))
 
 
 ORACLE_AUDIO_SPECTRAL = """
@@ -2478,13 +2452,11 @@ def q_knn_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media plumbing: docs text as opaque bytes → mapInPandas
+    """Binary media plumbing: docs text as opaque bytes → Arrow-batched
     metadata + deterministic fake feature (decode stubs documented in
     operators/multimodal.py)."""
-    from slowfast_feature_extractor_spark.operators.multimodal import media_meta
-
     d = _docs(spark, sf_dir).withColumn("media", F.encode(F.col("text"), "utf-8"))
-    return media_meta(d, media_col="media", id_col="doc_id")
+    return MM.media_meta(d, media_col="media", id_col="doc_id")
 
 
 ORACLE_MULTIMODAL_META = """
@@ -2506,42 +2478,18 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, text length), round-tripped through the actual RIFF
     container, decoded, and reduced to integer amplitude aggregates.
     The oracle recomputes every output analytically from the synth
-    formula — so a header-parse or PCM-unpack bug breaks the hash.
-    (The synth loop is per-row Python by design: it GENERATES the
-    fixture; the decode path under test is the Arrow-batched
-    mapInPandas operator.)"""
-    import pandas as pd
+    formula — so a header-parse or PCM-unpack bug breaks the hash."""
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        audio_meta,
-        synth_wav,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        chs = 1 + doc_id % 2
+        frames = [
+            tuple(((doc_id * 31 + i * 7 + ch * 13) % 2001) - 1000 for ch in range(chs))
+            for i in range(50 + (tlen % 200))
+        ]
+        return MM.synth_wav(8000 + (doc_id % 8) * 1000, chs, frames)
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
-
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "audio": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                sr = 8000 + (doc_id % 8) * 1000
-                chs = 1 + doc_id % 2
-                nf = 50 + (tlen % 200)
-                frames = [
-                    tuple(
-                        ((doc_id * 31 + i * 7 + ch * 13) % 2001) - 1000
-                        for ch in range(chs)
-                    )
-                    for i in range(nf)
-                ]
-                out["doc_id"].append(doc_id)
-                out["audio"].append(synth_wav(sr, chs, frames))
-            yield pd.DataFrame(out)
-
-    audio = d.mapInPandas(_synth, schema="doc_id long, audio binary")
-    return audio_meta(audio, media_col="audio", id_col="doc_id")
+    audio = _synth_media(spark, sf_dir, "audio", make)
+    return MM.audio_meta(audio, media_col="audio", id_col="doc_id")
 
 
 ORACLE_MULTIMODAL_AUDIO = """
@@ -2576,37 +2524,28 @@ def q_multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduced to integer channel sums. The oracle recomputes everything
     analytically — a header, BGR-order, row-padding, bottom-up, or
     resize-index bug breaks the hash."""
-    import pandas as pd
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_bmp,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        px = _mm_pixel(doc_id)
+        return MM.synth_bmp(4 + doc_id % 13, 4 + tlen % 11, lambda x, y: px(x, y)[:3])
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+    img = _synth_media(spark, sf_dir, "image", make)
+    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 4 + doc_id % 13, 4 + tlen % 11
 
-                def px(x, y, doc_id=doc_id):
-                    return (
-                        (doc_id * 7 + y * 31 + x * 13) % 256,
-                        (doc_id * 11 + y * 17 + x * 5) % 256,
-                        (doc_id * 3 + y * 7 + x * 19) % 256,
-                    )
+def _mm_pixel(doc_id: int):
+    """The BMP/PNG rows' pixel formula ``(x, y) -> (r, g, b, a)`` (alpha
+    only reaches RGBA PNGs; the channel sums ignore it)."""
 
-                out["doc_id"].append(doc_id)
-                out["image"].append(synth_bmp(w, h, px))
-            yield pd.DataFrame(out)
+    def px(x, y):
+        return (
+            (doc_id * 7 + y * 31 + x * 13) % 256,
+            (doc_id * 11 + y * 17 + x * 5) % 256,
+            (doc_id * 3 + y * 7 + x * 19) % 256,
+            (doc_id * 5 + y * 3 + x * 11) % 256,
+        )
 
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
+    return px
 
 
 def _mm_image_oracle() -> str:
@@ -2832,54 +2771,55 @@ FROM documents
 """
 
 
-def q_multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-image decode (stdlib PNG codec: zlib inflate +
-    full scanline filter reconstruction, operators/multimodal.decode_png)
-    + REAL nearest-neighbor resize: per document a PNG is synthesized
-    with the SAME pixel formula as ``multimodal_image``'s BMPs but
-    carried through the compressed container — per-row filters cycle
-    through all five PNG filter types with a doc-dependent rotation, and
-    every 4th document is RGBA (color type 6; alpha ignored by the
-    channel sums). The oracle recomputes the sums analytically from the
-    pixel formula, so an inflate, filter-reconstruction, RGBA-stride, or
+def _q_mm_png(
+    spark: SparkSession, sf_dir: str, bitdepth: int, interlace_every: int
+) -> DataFrame:
+    """REAL truecolor PNG decode (stdlib PNG codec: zlib inflate + full
+    scanline filter reconstruction, operators/multimodal.decode_png) +
+    REAL nearest-neighbor resize, one builder for three registry rows:
+    per document a PNG is synthesized with the SAME pixel formula as
+    ``multimodal_image``'s BMPs but carried through the compressed
+    container — per-row filters cycle through all five PNG filter types
+    with a doc-dependent rotation, and every 4th document is RGBA
+    (color type 6; alpha ignored by the channel sums). Documents with
+    ``doc_id % interlace_every == 0`` are Adam7-interlaced (0 = none).
+
+    - ``multimodal_png`` (8-bit, no interlace);
+    - ``multimodal_png_adam7`` (8-bit, every document interlaced: seven
+      independently filtered sub-images reassembled on the pass grid;
+      the fixture sizes (4–16 × 4–14) make most documents hit EMPTY and
+      single-pixel passes, the classic Adam7 edge cases);
+    - ``multimodal_png16`` (16-bit channels, every 3rd document
+      interlaced: big-endian sample pairs whose HIGH bytes follow the
+      pixel formula and whose low bytes are deterministic junk a width-
+      or endianness-confused decoder would surface; filter
+      reconstruction at the doubled byte stride, MSB 16→8 reduction).
+
+    All three share ``_mm_png_oracle`` (decoded pixels are
+    layout-independent; only the source bpp follows the bit depth), so
+    an inflate, filter-reconstruction, RGBA-stride, pass-geometry,
+    per-pass-stride, prior-reset, scatter, byte-order, reduction or
     resize-index bug breaks the hash. Reference decode analog:
-    reference/datasets/videoset.py:66-95 (cv2 over compressed frames)."""
-    import pandas as pd
+    reference/datasets/videoset.py:66-95 (cv2 over compressed frames,
+    Adam7 natively)."""
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_png,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        rot = doc_id % 5
+        return MM.synth_png(
+            4 + doc_id % 13, 4 + tlen % 11, _mm_pixel(doc_id),
+            filter_cycle=tuple((rot + i) % 5 for i in range(5)),
+            rgba=(doc_id % 4 == 0),
+            bitdepth=bitdepth,
+            interlace=int(interlace_every > 0 and doc_id % interlace_every == 0),
+        )
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+    img = _synth_media(spark, sf_dir, "image", make)
+    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 4 + doc_id % 13, 4 + tlen % 11
 
-                def px(x, y, doc_id=doc_id):
-                    return (
-                        (doc_id * 7 + y * 31 + x * 13) % 256,
-                        (doc_id * 11 + y * 17 + x * 5) % 256,
-                        (doc_id * 3 + y * 7 + x * 19) % 256,
-                        (doc_id * 5 + y * 3 + x * 11) % 256,  # alpha (rgba docs)
-                    )
-
-                rot = doc_id % 5
-                cycle = tuple((rot + i) % 5 for i in range(5))
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_png(w, h, px, filter_cycle=cycle, rgba=(doc_id % 4 == 0))
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
+q_multimodal_png = functools.partial(_q_mm_png, bitdepth=8, interlace_every=0)
+q_multimodal_png_adam7 = functools.partial(_q_mm_png, bitdepth=8, interlace_every=1)
+q_multimodal_png16 = functools.partial(_q_mm_png, bitdepth=16, interlace_every=3)
 
 
 def _mm_png_oracle(channel_bits: int = 8) -> str:
@@ -2984,42 +2924,23 @@ def q_multimodal_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette → sums analytically, so a bit-unpack, palette-lookup,
     packed-byte filter, or resize bug breaks the hash. Reference
     decode analog: reference/datasets/videoset.py:66-95."""
-    import pandas as pd
+    import numpy as np
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_png_indexed,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        w, h = 3 + doc_id % 14, 3 + tlen % 13
+        bd = (1, 2, 4, 8)[doc_id % 4]
+        pal = [
+            ((i * 37 + 11) % 256, (i * 59 + 23) % 256, (i * 83 + 47) % 256)
+            for i in range(1 << bd)
+        ]
+        y, x = np.mgrid[0:h, 0:w]
+        grid = (doc_id * 7 + y * 31 + x * 13) % (1 << bd)
+        rot = doc_id % 5
+        cycle = tuple((rot + i) % 5 for i in range(5))
+        return MM.synth_png_indexed(grid, pal, bitdepth=bd, filter_cycle=cycle)
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
-
-    def _synth(it):
-        import numpy as np
-
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 3 + doc_id % 14, 3 + tlen % 13
-                bd = (1, 2, 4, 8)[doc_id % 4]
-                pal = [
-                    ((i * 37 + 11) % 256, (i * 59 + 23) % 256, (i * 83 + 47) % 256)
-                    for i in range(1 << bd)
-                ]
-                y, x = np.mgrid[0:h, 0:w]
-                grid = (doc_id * 7 + y * 31 + x * 13) % (1 << bd)
-                rot = doc_id % 5
-                cycle = tuple((rot + i) % 5 for i in range(5))
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_png_indexed(grid, pal, bitdepth=bd, filter_cycle=cycle)
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
+    img = _synth_media(spark, sf_dir, "image", make)
+    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
 def _mm_png_palette_oracle() -> str:
@@ -3050,120 +2971,6 @@ FROM p
 """
 
 
-def q_multimodal_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Adam7-interlaced PNG decode (operators/multimodal.decode_png:
-    seven independently filtered sub-images reassembled on the pass
-    grid — the progressive-render layout web image pipelines emit):
-    per document an INTERLACED truecolor PNG is synthesized with the
-    SAME pixel formula as ``multimodal_png`` (every 4th document RGBA),
-    per-pass row filters cycling through all five types with a
-    doc-dependent rotation. The fixture sizes (4–16 × 4–14) make most
-    documents hit EMPTY and single-pixel passes, the classic Adam7 edge
-    cases. The oracle is the sequential row's — decoded pixels are
-    layout-independent — so a pass-geometry, per-pass-stride,
-    prior-reset, or scatter bug breaks the hash. Reference decode
-    analog: reference/datasets/videoset.py:66-95 (cv2 handles Adam7
-    natively)."""
-    import pandas as pd
-
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_png,
-    )
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
-
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 4 + doc_id % 13, 4 + tlen % 11
-
-                def px(x, y, doc_id=doc_id):
-                    return (
-                        (doc_id * 7 + y * 31 + x * 13) % 256,
-                        (doc_id * 11 + y * 17 + x * 5) % 256,
-                        (doc_id * 3 + y * 7 + x * 19) % 256,
-                        (doc_id * 5 + y * 3 + x * 11) % 256,
-                    )
-
-                rot = doc_id % 5
-                cycle = tuple((rot + i) % 5 for i in range(5))
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_png(
-                        w, h, px,
-                        filter_cycle=cycle,
-                        rgba=(doc_id % 4 == 0),
-                        interlace=1,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
-
-
-def q_multimodal_png16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL 16-bit-channel PNG decode (operators/multimodal.decode_png:
-    big-endian sample pairs, filter reconstruction at the doubled byte
-    stride, standard most-significant-byte 16→8 reduction — the
-    photography/scanner format class): per document a 16-bit truecolor
-    PNG is synthesized whose HIGH bytes follow the shared pixel formula
-    and whose low bytes are deterministic junk a width- or endianness-
-    confused decoder would surface; every 4th document is RGBA and
-    every 3rd is ALSO Adam7-interlaced (16-bit × interlace cross
-    coverage). Oracle = the sequential row's sums with source bpp
-    48/64, so a stride, byte-order, reduction, or interlace bug breaks
-    the hash. Reference decode analog:
-    reference/datasets/videoset.py:66-95."""
-    import pandas as pd
-
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_png,
-    )
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
-
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 4 + doc_id % 13, 4 + tlen % 11
-
-                def px(x, y, doc_id=doc_id):
-                    return (
-                        (doc_id * 7 + y * 31 + x * 13) % 256,
-                        (doc_id * 11 + y * 17 + x * 5) % 256,
-                        (doc_id * 3 + y * 7 + x * 19) % 256,
-                        (doc_id * 5 + y * 3 + x * 11) % 256,
-                    )
-
-                rot = doc_id % 5
-                cycle = tuple((rot + i) % 5 for i in range(5))
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_png(
-                        w, h, px,
-                        filter_cycle=cycle,
-                        rgba=(doc_id % 4 == 0),
-                        bitdepth=16,
-                        interlace=1 if doc_id % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
-
-
 def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL DCT-compressed-image decode (stdlib baseline JPEG codec:
     marker walk, canonical Huffman entropy decode, dequantize, exact
@@ -3181,41 +2988,18 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Huffman, dezigzag, dequant, IDCT, scan-coverage, color-convert or
     resize bug breaks the hash. Reference decode analog:
     reference/datasets/videoset.py:66-95 (cv2 over compressed frames)."""
-    import pandas as pd
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_jpeg,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        def bf(bx, by):
+            return ((doc_id * 7 + by * 31 + bx * 13) % 256, 128, 128)
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+        return MM.synth_jpeg(
+            8 * (1 + doc_id % 3), 8 * (1 + tlen % 2), bf,
+            gray=(doc_id % 4 == 0), interleaved=(doc_id % 5 != 3),
+        )
 
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 8 * (1 + doc_id % 3), 8 * (1 + tlen % 2)
-
-                def bf(bx, by, doc_id=doc_id):
-                    return ((doc_id * 7 + by * 31 + bx * 13) % 256, 128, 128)
-
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_jpeg(
-                        w,
-                        h,
-                        bf,
-                        gray=(doc_id % 4 == 0),
-                        interleaved=(doc_id % 5 != 3),
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
+    img = _synth_media(spark, sf_dir, "image", make)
+    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
 def _mm_jpeg_oracle() -> str:
@@ -3264,41 +3048,19 @@ def q_multimodal_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash. Reference decode analog: reference/datasets/videoset.py:
     66-95 (cv2 handles progressive transparently; so does this engine
     now)."""
-    import pandas as pd
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_jpeg_progressive,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        def bf(bx, by):
+            return ((doc_id * 11 + by * 29 + bx * 17) % 256, 128, 128)
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+        return MM.synth_jpeg_progressive(
+            8 * (1 + doc_id % 3), 8 * (1 + tlen % 2), bf,
+            gray=(doc_id % 4 == 0),
+            restart_interval=doc_id % 3,  # 0 = none, 1, 2
+        )
 
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 8 * (1 + doc_id % 3), 8 * (1 + tlen % 2)
-
-                def bf(bx, by, doc_id=doc_id):
-                    return ((doc_id * 11 + by * 29 + bx * 17) % 256, 128, 128)
-
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_jpeg_progressive(
-                        w,
-                        h,
-                        bf,
-                        gray=(doc_id % 4 == 0),
-                        restart_interval=doc_id % 3,  # 0 = none, 1, 2
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
+    img = _synth_media(spark, sf_dir, "image", make)
+    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
 def _mm_jpeg_prog_oracle() -> str:
@@ -3349,48 +3111,25 @@ def q_multimodal_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     color-convert bug breaks the hash. Reference decode analog:
     reference/datasets/videoset.py:66-95 (cv2 decodes 4:2:0
     natively; so does this engine now — VERDICT r5 item #1)."""
-    import pandas as pd
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        image_meta,
-        synth_jpeg_subsampled,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        def yb(bx, by):
+            return (doc_id * 19 + by * 23 + bx * 29) % 256
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+        def cbf(cx, cy):
+            return (
+                108 + 20 * ((doc_id + cx + cy) % 3),
+                108 + 20 * ((doc_id * 2 + cx * 3 + cy) % 3),
+            )
 
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "image": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 16 * (1 + doc_id % 2), 16 * (1 + tlen % 2)
+        return MM.synth_jpeg_subsampled(
+            16 * (1 + doc_id % 2), 16 * (1 + tlen % 2), yb, cbf,
+            sampling="422" if doc_id % 3 == 0 else "420",
+            restart_interval=2 if doc_id % 3 == 1 else 0,
+        )
 
-                def yb(bx, by, d=doc_id):
-                    return (d * 19 + by * 23 + bx * 29) % 256
-
-                def cbf(cx, cy, d=doc_id):
-                    return (
-                        108 + 20 * ((d + cx + cy) % 3),
-                        108 + 20 * ((d * 2 + cx * 3 + cy) % 3),
-                    )
-
-                out["doc_id"].append(doc_id)
-                out["image"].append(
-                    synth_jpeg_subsampled(
-                        w,
-                        h,
-                        yb,
-                        cbf,
-                        sampling="422" if doc_id % 3 == 0 else "420",
-                        restart_interval=2 if doc_id % 3 == 1 else 0,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, image binary")
-    return image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
+    img = _synth_media(spark, sf_dir, "image", make)
+    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
 def _mm_jpeg_420_oracle() -> str:
@@ -3452,39 +3191,21 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes container geometry, stride sampling, and pixel
     sums analytically — a container-parse, frame-seek, Huffman, IDCT or
     color-convert bug breaks the hash."""
-    import pandas as pd
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        synth_avi,
-        synth_jpeg,
-        video_features,
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        w, h = 8 * (1 + doc_id % 3), 8 * (1 + tlen % 2)
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+        def frame(fi: int) -> bytes:
+            def bf(bx, by):
+                return ((doc_id * 7 + fi * 17 + by * 31 + bx * 13) % 256, 128, 128)
 
-    def _synth(it):
-        for pdf in it:
-            out = {"doc_id": [], "video": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 8 * (1 + doc_id % 3), 8 * (1 + tlen % 2)
-                n = 2 + doc_id % 7
-                frames = []
-                for fi in range(n):
-                    def bf(bx, by, doc_id=doc_id, fi=fi):
-                        return ((doc_id * 7 + fi * 17 + by * 31 + bx * 13) % 256,
-                                128, 128)
+            return MM.synth_jpeg(w, h, bf, gray=(doc_id % 4 == 0))
 
-                    frames.append(synth_jpeg(w, h, bf, gray=(doc_id % 4 == 0)))
-                out["doc_id"].append(doc_id)
-                out["video"].append(synth_avi(frames, w, h, fps=10))
-            yield pd.DataFrame(out)
+        return MM.synth_avi([frame(fi) for fi in range(2 + doc_id % 7)], w, h, fps=10)
 
-    vid = d.mapInPandas(_synth, schema="doc_id long, video binary")
-    return video_features(vid, media_col="video", id_col="doc_id",
-                          num_frames=4, alpha=4)
+    vid = _synth_media(spark, sf_dir, "video", make)
+    return MM.video_features(vid, media_col="video", id_col="doc_id",
+                             num_frames=4, alpha=4)
 
 
 def _mm_video_oracle() -> str:
@@ -3534,44 +3255,21 @@ def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog: reference/datasets/videoset.py:66-95 (cv2 over compressed
     frames); multi-frame extraction is the reference's video-frame
     discipline on a different container."""
-    import pandas as pd
+    import numpy as np
 
-    from slowfast_feature_extractor_spark.operators.multimodal import (
-        gif_features,
-        synth_gif,
-    )
+    pal = [
+        ((i * 37 + 11) % 256, (i * 59 + 23) % 256, (i * 83 + 47) % 256)
+        for i in range(64)
+    ]
 
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.length("text").cast("long").alias("tlen")
-    )
+    def make(doc_id: int, tlen: int) -> bytes:
+        n = 1 + doc_id % 4
+        y, x = np.mgrid[0:3 + tlen % 12, 0:3 + doc_id % 14]
+        frames = [(doc_id * 7 + fi * 29 + y * 31 + x * 13) % 64 for fi in range(n)]
+        return MM.synth_gif(frames, pal, delays=[4] * n, interlace=(doc_id % 3 == 0))
 
-    def _synth(it):
-        import numpy as np
-
-        for pdf in it:
-            out = {"doc_id": [], "gif": []}
-            for doc_id, tlen in zip(pdf["doc_id"], pdf["tlen"]):
-                doc_id, tlen = int(doc_id), int(tlen)
-                w, h = 3 + doc_id % 14, 3 + tlen % 12
-                n = 1 + doc_id % 4
-                pal = [
-                    ((i * 37 + 11) % 256, (i * 59 + 23) % 256, (i * 83 + 47) % 256)
-                    for i in range(64)
-                ]
-                y, x = np.mgrid[0:h, 0:w]
-                frames = [
-                    (doc_id * 7 + fi * 29 + y * 31 + x * 13) % 64
-                    for fi in range(n)
-                ]
-                out["doc_id"].append(doc_id)
-                out["gif"].append(
-                    synth_gif(frames, pal, delays=[4] * n,
-                              interlace=(doc_id % 3 == 0))
-                )
-            yield pd.DataFrame(out)
-
-    img = d.mapInPandas(_synth, schema="doc_id long, gif binary")
-    return gif_features(img, media_col="gif", id_col="doc_id")
+    img = _synth_media(spark, sf_dir, "gif", make)
+    return MM.gif_features(img, media_col="gif", id_col="doc_id")
 
 
 def _mm_gif_oracle() -> str:
@@ -3815,11 +3513,9 @@ FROM ev
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dual-rate frame sampling plumbing over opaque media bytes
     (reference's stride sampling, test_net.py:62-74; codec stubbed)."""
-    from slowfast_feature_extractor_spark.operators.multimodal import frame_sample
-
     d = _docs(spark, sf_dir).withColumn("media", F.encode(F.col("text"), "utf-8"))
-    return frame_sample(d, media_col="media", id_col="doc_id",
-                        frame_bytes=64, num_frames=8, alpha=4)
+    return MM.frame_sample(d, media_col="media", id_col="doc_id",
+                           frame_bytes=64, num_frames=8, alpha=4)
 
 
 # stride sampling reproduced in pure SQL over the HEX encoding (2 hex

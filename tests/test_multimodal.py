@@ -49,6 +49,15 @@ def test_frame_sample_dual_rate(spark, media):
     assert len(g3) == 8 + 2
 
 
+def test_frame_sample_rejects_bad_parameters(media):
+    """Parameter errors raise when the plan is built; inside the
+    per-blob loop they would turn every blob into a P9 null row."""
+    with pytest.raises(ValueError):
+        frame_sample(media, num_frames=2, alpha=4)  # zero slow frames
+    with pytest.raises(ValueError):
+        frame_sample(media, frame_bytes=0)
+
+
 def test_decode_stub_raises():
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG...")
@@ -539,17 +548,64 @@ def test_video_features_null_row_on_corrupt(spark):
         video_features,
     )
 
-    good = synth_avi([synth_jpeg(8, 8, lambda bx, by: (50, 128, 128))] * 3, 8, 8)
+    frame = synth_jpeg(8, 8, lambda bx, by: (50, 128, 128))
+    good = synth_avi([frame] * 3, 8, 8)
+    # valid container, corrupt middle frame: fast samples frames 0, 1,
+    # so the doc fails AFTER frame 0 decoded — it must still give one
+    # null row and no frame rows (P9), never both
+    mid = synth_avi([frame, b"\xff\xd8garbage", frame], 8, 8)
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "media": [good, b"not an avi"]})
+        pd.DataFrame({"doc_id": [1, 2, 3], "media": [good, b"not an avi", mid]})
     )
     out = video_features(df, num_frames=2, alpha=2).toPandas()
     ok = out[out.doc_id == 1]
     assert len(ok) == 3  # 2 fast + 1 slow
     assert set(ok.pathway) == {"fast", "slow"}
     assert (ok.width == 8).all() and (ok.sum_r == 50 * 64).all()
-    bad = out[out.doc_id == 2]
-    assert len(bad) == 1 and bad.pathway.isna().all()
+    for doc in (2, 3):
+        bad = out[out.doc_id == doc]
+        assert len(bad) == 1 and bad.drop(columns="doc_id").isna().all(axis=None)
+
+
+# declared output schema of every decoding operator
+_DECODER_SCHEMAS = {
+    "image_meta": "doc_id long, width int, height int, bpp int, "
+    "sum_r long, sum_g long, sum_b long",
+    "audio_meta": "doc_id long, sample_rate int, channels int, sample_width int, "
+    "n_frames long, duration_ms long, sum_abs long, peak int",
+    "audio_spectral": "doc_id long, n_samples int, dom_bin int, second_bin int, "
+    "dom_ratio_pct int",
+    "video_features": "doc_id long, pathway string, frame_idx int, src_frame int, "
+    "width int, height int, bpp int, sum_r long, sum_g long, sum_b long",
+    "gif_features": "doc_id long, frame_idx int, width int, height int, "
+    "n_frames int, sum_r long, sum_g long, sum_b long",
+}
+
+
+@pytest.mark.parametrize("op", list(_DECODER_SCHEMAS))
+def test_decoder_p9_null_rows_and_empty_input(spark, op):
+    """Every decoding operator: a null blob and a garbage blob each give
+    exactly one row (id set, every other column null); an empty input
+    gives zero rows with the declared schema."""
+    from pyspark.sql.types import DataType
+
+    from slowfast_feature_extractor_spark.operators import multimodal
+
+    fn = getattr(multimodal, op)
+    schema = DataType.fromDDL(_DECODER_SCHEMAS[op])
+    df = spark.createDataFrame(
+        [(7, None), (8, bytearray(b"\x00garbage\xff" * 5))],
+        "doc_id long, blob binary",
+    )
+    out = fn(df, media_col="blob")
+    assert out.schema == schema
+    rows = sorted(out.collect(), key=lambda r: r.doc_id)
+    assert [r.doc_id for r in rows] == [7, 8]
+    for r in rows:
+        assert all(v is None for v in list(r)[1:]), r
+    empty = fn(df.limit(0), media_col="blob")
+    assert empty.schema == schema
+    assert empty.collect() == []
 
 
 def test_progressive_jpeg_dc_only_exact():
