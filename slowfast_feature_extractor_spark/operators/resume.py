@@ -16,10 +16,12 @@ plain parquet (this sandbox) the ledger is one file per bucket, which is
 atomic at the filesystem level. All pending buckets are written in ONE
 distributed pass (``write.partitionBy(bucket)`` with dynamic partition
 overwrite) — the upstream plan is computed exactly once regardless of
-bucket count, and per-bucket row counts for the ledger come from one
-groupBy over the committed output. A kill between the data write and a
-bucket's ledger commit re-runs that bucket and dynamically overwrites
-only its partition — idempotent because every stage is deterministic.
+bucket count. The ledger's per-bucket row counts come from an
+``Observation`` on that same write, never from reading the output back:
+one ``count_if`` per pending bucket plus one for NULL buckets. It is the
+last transform before the sink, so it runs in the write's result stage,
+where Spark applies each partition's accumulator update exactly once
+(a re-run shuffle-map stage would count its rows again).
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -73,11 +75,11 @@ def _bucket_ids(df: DataFrame, bucket_col: str, n_buckets: int | None) -> list:
     materialization in this operator. An empty declared bucket simply
     commits a zero-row ledger record, same as a filtered-out one."""
     if n_buckets is not None:
-        # NULL buckets (a NULL entity key) are detected for free inside
-        # run_with_checkpoint's write/read-back (they land in the
-        # default-partition dir and the count collect raises) — never
-        # by a pre-scan, which would cost a full job in the common
-        # no-null case and defeat the zero-job enumeration.
+        # NULL buckets (a NULL entity key) are detected for free by the
+        # write's Observation in _run_pending (they are written to the
+        # NULL partition, counted, and the run raises) — never by a
+        # pre-scan, which would cost a full job in the common no-null
+        # case and defeat the zero-job enumeration.
         return list(range(n_buckets))
     ids = [r[0] for r in df.select(bucket_col).distinct().collect()]
     if any(b is None for b in ids):
@@ -87,6 +89,71 @@ def _bucket_ids(df: DataFrame, bucket_col: str, n_buckets: int | None) -> list:
             "— fix the upstream key"
         )
     return sorted(ids)
+
+
+def _run_pending(
+    df: DataFrame,
+    ledger_dir: str,
+    bucket_col: str,
+    compute_fn: Callable[[DataFrame], DataFrame] | None,
+    max_buckets: int | None,
+    batch_id: str,
+    n_buckets: int | None,
+    commit: Callable[[DataFrame], dict],
+) -> dict:
+    """The body both writers share. Keep the pending buckets' rows,
+    apply ``compute_fn``, observe per-bucket counts as the last
+    transform, and hand the result to ``commit`` (one distributed write
+    that returns any extra ledger fields). Then raise on NULL buckets or
+    commit one ledger record per pending bucket."""
+    buckets = _bucket_ids(df, bucket_col, n_buckets)
+    done = ledger_read(ledger_dir)
+    skipped = [b for b in buckets if b in done]
+    pending = [b for b in buckets if b not in done][:max_buckets]
+    if not pending:
+        return {"processed": [], "skipped": skipped, "rows": 0}
+
+    t0 = time.monotonic()
+    bucket = F.col(bucket_col)
+    keep = bucket.isin(pending)
+    if n_buckets is not None and df.schema[bucket_col].nullable:
+        # a NULL bucket (NULL entity key) would be SILENTLY dropped by
+        # isin (never matches NULL) while the run reports success. Let
+        # such rows through: the observation counts them and the run
+        # raises — zero extra jobs in the no-null case.
+        keep = keep | bucket.isNull()
+    part = df.filter(keep)
+    if compute_fn is not None:
+        part = compute_fn(part)
+    # the last transform, so the counts run in the write's result stage
+    seen = Observation()
+    extra = commit(part.observe(
+        seen,
+        F.count_if(bucket.isNull()).alias("null"),
+        *(F.count_if(bucket == F.lit(b)).alias(f"b{i}") for i, b in enumerate(pending)),
+    ))
+    wall_ms = round((time.monotonic() - t0) * 1000, 1)
+    counts = seen.get
+    if counts["null"]:
+        raise ValueError(
+            f"bucket column {bucket_col!r} contains NULLs ({counts['null']} "
+            "rows, written to the NULL partition but given no ledger record); "
+            "a declared hash(entity) % B bucketing cannot produce them — fix "
+            "the upstream key (NULL rows are not checkpointable)"
+        )
+    for i, b in enumerate(pending):
+        _ledger_commit(
+            ledger_dir,
+            {
+                "bucket": _json_bucket(b),
+                "n_rows": counts[f"b{i}"],
+                "wall_ms": wall_ms,
+                "batch_id": batch_id,
+                **extra,
+            },
+        )
+    rows = sum(counts[f"b{i}"] for i in range(len(pending)))
+    return {"processed": pending, "skipped": skipped, "rows": rows}
 
 
 def run_with_checkpoint(
@@ -115,91 +182,27 @@ def run_with_checkpoint(
     bucket is a hash of the entity key): all pending buckets are
     computed and written in a SINGLE distributed pass, not a per-bucket
     driver loop, so the upstream plan is evaluated once total.
+    The ledger's ``n_rows`` are observed on that pass, so the call runs
+    the same Spark jobs as a bare ``partitionBy`` write; a ``compute_fn``
+    may add its own ``observe`` (the backfill job's leakage audit does).
     ``wall_ms`` in each ledger record is the wall time of that single
     pass (shared by the buckets it committed).
     """
-    spark = df.sparkSession
-    buckets = _bucket_ids(df, bucket_col, n_buckets)
-    done = ledger_read(ledger_dir)
-    skipped = [b for b in buckets if b in done]
-    pending = [b for b in buckets if b not in done]
-    if max_buckets is not None:
-        pending = pending[:max_buckets]
-    if not pending:
-        return {"processed": [], "skipped": skipped, "rows": 0}
 
-    t0 = time.monotonic()
-    keep = F.col(bucket_col).isin(list(pending))
-    if n_buckets is not None and df.schema[bucket_col].nullable:
-        # a NULL bucket (NULL entity key) would be SILENTLY dropped by
-        # isin (never matches NULL) while the run reports success. Let
-        # such rows through: partitionBy writes them to the
-        # _NULL_BUCKET_DIR partition, the read-back sees that key, and
-        # the run raises — zero extra jobs in the no-null case.
-        keep = keep | F.col(bucket_col).isNull()
-    part = df.filter(keep)
-    if compute_fn is not None:
-        part = compute_fn(part)
-    # ONE distributed write; dynamic overwrite replaces only the pending
-    # bucket partitions, never the committed ones
-    (
-        part.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucket_col)
-        .parquet(output_dir)
+    def commit(part: DataFrame) -> dict:
+        # dynamic overwrite replaces only the pending bucket partitions,
+        # never the committed ones
+        (
+            part.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(bucket_col)
+            .parquet(output_dir)
+        )
+        return {}
+
+    return _run_pending(
+        df, ledger_dir, bucket_col, compute_fn, max_buckets, batch_id, n_buckets, commit
     )
-    wall_ms = round((time.monotonic() - t0) * 1000, 1)
-
-    # read-back caveats (both verified live): (a) partition-column TYPE
-    # INFERENCE turns a string bucket id '7' into int 7, so counts keys
-    # would never match string pending ids — disable inference for this
-    # read; (b) a compute_fn that filters out every row writes NO files,
-    # and reading the then-empty dir raises UNABLE_TO_INFER_SCHEMA —
-    # that legitimately means zero rows per bucket, and the ledger must
-    # still commit so the batch converges instead of recomputing forever
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_infer = spark.conf.get(infer_key, "true")
-    spark.conf.set(infer_key, "false")
-    from pyspark.errors import AnalysisException
-
-    try:
-        counts = {
-            r[0]: r[1]
-            for r in spark.read.parquet(output_dir)
-            .filter(
-                F.col(bucket_col).cast("string").isin([str(b) for b in pending])
-                | F.col(bucket_col).isNull()
-            )
-            .groupBy(bucket_col)
-            .count()
-            .collect()
-        }
-    except AnalysisException:
-        counts = {}  # nothing was written: zero rows for every bucket
-    finally:
-        spark.conf.set(infer_key, prev_infer)
-    if None in counts:
-        raise ValueError(
-            f"bucket column {bucket_col!r} contains NULLs ({counts[None]} "
-            "rows, quarantined under the default-partition dir); a declared "
-            "hash(entity) % B bucketing cannot produce them — fix the "
-            "upstream key (NULL rows are not checkpointable)"
-        )
-    counts = {str(k): v for k, v in counts.items()}
-    total_rows = 0
-    for b in pending:
-        n = int(counts.get(str(b), 0))
-        _ledger_commit(
-            ledger_dir,
-            {
-                "bucket": _json_bucket(b),
-                "n_rows": n,
-                "wall_ms": wall_ms,
-                "batch_id": batch_id,
-            },
-        )
-        total_rows += n
-    return {"processed": list(pending), "skipped": skipped, "rows": total_rows}
 
 
 def read_output(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -249,48 +252,16 @@ def run_with_checkpoint_iceberg(
             f"catalog {catalog!r} is not Iceberg-backed; use "
             "run_with_checkpoint (directory-partitioned parquet) instead"
         )
-    buckets = _bucket_ids(df, bucket_col, n_buckets)
-    done = ledger_read(ledger_dir)
-    skipped = [b for b in buckets if b in done]
-    pending = [b for b in buckets if b not in done]
-    if max_buckets is not None:
-        pending = pending[:max_buckets]
-    if not pending:
-        return {"processed": [], "skipped": skipped, "rows": 0}
 
-    t0 = time.monotonic()
-    part = df.filter(F.col(bucket_col).isin(list(pending)))
-    if compute_fn is not None:
-        part = compute_fn(part)
-    if spark.catalog.tableExists(table):
-        # existing table keeps its partition spec; replace only the
-        # pending buckets' partitions
-        part.writeTo(table).overwritePartitions()
-    else:
-        part.writeTo(table).partitionedBy(F.col(bucket_col)).create()
-    wall_ms = round((time.monotonic() - t0) * 1000, 1)
-    snap = last_snapshot_id(spark, table)
+    def commit(part: DataFrame) -> dict:
+        if spark.catalog.tableExists(table):
+            # existing table keeps its partition spec; replace only the
+            # pending buckets' partitions
+            part.writeTo(table).overwritePartitions()
+        else:
+            part.writeTo(table).partitionedBy(F.col(bucket_col)).create()
+        return {"snapshot_id": last_snapshot_id(spark, table)}
 
-    counts = {
-        r[0]: r[1]
-        for r in spark.read.table(table)
-        .filter(F.col(bucket_col).isin(list(pending)))
-        .groupBy(bucket_col)
-        .count()
-        .collect()
-    }
-    total_rows = 0
-    for b in pending:
-        n = int(counts.get(b, 0))
-        _ledger_commit(
-            ledger_dir,
-            {
-                "bucket": _json_bucket(b),
-                "n_rows": n,
-                "wall_ms": wall_ms,
-                "batch_id": batch_id,
-                "snapshot_id": snap,
-            },
-        )
-        total_rows += n
-    return {"processed": list(pending), "skipped": skipped, "rows": total_rows}
+    return _run_pending(
+        df, ledger_dir, bucket_col, compute_fn, max_buckets, batch_id, n_buckets, commit
+    )
