@@ -20,21 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Left-to-right dot product. With ``dim`` known statically the
-    expression unrolls to plain codegen'd arithmetic (no per-element
-    lambda allocation — ~an order of magnitude faster on wide fan-out
-    joins); the fold fallback computes the identical value in the
-    identical order for dynamic lengths."""
-    if dim is not None:
-        terms = [
-            F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-            for i in range(1, dim + 1)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
+def dot_product(a: Column, b: Column) -> Column:
+    """Left-to-right dot product: one ``F.aggregate`` fold over the
+    pairwise products, accumulated in the order the oracles replay."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -42,9 +30,9 @@ def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        return F.sqrt(dot_product(a, a, dim))
+def l2_norm(a: Column) -> Column:
+    """Euclidean norm: the square root of the same left-to-right fold
+    over the squared elements."""
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
@@ -55,7 +43,10 @@ def l2_norm(a: Column, dim: int | None = None) -> Column:
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine of the angle between ``a`` and ``b``. NULL when either has
+    zero norm: a zero vector has no direction (and a plain divide would
+    raise DIVIDE_BY_ZERO under ANSI mode)."""
+    return F.try_divide(dot_product(a, b), l2_norm(a) * l2_norm(b))
 
 
 def resample_to_k_np(values, k: int) -> np.ndarray:

@@ -197,6 +197,23 @@ def shingle_table(
     return df.select(F.col(id_col).alias("id"), F.explode(hashed).alias("shingle"))
 
 
+def _id_pairs(grp: DataFrame) -> DataFrame:
+    """(id_a, id_b) for every unordered pair inside each row's sorted
+    ``ids`` posting list, id_a < id_b: two chained explodes generate the
+    C(|ids|, 2) combinations directly — no self-join, no |ids|² ordered
+    pairs before a filter."""
+    return (
+        grp.filter(F.size("ids") >= 2)
+        .select("ids", F.posexplode("ids").alias("__i", "id_a"))
+        .select(
+            "id_a",
+            F.explode(
+                F.slice("ids", F.col("__i") + F.lit(2), F.size("ids"))
+            ).alias("id_b"),
+        )
+    )
+
+
 def _pair_intersections(
     sh: DataFrame, max_shingle_df: int | None
 ) -> tuple[DataFrame, DataFrame]:
@@ -235,17 +252,7 @@ def _pair_intersections(
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
-    pairs = (
-        grp.filter(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("__i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("__i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
-    )
-    inter = pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("inter"))
+    inter = _id_pairs(grp).groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("inter"))
     return inter, sizes
 
 
@@ -467,18 +474,8 @@ def minhash_lsh_candidates(
         band_buckets(signatures, num_hashes, bands, hash_fn)
         .groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
     )
-    return (
-        grp.select("ids", F.posexplode("ids").alias("__i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice("ids", F.col("__i") + F.lit(2), F.size("ids"))
-            ).alias("id_b"),
-        )
-        .distinct()  # a pair may collide in several bands
-    )
+    return _id_pairs(grp).distinct()  # a pair may collide in several bands
 
 
 def minhash_lsh_dedup(
@@ -516,18 +513,32 @@ def minhash_lsh_dedup(
     verification stay lazy, their join strategy chosen at run time
     (:func:`_verify_candidates`). ``threshold`` must be > 0 and is
     checked first, so a rejected call runs no job and caches nothing."""
+    return _lsh_dedup(
+        df, id_col, text_col, n, num_hashes, bands, threshold, hash_fn,
+        lambda sh, h: sh.groupBy("id").agg(*_minhash_aggs(h, hash_fn)),
+        "num_hashes",
+    )
+
+
+def _lsh_dedup(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int | None,
+    bands: int | None, threshold: float, hash_fn: str, signatures, hashes_param: str,
+) -> DataFrame:
+    """Shared body of :func:`minhash_lsh_dedup` and
+    :func:`minhash_oph_dedup`: validate (errors name the caller's
+    ``hashes_param``), persist and count the shingle index,
+    ``signatures(index, num_hashes)``, band, verify."""
     from pyspark import StorageLevel
 
     if threshold <= 0:
         raise ValueError(f"threshold must be > 0, got {threshold}")
     if (num_hashes is None) != (bands is None):
-        raise ValueError("pass both num_hashes and bands, or neither")
+        raise ValueError(f"pass both {hashes_param} and bands, or neither")
     if num_hashes is None:
         num_hashes, bands = lsh_params(threshold)
     sh = shingle_table(df, id_col, text_col, n, hash_fn).persist(StorageLevel.MEMORY_AND_DISK)
     sh.count()
-    sigs = sh.groupBy("id").agg(*_minhash_aggs(num_hashes, hash_fn))
-    cand = minhash_lsh_candidates(sigs, num_hashes, bands, hash_fn)
+    cand = minhash_lsh_candidates(signatures(sh, num_hashes), num_hashes, bands, hash_fn)
     return _verify_candidates(sh, cand, threshold)
 
 
@@ -683,21 +694,11 @@ def minhash_oph_dedup(
     (one hash pass instead of ``num_perm``). Output (id_a, id_b,
     jaccard >= threshold). As there, ``threshold`` > 0 is checked before
     any work and the shingle-index count is the only build-time job."""
-    from pyspark import StorageLevel
-
-    if threshold <= 0:
-        raise ValueError(f"threshold must be > 0, got {threshold}")
-    if (num_perm is None) != (bands is None):
-        raise ValueError("pass both num_perm and bands, or neither")
-    if num_perm is None:
-        num_perm, bands = lsh_params(threshold)
-    sh = shingle_table(df, id_col, text_col, n, hash_fn).persist(
-        StorageLevel.MEMORY_AND_DISK
+    return _lsh_dedup(
+        df, id_col, text_col, n, num_perm, bands, threshold, hash_fn,
+        lambda sh, p: _oph_sig_from_shingles(sh, p, hash_fn),
+        "num_perm",
     )
-    sh.count()
-    sigs = _oph_sig_from_shingles(sh, num_perm, hash_fn)
-    cand = minhash_lsh_candidates(sigs, num_perm, bands, hash_fn)
-    return _verify_candidates(sh, cand, threshold)
 
 
 def dedup_clusters(
@@ -946,15 +947,7 @@ def simhash_pairs(
     )
 
     # hamming = 0: ordered combinations within one signature group
-    e1 = groups.filter(F.size("ids") >= 2).select(
-        "ids", F.posexplode("ids").alias("__i", "id_a")
-    )
-    same = e1.select(
-        "id_a",
-        F.explode(
-            F.slice("ids", F.col("__i") + F.lit(2), F.size("ids"))
-        ).alias("id_b"),
-    ).withColumn("hamming", F.lit(0))
+    same = _id_pairs(groups).withColumn("hamming", F.lit(0))
     if max_hamming == 0:
         return same.select("id_a", "id_b", "hamming")
 

@@ -10,10 +10,16 @@ scored — O(n·q/2^bits) comparisons instead of O(n·q).
 
 Cosine is the sequential F.aggregate fold from functions.vector, so
 scores are bit-reproducible by the DuckDB oracle.
+
+A zero-norm vector has no direction, so its cosine with anything is
+NULL (numpy NaN in the blocked kernels): it neither matches nor is
+matched by any scorer here, and never appears in a top-k or a pair
+list. ``semantic_dedup`` still emits its row, always kept.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -24,23 +30,134 @@ from slowfast_feature_extractor_spark.functions.vector import (
 )
 
 
-def _infer_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Kept for API compatibility: measured on 4M pairs, the unrolled
-    element_at form is ~3× SLOWER than the aggregate fold (64 bounds/
-    null-checked array accesses beat codegen out of the plan), so the
-    scoring path always uses the fold — dim stays None."""
-    return None
-
-
-def _with_norm(df: DataFrame, vec_col: str, norm_col: str, dim: int | None) -> DataFrame:
+def _with_norm(df: DataFrame, vec_col: str, norm_col: str) -> DataFrame:
     """Precompute the L2 norm ONCE per row, so each candidate pair costs
     a single dot product plus one divide instead of dot + two norm
     reductions (3× less work on the O(n·q) hot path)."""
-    return df.withColumn(norm_col, l2_norm(F.col(vec_col), dim))
+    return df.withColumn(norm_col, l2_norm(F.col(vec_col)))
 
 
-def _pair_cosine(a_vec, b_vec, a_norm, b_norm, dim):
-    return dot_product(a_vec, b_vec, dim) / (a_norm * b_norm)
+def _pair_cosine(a_vec, b_vec, a_norm, b_norm):
+    """Cosine from precomputed norms; NULL when either norm is zero."""
+    return F.try_divide(dot_product(a_vec, b_vec), a_norm * b_norm)
+
+
+def _matrix(vs) -> np.ndarray:
+    """Stack a batch of vectors (a pandas Series of array cells, or any
+    sequence of vectors) into one float64 matrix."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+
+
+def _top_k(
+    scored: DataFrame, query_col: str, id_col: str, score: str, k: int,
+    ascending: bool = False,
+) -> DataFrame:
+    """Per-query top-k by ``score`` (descending, or ascending for
+    distances), ties broken by ascending id. Output (query_id,
+    neighbor_id, rank, <score>)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(query_col).orderBy(order, F.col(id_col).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col(query_col).alias("query_id"),
+            F.col(id_col).alias("neighbor_id"),
+            "rank",
+            score,
+        )
+    )
+
+
+def _cosine_top_k(
+    corpus: DataFrame,
+    queries: DataFrame,
+    on: str | None,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    include_self: bool = False,
+    broadcast: bool = True,
+) -> DataFrame:
+    """Cosine top-k over the (corpus, query) pairs that share the ``on``
+    key (all pairs when ``None``). Both sides carry their precomputed
+    norms (``__cn``, ``__qn``); sim is round(cosine, 6), and pairs with
+    a zero-norm side (NULL sim) are dropped.
+    ``broadcast=False`` drops the broadcast hint for query sides too
+    large to replicate per executor."""
+    q = F.broadcast(queries) if broadcast else queries
+    joined = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    if not include_self:
+        joined = joined.filter(F.col(id_col) != F.col(query_id_col))
+    sim = _pair_cosine(
+        F.col(vec_col), F.col(query_vec_col), F.col("__cn"), F.col("__qn")
+    )
+    scored = joined.withColumn("sim", F.round(sim, 6))
+    # NULL sims rank after every real one (desc sorts nulls last), so
+    # dropping them above the window leaves the other ranks as they are;
+    # below it the filter would be pushed into the join condition and
+    # compute every pair's cosine twice
+    return _top_k(scored, query_id_col, id_col, "sim", k).filter(
+        F.col("sim").isNotNull()
+    )
+
+
+def _lowest_id_vectors(
+    corpus: DataFrame, id_col: str, vec_col: str, n: int
+) -> np.ndarray:
+    """The ``n`` lowest-id corpus vectors as a matrix — the deterministic
+    seed centroids / codebooks — in ONE driver-side TakeOrdered job that
+    doubles as the emptiness check (each probe job costs ~0.3 s of driver
+    latency locally and a scheduler round-trip on a cluster)."""
+    rows = (
+        corpus.select(id_col, vec_col)
+        .orderBy(F.col(id_col).asc())
+        .limit(n)
+        .collect()
+    )
+    if not rows or not rows[0][vec_col]:
+        raise ValueError("empty corpus")
+    return _matrix(r[vec_col] for r in rows)
+
+
+def _nearest_cells(bc, probe: int, round_d2: bool):
+    """Arrow-batched UDF: vector → ids of its ``probe`` nearest
+    centroids in the broadcast (C, d) matrix ``bc``, by squared L2 from
+    one (batch × cells) GEMM per batch, ties to the lowest cell id.
+    ``round_d2`` rounds distances to 6 dp first, so GEMM-computed and
+    pairwise-computed floats order identically across engines."""
+
+    @F.pandas_udf("array<int>")
+    def cells(vs: pd.Series) -> pd.Series:
+        cents = bc.value
+        if not len(vs):
+            return pd.Series([], dtype=object)
+        v = _matrix(vs)
+        d2 = (
+            (v * v).sum(axis=1)[:, None]
+            - 2.0 * (v @ cents.T)
+            + (cents * cents).sum(axis=1)[None, :]
+        )
+        if round_d2:
+            d2 = np.round(d2, 6)
+        order = np.argsort(d2, axis=1, kind="stable")[:, :probe].astype("int32")
+        return pd.Series([r.tolist() for r in order])
+
+    return cells
+
+
+def _bucket_block_counts(src: DataFrame, rows_per_block: int) -> DataFrame:
+    """Attach ``__nb`` = ceil(|bucket| / rows_per_block) to every row of
+    ``src`` (keyed by ``__bkt``) from a per-bucket count — a tiny
+    broadcast join, no driver collect."""
+    counts = src.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__cnt"))
+    return (
+        src.join(F.broadcast(counts), "__bkt")
+        .withColumn("__nb", F.ceil(F.col("__cnt") / F.lit(rows_per_block)).cast("int"))
+        .drop("__cnt")
+    )
 
 
 def knn_bruteforce(
@@ -52,41 +169,14 @@ def knn_bruteforce(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     include_self: bool = False,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k per query. Output:
     (query_id, neighbor_id, rank, sim) — sim rounded 6dp; ties broken by
-    ascending neighbor id (deterministic). ``broadcast_queries=False``
-    drops the broadcast hint for query sides too large to replicate per
-    executor (the blocked variant's fallback path) — the planner then
-    picks a non-broadcast strategy instead of OOMing on the hint."""
-    dim = _infer_dim(corpus, vec_col)
-    corpus = _with_norm(corpus, vec_col, "__cn", dim)
-    queries = _with_norm(queries, query_vec_col, "__qn", dim)
-    joined = corpus.crossJoin(
-        F.broadcast(queries) if broadcast_queries else queries
-    )
-    if not include_self:
-        joined = joined.filter(F.col(id_col) != F.col(query_id_col))
-    scored = joined.withColumn(
-        "sim",
-        F.round(
-            _pair_cosine(
-                F.col(vec_col), F.col(query_vec_col), F.col("__cn"), F.col("__qn"), dim
-            ),
-            6,
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            "sim",
-        )
+    ascending neighbor id (deterministic)."""
+    return _cosine_top_k(
+        _with_norm(corpus, vec_col, "__cn"),
+        _with_norm(queries, query_vec_col, "__qn"),
+        None, k, id_col, vec_col, query_id_col, query_vec_col, include_self,
     )
 
 
@@ -113,33 +203,14 @@ def knn_lsh(
 ) -> DataFrame:
     """Approximate top-k: score only same-sign-bucket pairs. Same output
     schema as knn_bruteforce (rank is within-bucket)."""
-    dim = _infer_dim(corpus, vec_col)
-    c = _with_norm(corpus, vec_col, "__cn", dim).withColumn(
+    c = _with_norm(corpus, vec_col, "__cn").withColumn(
         "bucket", sign_bucket(F.col(vec_col), bits)
     )
-    q = _with_norm(queries, query_vec_col, "__qn", dim).withColumn(
+    q = _with_norm(queries, query_vec_col, "__qn").withColumn(
         "bucket", sign_bucket(F.col(query_vec_col), bits)
     )
-    joined = c.join(F.broadcast(q), "bucket").filter(F.col(id_col) != F.col(query_id_col))
-    scored = joined.withColumn(
-        "sim",
-        F.round(
-            _pair_cosine(
-                F.col(vec_col), F.col(query_vec_col), F.col("__cn"), F.col("__qn"), dim
-            ),
-            6,
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            "sim",
-        )
+    return _cosine_top_k(
+        c, q, "bucket", k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -163,24 +234,18 @@ def knn_bruteforce_blocked(
     The broadcast query matrix is the contract: a 100k×1k-float64 query
     set is ~800 MB on the driver AND per executor. Guarded (VERDICT r5
     #1): when the zero-job footer/stats estimate puts the query side
-    above ``max_query_rows``, fall back to the join-based
-    :func:`knn_bruteforce` (same output contract, no driver
-    materialization) instead of collecting into an OOM."""
-    import numpy as np
-
+    above ``max_query_rows``, fall back to :func:`knn_bruteforce`'s join
+    plan without its broadcast hint (same output contract, no driver
+    materialization; the planner picks a non-broadcast strategy) instead
+    of collecting into an OOM."""
     spark = corpus.sparkSession
     est = _estimate_rows(queries)
     if est is not None and est > max_query_rows:
-        return knn_bruteforce(
-            corpus,
-            queries,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            include_self=include_self,
-            broadcast_queries=False,
+        return _cosine_top_k(
+            _with_norm(corpus, vec_col, "__cn"),
+            _with_norm(queries, query_vec_col, "__qn"),
+            None, k, id_col, vec_col, query_id_col, query_vec_col,
+            include_self, broadcast=False,
         )
     q_rows = queries.select(query_id_col, query_vec_col).collect()
     if not q_rows:
@@ -190,19 +255,17 @@ def knn_bruteforce_blocked(
             [], "query_id long, neighbor_id long, rank int, sim double"
         )
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    q_mat = _matrix(r[1] for r in q_rows)
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def _blocks(it):
-        import pandas as pd
-
         ids_q, mat_q = bc.value
         for pdf in it:
             if not len(pdf):
                 continue
             c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
+            a = _matrix(pdf[vec_col])
             a = a / np.linalg.norm(a, axis=1, keepdims=True)
             sims = np.round(a @ mat_q.T, 6)  # (batch, n_q)
             if not include_self:
@@ -229,14 +292,7 @@ def knn_bruteforce_blocked(
     cand = corpus.select(id_col, vec_col).mapInPandas(
         _blocks, schema="query_id long, neighbor_id long, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
-    )
+    return _top_k(cand, "query_id", "neighbor_id", "sim", k)
 
 
 def _estimate_rows(df: DataFrame, max_files: int = 256) -> int | None:
@@ -326,31 +382,18 @@ def embedding_neardup_blocked(
             n = df.count()
         src = src.withColumn("__nb", F.lit(int(max(1, -(-n // rows_per_block)))))
     else:
-        counts = src.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__cnt"))
-        src = (
-            src.join(F.broadcast(counts), "__bkt")
-            .withColumn(
-                "__nb",
-                F.ceil(F.col("__cnt") / F.lit(rows_per_block)).cast("int"),
-            )
-            .drop("__cnt")
-        )
-    return _blocked_pair_hits(src, threshold, rows_per_block, strip_rows)
+        src = _bucket_block_counts(src, rows_per_block)
+    return _blocked_pair_hits(src, threshold, strip_rows)
 
 
 def _blocked_pair_hits(
-    src: DataFrame,
-    threshold: float,
-    rows_per_block: int = 4096,
-    strip_rows: int = 2048,
+    src: DataFrame, threshold: float, strip_rows: int = 2048
 ) -> DataFrame:
     """Block-pair GEMM scorer shared by :func:`embedding_neardup_blocked`
     and :func:`semantic_dedup`'s cell-local prune. ``src`` must carry
     (__id, __v, __bkt, __nb) where ``__nb`` is the per-bucket block
     count; emits (id_a, id_b, sim) for every same-bucket pair with
     round(cosine, 6) >= ``threshold`` and id_a < id_b."""
-    import numpy as np
-
     src = src.withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("__id")), F.col("__nb")).cast("int")
     )
@@ -364,10 +407,8 @@ def _blocked_pair_hits(
     )
 
     def _score(pdf):
-        import pandas as pd
-
         ids = pdf["__id"].to_numpy(dtype=np.int64)
-        vecs = np.stack(pdf["__v"].map(lambda v: np.asarray(v, dtype=np.float64)))
+        vecs = _matrix(pdf["__v"])
         vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
         blk = pdf["__blk"].to_numpy()
         i, j = int(pdf["__i"].iat[0]), int(pdf["__j"].iat[0])
@@ -462,8 +503,6 @@ def knn_ivf(
     Full probe (``n_probe >= n_cells``) overrides ``quantizer="kmeans"``
     with ``"seed"`` and ignores ``fit_fraction``: the top-k table is
     provably the same, but cell assignments are the seed quantizer's."""
-    import numpy as np
-
     if n_probe >= n_cells and quantizer == "kmeans":
         # Full probe makes the quantizer output-irrelevant: every query
         # explodes over ALL cell ids and each corpus row lands in
@@ -478,23 +517,8 @@ def knn_ivf(
         # keeps the identical IVF assign/join machinery in the plan.
         quantizer = "seed"
 
-    # driver-side probes are fused: the seed path's centroid collect
-    # doubles as the emptiness check, so the query plans ONE tiny
-    # TakeOrdered job instead of a dim .first() probe plus a collect —
-    # each probe job costs ~0.3 s of driver latency on a local run and
-    # a full scheduler round-trip on a cluster (guide §5)
     if quantizer == "seed":
-        rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(F.col(id_col).asc())
-            .limit(n_cells)
-            .collect()
-        )
-        if not rows or not rows[0][vec_col]:
-            raise ValueError("empty corpus")
-        centroids = np.stack(
-            [np.asarray(r[vec_col], dtype=np.float64) for r in rows]
-        )
+        centroids = _lowest_id_vectors(corpus, id_col, vec_col, n_cells)
     elif quantizer == "kmeans":
         dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
         if not dim_row or not dim_row["d"]:
@@ -509,71 +533,22 @@ def knn_ivf(
             )
         train = train.select(array_to_vector(F.col(vec_col)).alias("features"))
         model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(train)
-        centroids = np.stack(
-            [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
-        )
+        centroids = _matrix(model.clusterCenters())
     else:
         raise ValueError("quantizer must be 'kmeans' or 'seed'")
     round_d2 = quantizer == "seed"
     bc = corpus.sparkSession.sparkContext.broadcast(centroids)
-
-    def _cell_udf(probe: int):
-        @F.pandas_udf("array<int>")
-        def cells(vs: pd.Series) -> pd.Series:
-            cents = bc.value  # (C, d)
-            if not len(vs):
-                return pd.Series([], dtype=object)
-            # one batched (batch × cells) distance matrix per Arrow
-            # batch — BLAS GEMM, no per-row Python
-            v = np.stack(vs.map(lambda x: np.asarray(x, dtype=np.float64)))
-            d2 = (
-                (v * v).sum(axis=1)[:, None]
-                - 2.0 * (v @ cents.T)
-                + (cents * cents).sum(axis=1)[None, :]
-            )
-            if round_d2:
-                d2 = np.round(d2, 6)
-            order = np.argsort(d2, axis=1, kind="stable")[:, :probe].astype("int32")
-            return pd.Series([r.tolist() for r in order])
-
-        return cells
-
-    dim = None
     # norms precomputed ONCE per row (query side: before the n_probe
     # explode) — inlining l2_norm in the scoring projection would
     # re-reduce both arrays per candidate PAIR, 3x the hot-path work
     c = corpus.withColumn(
-        "cell", F.element_at(_cell_udf(1)(F.col(vec_col)), 1)
-    ).withColumn("__cn", l2_norm(F.col(vec_col), dim))
-    q = queries.withColumn("__qn", l2_norm(F.col(query_vec_col), dim)).withColumn(
-        "cell", F.explode(_cell_udf(n_probe)(F.col(query_vec_col)))
+        "cell", F.element_at(_nearest_cells(bc, 1, round_d2)(F.col(vec_col)), 1)
+    ).withColumn("__cn", l2_norm(F.col(vec_col)))
+    q = queries.withColumn("__qn", l2_norm(F.col(query_vec_col))).withColumn(
+        "cell", F.explode(_nearest_cells(bc, n_probe, round_d2)(F.col(query_vec_col)))
     )
-    joined = c.join(F.broadcast(q), "cell").filter(F.col(id_col) != F.col(query_id_col))
-    scored = joined.withColumn(
-        "sim",
-        F.round(
-            _pair_cosine(
-                F.col(vec_col),
-                F.col(query_vec_col),
-                F.col("__cn"),
-                F.col("__qn"),
-                dim,
-            ),
-            6,
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            "sim",
-        )
+    return _cosine_top_k(
+        c, q, "cell", k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -589,8 +564,7 @@ def embedding_neardup(
     ``bits=None`` → exact all-pairs (small corpora / verification);
     ``bits=b`` → sign-LSH blocked (scale path; near-dups at ≥0.95 cosine
     almost always share the sign pattern)."""
-    dim = _infer_dim(df, vec_col)
-    normed = _with_norm(df, vec_col, "__n", dim)
+    normed = _with_norm(df, vec_col, "__n")
     a = normed.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"), F.col("__n").alias("__na")
     )
@@ -608,9 +582,7 @@ def embedding_neardup(
         .withColumn(
             "sim",
             F.round(
-                _pair_cosine(
-                    F.col("v_a"), F.col("v_b"), F.col("__na"), F.col("__nb"), dim
-                ),
+                _pair_cosine(F.col("v_a"), F.col("v_b"), F.col("__na"), F.col("__nb")),
                 6,
             ),
         )
@@ -650,8 +622,7 @@ def semantic_dedup(
     id — deterministic on both engines."""
     from pyspark import StorageLevel
 
-    dim = _infer_dim(df, vec_col)
-    normed = _with_norm(df, vec_col, "__n", dim).select(
+    normed = _with_norm(df, vec_col, "__n").select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "__n"
     )
     seeds = (
@@ -666,7 +637,7 @@ def semantic_dedup(
     scored = normed.join(F.broadcast(seeds)).withColumn(
         "sim",
         F.round(
-            _pair_cosine(F.col("v"), F.col("sv"), F.col("__n"), F.col("__sn"), dim), 6
+            _pair_cosine(F.col("v"), F.col("sv"), F.col("__n"), F.col("__sn")), 6
         ),
     )
     assign = (
@@ -686,16 +657,11 @@ def semantic_dedup(
     # join): persist so the seed-scoring assignment runs once per
     # execution instead of three times
     cells = normed.join(assign, "id").persist(StorageLevel.MEMORY_AND_DISK)
-    counts = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("__cnt"))
-    rows_per_block = 4096
-    src = cells.join(F.broadcast(counts), "cell").select(
-        F.col("id").alias("__id"),
-        F.col("v").alias("__v"),
-        F.col("cell").alias("__bkt"),
-        F.ceil(F.col("__cnt") / F.lit(rows_per_block)).cast("int").alias("__nb"),
+    src = cells.select(
+        F.col("id").alias("__id"), F.col("v").alias("__v"), F.col("cell").alias("__bkt")
     )
     removed = (
-        _blocked_pair_hits(src, threshold, rows_per_block)
+        _blocked_pair_hits(_bucket_block_counts(src, rows_per_block=4096), threshold)
         .select(F.col("id_b").alias("id"))
         .distinct()
         .withColumn("__rm", F.lit(True))
@@ -757,32 +723,17 @@ def knn_ivfpq(
     — candidates drop from O(N x Q) to O(N x Q x n_probe / n_cells),
     the shape that makes PQ usable at 10^10 vectors.
     """
-    import numpy as np
-
     # ONE driver-side probe job serves everything plan-time: the lowest
     # max(n_codes, n_cells) corpus vectors give the PQ codebooks, the
-    # coarse-quantizer centroids AND the dimensionality/emptiness
-    # checks (the dim .first() and the separate centroid collect each
-    # cost a full probe job — ~0.3 s driver latency apiece locally, a
-    # scheduler round-trip on a cluster; guide §5)
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(max(n_codes, n_cells or 0))
-        .collect()
-    )
-    if not rows or not rows[0][vec_col]:
-        raise ValueError("empty corpus")
-    dim = len(rows[0][vec_col])
+    # coarse-quantizer centroids AND the dimensionality/emptiness checks
+    seeds = _lowest_id_vectors(corpus, id_col, vec_col, max(n_codes, n_cells or 0))
+    dim = seeds.shape[1]
     if dim % m_sub:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     sub = dim // m_sub
-    if len(rows) < n_codes:
+    if len(seeds) < n_codes:
         raise ValueError(f"corpus smaller than n_codes={n_codes}")
-    train = np.stack(
-        [np.asarray(r[vec_col], dtype=np.float64) for r in rows[:n_codes]]
-    )
-    books = train.reshape(n_codes, m_sub, sub).transpose(1, 0, 2)  # (M,K,sub)
+    books = seeds[:n_codes].reshape(n_codes, m_sub, sub).transpose(1, 0, 2)  # (M,K,sub)
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(books)
 
@@ -791,8 +742,7 @@ def knn_ivfpq(
         bk = bc.value
         if not len(vs):
             return pd.Series([], dtype=object)
-        v = np.stack(vs.map(lambda x: np.asarray(x, dtype=np.float64)))
-        v = v.reshape(len(v), m_sub, sub)
+        v = _matrix(vs).reshape(len(vs), m_sub, sub)
         codes = np.empty((len(v), m_sub), dtype="int32")
         for m in range(m_sub):
             d2 = ((v[:, m, None, :] - bk[m][None, :, :]) ** 2).sum(axis=2)
@@ -803,44 +753,20 @@ def knn_ivfpq(
             ]
         return pd.Series([r.tolist() for r in codes])
 
-    cells = None
+    keys, cell = [], []
     if n_cells is not None:
-        cents = np.stack(
-            [np.asarray(r[vec_col], dtype=np.float64) for r in rows[:n_cells]]
+        bc_cells = spark.sparkContext.broadcast(seeds[:n_cells])
+        cell = [
+            F.element_at(_nearest_cells(bc_cells, 1, True)(F.col(vec_col)), 1).alias("cell")
+        ]
+        queries = queries.withColumn(
+            "cell",
+            F.explode(_nearest_cells(bc_cells, n_probe, True)(F.col(query_vec_col))),
         )
-        bc_cells = spark.sparkContext.broadcast(cents)
-
-        def _cells_udf(probe: int):
-            @F.pandas_udf("array<int>")
-            def cf(vs: pd.Series) -> pd.Series:
-                cc = bc_cells.value
-                if not len(vs):
-                    return pd.Series([], dtype=object)
-                v = np.stack(vs.map(lambda x: np.asarray(x, dtype=np.float64)))
-                d2 = (
-                    (v * v).sum(axis=1)[:, None]
-                    - 2.0 * (v @ cc.T)
-                    + (cc * cc).sum(axis=1)[None, :]
-                )
-                order = np.argsort(np.round(d2, 6), axis=1, kind="stable")[
-                    :, :probe
-                ].astype("int32")
-                return pd.Series([r.tolist() for r in order])
-
-            return cf
-
-        cells = _cells_udf
-
-    if cells is not None:
-        codes = corpus.select(
-            id_col,
-            F.element_at(cells(1)(F.col(vec_col)), 1).alias("cell"),
-            F.posexplode(encode(F.col(vec_col))).alias("m", "code"),
-        )
-    else:
-        codes = corpus.select(
-            id_col, F.posexplode(encode(F.col(vec_col))).alias("m", "code")
-        )
+        keys = ["cell"]
+    codes = corpus.select(
+        id_col, *cell, F.posexplode(encode(F.col(vec_col))).alias("m", "code")
+    )
     cb = spark.createDataFrame(
         [
             (m, c, books[m][c].tolist())
@@ -849,14 +775,9 @@ def knn_ivfpq(
         ],
         "m int, code int, cent array<double>",
     )
-    q = queries
-    if cells is not None:
-        q = q.withColumn(
-            "cell", F.explode(cells(n_probe)(F.col(query_vec_col)))
-        )
-    qsub = q.select(
+    qsub = queries.select(
         query_id_col,
-        *(["cell"] if cells is not None else []),
+        *keys,
         F.posexplode(
             F.array(
                 *[
@@ -872,7 +793,7 @@ def knn_ivfpq(
     )
     lut = qsub.join(F.broadcast(cb), "m").select(
         query_id_col,
-        *(["cell"] if cells is not None else []),
+        *keys,
         "m",
         "code",
         F.round(
@@ -888,26 +809,13 @@ def knn_ivfpq(
             6,
         ).alias("d2r"),
     )
-    join_keys = (["cell"] if cells is not None else []) + ["m", "code"]
     scored = (
-        codes.join(F.broadcast(lut), join_keys)
+        codes.join(F.broadcast(lut), keys + ["m", "code"])
         .filter(F.col(id_col) != F.col(query_id_col))
         .groupBy(query_id_col, id_col)
         .agg(F.round(F.sum("d2r"), 6).alias("adist"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col("rank").cast("int").alias("rank"),
-            "adist",
-        )
-    )
+    return _top_k(scored, query_id_col, id_col, "adist", k, ascending=True)
 
 
 def tfidf_cosine_pairs(

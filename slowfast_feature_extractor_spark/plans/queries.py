@@ -27,7 +27,6 @@ from slowfast_feature_extractor_spark.functions.keys import (
     rater_status,
 )
 from slowfast_feature_extractor_spark.functions.timeutil import epoch_us
-from slowfast_feature_extractor_spark.functions.vector import cosine_similarity
 from slowfast_feature_extractor_spark.operators import dedup as DD
 from slowfast_feature_extractor_spark.operators import maintenance as MT
 from slowfast_feature_extractor_spark.operators import multimodal as MM
@@ -155,14 +154,20 @@ FROM clicks c ASOF LEFT JOIN view_feats v
 """
 
 
-def q_featurize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_featurize_pages(spark: SparkSession, sf_dir: str, chunked: bool) -> DataFrame:
     """THE flagship pipeline itself (W2+W3+W5+W6+A2+J4), driver-checkable:
     events reshaped to the pages schema, run through
     :func:`featurize_pages` (extraction UDF → dual-rate trailing windows →
     np.interp resample → anchor carry-forward as-of fusion → slow‖fast
     concat, reference/test_net.py:62-74 + models/head_helper.py:19 +
     datasets/videoset.py:194-196), fused vector exploded to
-    (url, warc_ts, idx, value) so DuckDB can hash it."""
+    (url, warc_ts, idx, value) so DuckDB can hash it.
+
+    ``chunked`` engages the hot-url skew path (``chunk_trunc="month"`` →
+    range-partition-with-carry, operators/skew.py): a million-revisit url
+    parallelizes across its time chunks instead of serializing one task.
+    The plain row keeps ``chunk_trunc="auto"``. Both rows share one
+    oracle — the chunked plan is value-exact."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     pages = ev.select(
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("url"),
@@ -175,34 +180,15 @@ def q_featurize_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("en").alias("lang"),
     )
     out = featurize_pages(pages, fast_rows=8, slow_rows=16, fast_len=8, slow_len=4,
-                          tiebreak="snapshot_id")
+                          tiebreak="snapshot_id",
+                          chunk_trunc="month" if chunked else "auto")
     return out.select(
         "url", "warc_ts", F.posexplode("fused_vec").alias("idx", "value")
     ).withColumn("value", F.round("value", 6))
 
 
-def q_featurize_pages_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship with the hot-url skew path engaged
-    (``chunk_trunc="month"`` → range-partition-with-carry,
-    operators/skew.py): a million-revisit url parallelizes across its
-    time chunks instead of serializing one task. Same oracle as
-    ``featurize_pages`` — the chunked plan is value-exact."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pages = ev.select(
-        F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("url"),
-        F.col("ts").alias("warc_ts"),
-        F.col("event_id").alias("snapshot_id"),
-        F.lit(None).cast("binary").alias("html"),
-        F.concat(
-            F.col("event_type"), F.lit(":"), F.coalesce(F.col("props"), F.lit(""))
-        ).alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    out = featurize_pages(pages, fast_rows=8, slow_rows=16, fast_len=8, slow_len=4,
-                          tiebreak="snapshot_id", chunk_trunc="month")
-    return out.select(
-        "url", "warc_ts", F.posexplode("fused_vec").alias("idx", "value")
-    ).withColumn("value", F.round("value", 6))
+q_featurize_pages = functools.partial(_q_featurize_pages, chunked=False)
+q_featurize_pages_chunked = functools.partial(_q_featurize_pages, chunked=True)
 
 
 def _resample_sql(ys: str, k: int) -> str:
@@ -276,13 +262,21 @@ FROM f, range(0, 12) AS r(idx)
 """
 
 
-def q_window_dual_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_window_dual_rate(spark: SparkSession, sf_dir: str, chunked: bool) -> DataFrame:
     """W2/W3: strict trailing fast+slow window aggregates on every row,
-    plus the leakage-audit columns."""
+    plus the leakage-audit columns.
+
+    ``chunked`` takes the skew path: range-partition-with-carry
+    (operators/skew.py) — hot entities split across time chunks, bounded
+    tails carried — checked against the SAME oracle (results are exactly
+    equal by construction). Month chunks: the fixture is SPARSE (~2
+    rows/user/day), so day chunks would emit a 64-row carry per ~2-row
+    chunk (the operator targets dense hot entities where rows-per-chunk
+    >> slow_rows)."""
     out = dual_rate_features(
         _ev(spark, sf_dir), entity="user_id", ts="ts", measure="value_cents",
-        fast_rows=8, slow_rows=64, strict=True, round_to=6,
-        tiebreak="event_id",
+        fast_rows=8, slow_rows=64, strict=True, round_to=6, tiebreak="event_id",
+        chunk=F.to_date(F.date_trunc("month", F.col("ts"))) if chunked else None,
     )
     return out.select(
         "user_id", "ts", "event_id",
@@ -290,6 +284,10 @@ def q_window_dual_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "slow_avg", "slow_sum", "slow_min", "slow_max", "slow_cnt",
         "n_hist_rows", "max_input_ts",
     )
+
+
+q_window_dual_rate = functools.partial(_q_window_dual_rate, chunked=False)
+q_window_dual_rate_chunked = functools.partial(_q_window_dual_rate, chunked=True)
 
 
 ORACLE_WINDOW_DUAL_RATE = f"""
@@ -313,27 +311,6 @@ WINDOW
   w_slow AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 64 PRECEDING AND 1 PRECEDING),
   w_hist AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 """
-
-
-def q_window_dual_rate_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew path of W2/W3: range-partition-with-carry (operators/skew.py)
-    — hot entities split across time chunks, bounded tails carried —
-    checked against the SAME oracle as window_dual_rate (results are
-    exactly equal by construction)."""
-    # month chunks: the fixture is SPARSE (~2 rows/user/day), so day
-    # chunks would emit a 64-row carry per ~2-row chunk (the operator
-    # targets dense hot entities where rows-per-chunk >> slow_rows)
-    out = dual_rate_features(
-        _ev(spark, sf_dir), entity="user_id", ts="ts", measure="value_cents",
-        fast_rows=8, slow_rows=64, strict=True, round_to=6, tiebreak="event_id",
-        chunk=F.to_date(F.date_trunc("month", F.col("ts"))),
-    )
-    return out.select(
-        "user_id", "ts", "event_id",
-        "fast_avg", "fast_sum", "fast_min", "fast_max", "fast_cnt",
-        "slow_avg", "slow_sum", "slow_min", "slow_max", "slow_cnt",
-        "n_hist_rows", "max_input_ts",
-    )
 
 
 def _asof_clicks_views(spark, sf_dir, allow_exact: bool) -> DataFrame:
@@ -405,11 +382,22 @@ FROM m
 """
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W8: gap-based sessionization (30-min revisit gap)."""
-    out = sessionize(_ev(spark, sf_dir), entity="user_id", ts="ts",
-                     gap_seconds=1800.0, tiebreak="event_id")
+def _q_sessionize(spark: SparkSession, sf_dir: str, chunked: bool) -> DataFrame:
+    """W8: gap-based sessionization (30-min revisit gap). ``chunked``
+    takes the hot-entity skew path: gap sessionization per (user,
+    month-chunk) with a one-row carry + per-chunk session-start prefix
+    (``sessionize(chunk=)``) — value-exact vs the plain sessionizer,
+    same oracle."""
+    out = sessionize(
+        _ev(spark, sf_dir), entity="user_id", ts="ts", gap_seconds=1800.0,
+        tiebreak="event_id",
+        chunk=F.date_trunc("month", F.col("ts")) if chunked else None,
+    )
     return out.select("user_id", "ts", "event_id", "session_idx", "session_id")
+
+
+q_sessionize = functools.partial(_q_sessionize, chunked=False)
+q_sessionize_chunked = functools.partial(_q_sessionize, chunked=True)
 
 
 ORACLE_SESSIONIZE = f"""
@@ -428,18 +416,6 @@ SELECT user_id, ts, event_id, session_idx,
        concat(CAST(user_id AS VARCHAR), '#', CAST(session_idx AS VARCHAR)) AS session_id
 FROM s
 """
-
-
-def q_sessionize_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W8 with the hot-entity skew path: gap sessionization per
-    (user, month-chunk) with a one-row carry + per-chunk session-start
-    prefix (``sessionize(chunk=)``) — value-exact vs the plain
-    sessionizer, same oracle."""
-    out = sessionize(
-        _ev(spark, sf_dir), entity="user_id", ts="ts", gap_seconds=1800.0,
-        tiebreak="event_id", chunk=F.date_trunc("month", F.col("ts")),
-    )
-    return out.select("user_id", "ts", "event_id", "session_idx", "session_id")
 
 
 def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,12 +32,11 @@ def _write_pages(spark, pages_pd, tmp_path):
 
 
 def test_config_from_args():
-    cfg = FeaturizerConfig.from_args(
-        ["--input-path", "/i", "--output-path", "/o", "--ledger-path", "/l",
-         "--fast-rows", "16", "--session-gap-s", "60.5"]
-    )
-    assert cfg.input_path == "/i" and cfg.fast_rows == 16
-    assert cfg.session_gap_s == 60.5 and cfg.slow_rows == 64
+    base = ["--input-path", "/i", "--output-path", "/o", "--ledger-path", "/l"]
+    cfg = FeaturizerConfig.from_args(base + ["--fast-rows", "16"])
+    assert cfg.input_path == "/i" and cfg.fast_rows == 16 and cfg.slow_rows == 64
+    with pytest.raises(SystemExit):  # the job never read a session gap
+        FeaturizerConfig.from_args(base + ["--session-gap-s", "60.5"])
 
 
 def test_backfill_job_end_to_end(spark, pages_pd, tmp_path):

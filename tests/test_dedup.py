@@ -125,6 +125,17 @@ def test_lsh_dedup_rejects_non_positive_threshold(docs, dedup, banding, threshol
     assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
+@pytest.mark.parametrize("dedup,hashes_param", [
+    ("minhash_lsh_dedup", "num_hashes"),
+    ("minhash_oph_dedup", "num_perm"),
+])
+def test_lsh_dedup_half_banding_names_callers_parameter(docs, dedup, hashes_param):
+    """Both entry points share one driver; its banding check still names
+    each caller's own hash-count parameter."""
+    with pytest.raises(ValueError, match=f"pass both {hashes_param} and bands"):
+        getattr(DD, dedup)(docs, bands=4)
+
+
 def _lsh_pairs(df, dedup, banding, threshold=0.3):
     return {(r.id_a, r.id_b): r.jaccard for r in
             getattr(DD, dedup)(df, threshold=threshold, **banding).collect()}

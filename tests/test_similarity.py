@@ -229,3 +229,38 @@ def test_semantic_dedup_cell_local_prune(spark):
     # vector 4 is orthogonal to both seeds (sim 0 to each): tie breaks
     # to the lowest seed id, and nothing in its cell is within threshold
     assert out[4] == (0, True)
+
+
+ZERO_VECS = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])]
+
+
+@pytest.mark.parametrize(
+    "scorer",
+    ["knn_bruteforce", "knn_lsh", "knn_ivf", "embedding_neardup", "semantic_dedup"],
+)
+def test_zero_vector_neither_matches_nor_is_matched(spark, scorer):
+    """A zero-norm vector has no cosine with anything: under ANSI mode
+    every JVM scorer must drop it (NULL sim) instead of raising
+    DIVIDE_BY_ZERO, and so return what its blocked numpy twin returns."""
+    emb = spark.createDataFrame(ZERO_VECS, schema="vec_id long, embedding array<double>")
+    if scorer == "semantic_dedup":
+        out = {r.vec_id: (r.cell, r.keep) for r in
+               SIM.semantic_dedup(emb, k=2, threshold=0.9).collect()}
+        # seeds 0 (zero) and 1; 2 is a near-dup of 1 in its cell
+        assert out == {0: (0, True), 1: (1, True), 2: (1, False), 3: (1, True)}
+        return
+    if scorer == "embedding_neardup":
+        got = SIM.embedding_neardup(emb, threshold=-1.1)
+        want = SIM.embedding_neardup_blocked(emb, threshold=-1.1)
+    else:
+        q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+        got = {
+            "knn_bruteforce": lambda: SIM.knn_bruteforce(emb, q, k=3),
+            "knn_lsh": lambda: SIM.knn_lsh(emb, q, k=3, bits=2),
+            "knn_ivf": lambda: SIM.knn_ivf(
+                emb, q, k=3, n_cells=2, n_probe=2, quantizer="seed"),
+        }[scorer]()
+        want = SIM.knn_bruteforce_blocked(emb, q, k=3)
+    got, want = sorted(map(tuple, got.collect())), sorted(map(tuple, want.collect()))
+    assert got == want and len(got) > 0
+    assert all(0 not in r[:2] for r in got)  # the zero vector is in no row

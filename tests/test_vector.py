@@ -57,9 +57,11 @@ def test_resample_udf_matches_numpy(spark):
 
 def test_cosine_fold(spark):
     df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]), ([1.0, 2.0], [2.0, 4.0])],
+        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]), ([1.0, 2.0], [2.0, 4.0]),
+         ([0.0, 0.0], [1.0, 0.0])],
         schema="a array<double>, b array<double>",
     )
     sims = [r[0] for r in df.select(cosine_similarity(F.col("a"), F.col("b"))).collect()]
     assert sims[0] == 1.0 and sims[1] == 0.0
     assert abs(sims[2] - 1.0) < 1e-12
+    assert sims[3] is None  # zero norm: NULL, not DIVIDE_BY_ZERO under ANSI
