@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from slowfast_feature_extractor_spark.plans.featurize import featurize_pages  # noqa: E402
 from slowfast_feature_extractor_spark.plans.queries import REGISTRY  # noqa: E402
-from slowfast_feature_extractor_spark.session import get_spark  # noqa: E402
+from slowfast_feature_extractor_spark.session import get_spark, query_scope  # noqa: E402
 
 BENCH_QUERIES = [
     "pit_dual_rate",
@@ -215,12 +215,13 @@ def run_suite(sf_dir: str, cpus: int, repeats: int = 3, visits: int = 2) -> dict
         best = float("inf")
         for i in range(max(reps, 4)):
             # pay the full pipeline every repeat: operators that persist
-            # intermediates would otherwise serve later repeats from the
-            # previous run's cache (same integrity rule as --scaling)
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _materialize(thunk())
-            dt = time.perf_counter() - t0
+            # intermediates would otherwise serve later repeats (and
+            # later queries) from this run's cache; the scope releases
+            # them after the clock stops (same rule as --scaling)
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                _materialize(thunk())
+                dt = time.perf_counter() - t0
             improved = dt < best * 0.9
             best = min(best, dt)
             if i + 1 >= reps and not improved:
@@ -360,10 +361,10 @@ def run_scaling_suite(cpus: int, repeats: int = 2) -> dict:
             # index) must pay the FULL pipeline each repeat — Spark's
             # CacheManager would otherwise serve repeat 2+ from the
             # previous run's cache and hide the stage that scales
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _materialize(thunk())
-            best = min(best, time.perf_counter() - t0)
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                _materialize(thunk())
+                best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
         log(f"  {name}: {timings[name]:.3f}s")
     pages_per_sec = round(n_pages / timings["featurize_pages_1m"], 1)

@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from slowfast_feature_extractor_spark.plans.queries import REGISTRY  # noqa: E402
-from slowfast_feature_extractor_spark.session import get_spark  # noqa: E402
+from slowfast_feature_extractor_spark.session import get_spark, query_scope  # noqa: E402
 
 
 def log(*a):
@@ -60,19 +60,19 @@ def main() -> None:
             d = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "plans", plans_tag)
             os.makedirs(d, exist_ok=True)
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"))
+            with query_scope(spark):
+                plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"))
             with open(os.path.join(d, f"{name}_{plans_suffix}.txt"), "w") as f:
                 f.write(plan)
         best = float("inf")
         for r in range(max(reps, 4)):
-            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name} rep{r}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                dt = time.perf_counter() - t0
             improved = dt < best * 0.9
             best = min(best, dt)
             log(f"  {name} rep{r}: {dt:.3f}s")

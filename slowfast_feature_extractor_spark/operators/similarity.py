@@ -48,6 +48,14 @@ def _matrix(vs) -> np.ndarray:
     return np.stack([np.asarray(v, dtype=np.float64) for v in vs])
 
 
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """``m`` with each row scaled to unit L2 norm. A zero-norm row
+    becomes NaN without a divide warning, so it scores non-finite and
+    is dropped like a NULL cosine."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
 def _top_k(
     scored: DataFrame, query_col: str, id_col: str, score: str, k: int,
     ascending: bool = False,
@@ -183,10 +191,12 @@ def knn_bruteforce(
 def sign_bucket(vec_col, bits: int = 4):
     """LSH bucket id from the sign of the first ``bits`` dimensions
     (axis-aligned hyperplanes — deterministic and portable; swap in a
-    seeded random-projection matrix for production recall)."""
+    seeded random-projection matrix for production recall). A dimension
+    past the end of a shorter vector adds no bit."""
     b = None
     for j in range(bits):
-        t = F.when(F.element_at(vec_col, j + 1) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        dim = F.try_element_at(vec_col, F.lit(j + 1))
+        t = F.when(dim >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         b = t if b is None else b + t
     return b
 
@@ -255,8 +265,7 @@ def knn_bruteforce_blocked(
             [], "query_id long, neighbor_id long, rank int, sim double"
         )
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = _matrix(r[1] for r in q_rows)
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_mat = _unit_rows(_matrix(r[1] for r in q_rows))
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def _blocks(it):
@@ -265,8 +274,7 @@ def knn_bruteforce_blocked(
             if not len(pdf):
                 continue
             c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a = _matrix(pdf[vec_col])
-            a = a / np.linalg.norm(a, axis=1, keepdims=True)
+            a = _unit_rows(_matrix(pdf[vec_col]))
             sims = np.round(a @ mat_q.T, 6)  # (batch, n_q)
             if not include_self:
                 sims[c_ids[:, None] == ids_q[None, :]] = -np.inf
@@ -408,8 +416,7 @@ def _blocked_pair_hits(
 
     def _score(pdf):
         ids = pdf["__id"].to_numpy(dtype=np.int64)
-        vecs = _matrix(pdf["__v"])
-        vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+        vecs = _unit_rows(_matrix(pdf["__v"]))
         blk = pdf["__blk"].to_numpy()
         i, j = int(pdf["__i"].iat[0]), int(pdf["__j"].iat[0])
         if i == j:

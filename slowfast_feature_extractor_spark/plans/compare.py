@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from slowfast_feature_extractor_spark.session import footprint, query_scope
 from slowfast_feature_extractor_spark.sources.tables import TABLE_NAMES
 
 
@@ -79,7 +80,16 @@ def _values_equal(a, b) -> bool:
 def compare(
     spark: SparkSession, sf_dir: str, query_fn, oracle: str, max_report: int = 5
 ) -> tuple[bool, str]:
-    got = _canon(query_fn(spark, sf_dir).toPandas())
+    """Run ``query_fn`` inside :func:`query_scope` and compare it with
+    ``oracle``. Fails when the scope leaves ``spark`` holding anything
+    it did not hold before: a persisted RDD, a cache entry, a catalog
+    table or view, or a scratch directory."""
+    with query_scope(spark) as before:
+        got = _canon(query_fn(spark, sf_dir).toPandas())
+    after = footprint(spark)
+    leaked = {k: sorted(map(str, after[k].keys() - before[k].keys())) for k in before}
+    if any(leaked.values()):
+        return False, f"left behind by the query's scope: {leaked}"
     con = duckdb_con(sf_dir)
     want = _canon(con.sql(oracle).df())
     con.close()

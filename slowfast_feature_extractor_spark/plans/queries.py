@@ -13,6 +13,9 @@ Keys map to the SURVEY §2 inventory in the comments.
 from __future__ import annotations
 
 import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -46,6 +49,7 @@ from slowfast_feature_extractor_spark.plans.featurize import (
     pit_dual_rate_events,
     pit_dual_rate_from,
 )
+from slowfast_feature_extractor_spark.session import _scratch
 from slowfast_feature_extractor_spark.sources.tables import parallelize_scan
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1849,56 +1853,27 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the emitted matches equal the batch interval join EXACTLY and
     the row hashes against a plain DuckDB join. Gap reported in exact
     integer microseconds."""
-    import os
-    import tempfile
-
     ev = _ev(spark, sf_dir).select("event_id", "user_id", "ts")
-    base = tempfile.mkdtemp(prefix="sfe_sjoin_")
-    src_a = os.path.join(base, "src_a")
-    src_b = os.path.join(base, "src_b")
-    os.makedirs(src_a)
-    os.makedirs(src_b)
+    base = _scratch("stream_join")
     # time-split staging: order by ts, first half to file 0, rest to
     # file 1 (replay machinery, not the operator — the global window
     # here ranks the fixture once at build time)
-    ranked = ev.withColumn(
-        "half",
-        (F.percent_rank().over(Window.orderBy("ts", "event_id")) >= 0.5)
-        .cast("int"),
-    )
-    for half in (0, 1):
-        part = ranked.filter(F.col("half") == half).drop("half")
-        _stage_stream_file(
-            part.filter(F.col("event_id") % 2 == 0), src_a, base,
-            f"{half:02d}-starts",
+    half = F.percent_rank().over(Window.orderBy("ts", "event_id")) >= 0.5
+    ranked = ev.withColumn("half", half.cast("int"))
+    halves = [ranked.filter(F.col("half") == h).drop("half") for h in (0, 1)]
+
+    def side(parity: int, prefix: str) -> DataFrame:
+        return _replay(
+            spark, os.path.join(base, prefix),
+            "event_id long, user_id long, ts timestamp",
+            *(p.filter(F.col("event_id") % 2 == parity) for p in halves),
+        ).withWatermark("ts", "2 hours").select(
+            F.col("event_id").alias(f"{prefix}_id"),
+            F.col("user_id").alias(f"{prefix}_user"),
+            F.col("ts").alias(f"{prefix}_ts"),
         )
-        _stage_stream_file(
-            part.filter(F.col("event_id") % 2 == 1), src_b, base,
-            f"{half:02d}-ends",
-        )
-    schema = "event_id long, user_id long, ts timestamp"
-    a = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_a)
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("a_id"),
-            F.col("user_id").alias("a_user"),
-            F.col("ts").alias("a_ts"),
-        )
-    )
-    b = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_b)
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("b_id"),
-            F.col("user_id").alias("b_user"),
-            F.col("ts").alias("b_ts"),
-        )
-    )
+
+    a, b = side(0, "a"), side(1, "b")
     joined = a.join(
         b,
         F.expr(
@@ -2558,12 +2533,9 @@ def _run_available_now(stream_df, base: str) -> str:
     parquet sink; returns the sink path. Raises if the query does not
     finish inside the timeout (awaitTermination returns False rather
     than raising — falling through would hand the caller a partially
-    written sink and a baffling hash mismatch). The staging source and
-    checkpoint are deleted afterwards; the sink must outlive this call
-    because the returned relation reads it lazily."""
-    import os
-    import shutil
-
+    written sink and a baffling hash mismatch). The sink, source and
+    checkpoint stay in ``base`` (the row's scratch directory): the
+    returned relation reads the sink lazily."""
     out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     q = (
         stream_df.writeStream.format("parquet")
@@ -2580,37 +2552,39 @@ def _run_available_now(stream_df, base: str) -> str:
     finally:
         if q.isActive:
             q.stop()
-    for sub in os.listdir(base):  # keep only the sink
-        if sub != "out":
-            shutil.rmtree(os.path.join(base, sub), ignore_errors=True)
     return out
 
 
-def _stage_stream_file(df, src: str, base: str, name: str) -> None:
-    """Write ``df`` as a single parquet file ``name`` inside the
-    file-stream source dir (the source tracks filenames, so each staged
-    batch needs a fresh name).
+def _replay(
+    spark: SparkSession, base: str, schema: str, *batches: DataFrame
+) -> DataFrame:
+    """A file stream of ``schema`` that replays ``batches`` in order, one
+    micro-batch each: batch i is staged as file i of the source dir
+    ``base/src`` (the source tracks filenames, so each batch has a fresh
+    one). The schema is explicit because the fixtures' ``ts`` would
+    otherwise read back as ``timestamp_ntz``.
 
     FileStreamSource orders files by MODIFICATION TIME with undefined
     tie-breaking, and shutil.move preserves the part file's mtime — two
     files staged within the same ms could be consumed out of order,
     which silently breaks order-sensitive replays (the CDC fold, the
-    sessionize sentinel). The leading digits of ``name`` (every caller
-    uses ``NN-...``) are therefore stamped into the mtime so batch
-    order is total and deterministic."""
-    import os
-    import re
-    import shutil
-
-    tmp = os.path.join(base, f"tmp_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-    dst = os.path.join(src, f"{name}.parquet")
-    shutil.move(os.path.join(tmp, part), dst)
-    m = re.match(r"(\d+)", name)
-    if m:
-        t = 1_700_000_000 + 60 * int(m.group(1))
+    sessionize sentinel). File i's mtime is therefore stamped from i,
+    so batch order is total and deterministic."""
+    src = os.path.join(base, "src")
+    os.makedirs(src)
+    for i, df in enumerate(batches):
+        tmp = os.path.join(base, f"tmp{i}")
+        df.coalesce(1).write.parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        dst = os.path.join(src, f"{i:02d}.parquet")
+        shutil.move(os.path.join(tmp, part), dst)
+        t = 1_700_000_000 + 60 * i
         os.utime(dst, (t, t))
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 def q_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2630,9 +2604,6 @@ def q_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max_ts_sentinel − 1s) never reaches sentinel_end + gap, so no
     timeout fires for them either. Integer cents measures keep the sums
     order-insensitive (exact parity with SQL aggregation)."""
-    import os
-    import tempfile
-
     from slowfast_feature_extractor_spark.streaming.sessionize_stream import (
         streaming_sessionize,
     )
@@ -2642,10 +2613,7 @@ def q_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("value_cents").cast("double").alias("value"),
     )
-    base = tempfile.mkdtemp(prefix="sfe_stream_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-
+    base = _scratch("sessionize_streamed")
     max_ts = ev.agg(F.max("ts")).first()[0]  # driver scalar (metadata-scale)
     sentinel = (
         ev.select("user_id")
@@ -2653,13 +2621,8 @@ def q_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.lit(max_ts) + F.expr("INTERVAL 2 HOURS"))
         .withColumn("value", F.lit(0.0))
     )
-    _stage_stream_file(ev, src, base, "00-events")
-    _stage_stream_file(sentinel, src, base, "01-sentinel")
-
-    stream = (
-        spark.readStream.schema("user_id string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _replay(
+        spark, base, "user_id string, ts timestamp, value double", ev, sentinel
     )
     sess = streaming_sessionize(
         stream, entity="user_id", ts="ts", measure="value",
@@ -2707,9 +2670,6 @@ def q_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash, n_chars) SET — deterministic whatever the arrival order.
     Reference analog: the skip-if-done resume predicate
     (reference/test_net.py:60-75) as a continuous stream."""
-    import os
-    import tempfile
-
     d = _docs(spark, sf_dir).select(
         F.md5("text").alias("h"),
         F.length("text").cast("long").alias("n_chars"),
@@ -2718,19 +2678,10 @@ def q_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.make_interval(secs=(F.col("doc_id") % 60).cast("double"))
         ).alias("ts"),
     )
-    base = tempfile.mkdtemp(prefix="sfe_dstream_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-
-    _stage_stream_file(d, src, base, "00-crawl")
-    _stage_stream_file(
-        d.withColumn("ts", F.col("ts") + F.expr("INTERVAL 120 SECONDS")),
-        src, base, "01-recrawl",
-    )
-    stream = (
-        spark.readStream.schema("h string, n_chars long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    base = _scratch("dedup_streamed")
+    stream = _replay(
+        spark, base, "h string, n_chars long, ts timestamp",
+        d, d.withColumn("ts", F.col("ts") + F.expr("INTERVAL 120 SECONDS")),
     )
     deduped = (
         stream.withWatermark("ts", "10 minutes")
@@ -3280,8 +3231,6 @@ def q_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.read.csv`` and aggregated per shard. The oracle computes the
     same aggregates from the source table directly, so any CSV
     serialization or parse defect breaks the hash."""
-    import tempfile
-
     d = _docs(spark, sf_dir).select(
         "doc_id",
         F.concat(
@@ -3293,11 +3242,11 @@ def q_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("doc,"), F.col("doc_id").cast("string"), F.lit(',"note"')
         ).alias("note"),
     )
-    # per-process unique dir: a world-shared fixed path raced between
+    # per-process scratch dir: a world-shared fixed path raced between
     # concurrent runs over the same sf_dir (one overwrites mid-read of
     # the other, corrupting the hash) and failed outright when a
     # pre-existing directory belonged to another user (ADVICE r3)
-    mdir = tempfile.mkdtemp(prefix="sfe_manifest_")
+    mdir = _scratch("manifest_scan")
     d.coalesce(1).write.mode("overwrite").option("header", True).csv(mdir)
     m = (
         spark.read.schema("doc_id long, path string, n_chars long, note string")
@@ -4966,8 +4915,6 @@ def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same aggregates from the source table (corrupt count is
     analytic: doc_id % 50 == 0 rows were replaced), so any JSON
     serialize/parse defect breaks the hash."""
-    import tempfile
-
     d = _docs(spark, sf_dir).select(
         "doc_id",
         "source",
@@ -4982,7 +4929,7 @@ def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(', "source": "tru'),
         ),
     ).otherwise(F.to_json(F.struct("doc_id", "source", "text")))
-    jdir = tempfile.mkdtemp(prefix="sfe_jsonl_")
+    jdir = _scratch("jsonl_scan")
     d.select(line.alias("value")).coalesce(1).write.mode("overwrite").text(
         jdir
     )
@@ -5048,10 +4995,8 @@ def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter AND a data filter (both must push into the ORC reader),
     and aggregated. Oracle computes the same from the source table —
     a type-mapping or partition-decode defect breaks the hash."""
-    import tempfile
-
     d = _docs(spark, sf_dir).select("doc_id", "source", "lang", "n_chars")
-    odir = tempfile.mkdtemp(prefix="sfe_orc_")
+    odir = _scratch("orc_scan")
     # One file per partition value (guide §6): writing from the 32-way
     # scan produced 32 tasks x 5 sources = 160 tiny files whose commit
     # renames dominated the wall; clustering by the partition column
@@ -5835,8 +5780,6 @@ def incremental_index_dir(sf_dir: str) -> str:
     regenerated corpus invalidates the index instead of serving stale
     signatures."""
     import hashlib as _hashlib
-    import os
-    import tempfile
 
     doc = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
     st = os.stat(doc)
@@ -5857,10 +5800,6 @@ def build_incremental_index(spark: SparkSession, sf_dir: str) -> str:
     only its own signatures, never a corpus recompute (VERDICT r4 #4).
     Atomic publish: write to a staging dir, rename into place — a
     concurrent builder loses the race harmlessly."""
-    import os
-    import shutil
-    import tempfile
-
     target = incremental_index_dir(sf_dir)
     if os.path.exists(os.path.join(target, "exact", "_SUCCESS")) and os.path.exists(
         os.path.join(target, "bands", "_SUCCESS")
@@ -5895,8 +5834,6 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed on the probe key. Output and oracle identical to
     ``dedup_incremental`` (same statuses, independently recomputed)."""
     idx = build_incremental_index(spark, sf_dir)
-    import os
-
     old_h = spark.read.parquet(os.path.join(idx, "exact"))
     old_b = spark.read.parquet(os.path.join(idx, "bands"))
 
@@ -6085,9 +6022,6 @@ def q_dual_rate_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch ``ROWS BETWEEN k PRECEDING AND 1 PRECEDING`` windows. The
     measure is integer cents carried in doubles, so both engines
     compute exact-integer sums divided once — bit-identical averages."""
-    import os
-    import tempfile
-
     from slowfast_feature_extractor_spark.streaming.dual_rate_stream import (
         streaming_dual_rate,
     )
@@ -6102,14 +6036,9 @@ def q_dual_rate_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ts"),
         F.col("value_cents").cast("double").alias("value"),
     )
-    base = tempfile.mkdtemp(prefix="sfe_drstream_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    _stage_stream_file(staged, src, base, "00-events")
-    stream = (
-        spark.readStream.schema("user_id string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    base = _scratch("dual_rate_streamed")
+    stream = _replay(
+        spark, base, "user_id string, ts timestamp, value double", staged
     )
     feats = streaming_dual_rate(
         stream, entity="user_id", ts="ts", measure="value",
@@ -6522,13 +6451,6 @@ FROM tot
 """
 
 
-# previous-generation (table, data_dir) pairs created by q_bucketed_join /
-# q_warc_scan, cleared at each next invocation (the returned lazy plans
-# read the current generation, so cleanup cannot happen in the same call)
-_BUCKETED_GEN: list[tuple[str, str]] = []
-_WARC_SCAN_DIRS: list[str] = []
-
-
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-storage co-located join — the Iceberg
     bucket-partitioned layout that makes repeated joins and
@@ -6543,28 +6465,12 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join/agg on that key. Money sums use the integer-cents discipline
     so the hash never sits on a float-sum ordering boundary.
 
-    The previous invocation's catalog tables (and their mkdtemp data
-    dirs) are cleared on entry — the returned plan reads THIS call's
-    tables, so they cannot be dropped here; a long-lived driver
-    session holds one generation of sfe_bkt_* tables instead of
-    accumulating two per run."""
-    import os
-    import shutil
-    import tempfile
-
-    for stale_tbl, stale_dir in list(_BUCKETED_GEN):
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {stale_tbl}")
-        except Exception:
-            pass
-        if stale_dir and os.path.isdir(stale_dir):
-            shutil.rmtree(stale_dir, ignore_errors=True)
-        _BUCKETED_GEN.remove((stale_tbl, stale_dir))
-
+    The two tables' data lives in the row's scratch dir, and each build
+    overwrites the previous one's tables, so a long-lived driver session
+    holds one generation of ``sfe_bkt_*`` tables."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    wdir = tempfile.mkdtemp(prefix="sfe_bucketed_")
-    tag = os.path.basename(wdir).replace("sfe_bucketed_", "")
-    fact, dim = f"sfe_bkt_fact_{tag}", f"sfe_bkt_dim_{tag}"
+    wdir = _scratch("bucketed_join")
+    fact, dim = "sfe_bkt_fact", "sfe_bkt_dim"
     cents = F.round(F.col("value") * 100).cast("long")
     # Pre-cluster each side into its 8 buckets (guide §6/§2.6): the
     # fact otherwise bucket-sorts 1M rows inside the ONE single-split
@@ -6589,7 +6495,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("parquet")
             .saveAsTable(name)
         )
-    _BUCKETED_GEN.extend([(fact, wdir), (dim, "")])
     a, b = spark.table(fact), spark.table(dim)
     return (
         a.hint("merge")
@@ -6695,14 +6600,13 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever operator CONSUMES the records.
 
     Fixture caveat: the .warc files are written by executor tasks into
-    a driver-created tmpdir, which is one filesystem ONLY in local
+    the row's driver-local scratch dir, which is one filesystem ONLY in local
     mode — on a real cluster this fixture step would target shared
     storage (S3/HDFS), while the binaryFile READ path itself is
-    storage-agnostic. The previous invocation's fixture dir is removed
-    on entry so repeated runs don't accumulate corpus copies."""
+    storage-agnostic."""
     from slowfast_feature_extractor_spark.sources import warc as W
 
-    wdir = _warc_fixture_dir(spark, sf_dir)
+    wdir = _warc_fixture_dir(spark, sf_dir, _scratch("warc_scan"))
     files = spark.read.format("binaryFile").load(wdir).select(
         F.regexp_extract(F.col("path"), r"shard-(\d+)\.warc", 1)
         .cast("long")
@@ -6712,23 +6616,15 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return W.parse_shards(files)
 
 
-def _warc_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the corpus as on-disk ``shard-NNNNN.warc`` files
-    (executor tasks write them — no driver collect; a real crawl's
-    files already exist, this is fixture construction in the crawl's
-    own shape). Previous invocations' dirs are removed first so
-    repeated runs don't accumulate corpus copies."""
-    import os
-    import shutil
-    import tempfile
-
+def _warc_fixture_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
+    """Materialize the corpus as on-disk ``shard-NNNNN.warc`` files in
+    ``base/shards`` (executor tasks write them — no driver collect; a
+    real crawl's files already exist, this is fixture construction in
+    the crawl's own shape)."""
     from slowfast_feature_extractor_spark.sources import warc as W
 
-    for stale in list(_WARC_SCAN_DIRS):
-        shutil.rmtree(stale, ignore_errors=True)
-        _WARC_SCAN_DIRS.remove(stale)
-    wdir = tempfile.mkdtemp(prefix="sfe_warc_")
-    _WARC_SCAN_DIRS.append(wdir)
+    wdir = os.path.join(base, "shards")
+    os.makedirs(wdir)
     d = _docs(spark, sf_dir)
     rec = W.warc_record(_synth_url(), F.col("text"))
     shards = W.build_shards(
@@ -6758,13 +6654,10 @@ def q_warc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     record emits exactly once because the file source tracks consumed
     filenames) — the production shape for a crawler that drops WARC
     files onto storage continuously."""
-    import os
-
     from slowfast_feature_extractor_spark.sources import warc as W
 
-    wdir = _warc_fixture_dir(spark, sf_dir)
-    base = os.path.join(wdir, "_stream")
-    os.makedirs(base, exist_ok=True)
+    base = _scratch("warc_streamed")
+    wdir = _warc_fixture_dir(spark, sf_dir, base)
     stream = (
         spark.readStream.format("binaryFile")
         # binaryFile's schema is fixed by the source; streaming requires
@@ -7507,9 +7400,6 @@ def q_cdc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries: per-batch latest-per-key compaction composed over
     time-ordered batches equals the global latest-per-key, so the
     DuckDB oracle is one window over the whole log."""
-    import os
-    import tempfile
-
     from slowfast_feature_extractor_spark.streaming.cdc_stream import (
         apply_cdc_stream,
         read_state,
@@ -7517,18 +7407,11 @@ def q_cdc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _cdc_log(spark, sf_dir)
     t = F.lit(_CDC_T).cast("timestamp")
-    base = tempfile.mkdtemp(prefix="sfe_cdcstream_")
-    src = os.path.join(base, "src")
-    os.makedirs(src)
-    _stage_stream_file(log.filter(F.col("ts") < t), src, base, "00-history")
-    _stage_stream_file(log.filter(F.col("ts") >= t), src, base, "01-tail")
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, op string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    base = _scratch("cdc_streamed")
+    stream = _replay(
+        spark, base,
+        "user_id long, ts timestamp, event_id long, op string, value double",
+        log.filter(F.col("ts") < t), log.filter(F.col("ts") >= t),
     )
     state_dir = os.path.join(base, "state")
     apply_cdc_stream(
@@ -7539,11 +7422,6 @@ def q_cdc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=["ts", "event_id"],
         value_cols=["value"],
     )
-    import shutil
-
-    for sub in os.listdir(base):  # keep only the state versions —
-        if sub != "state":  # the returned relation reads them lazily
-            shutil.rmtree(os.path.join(base, sub), ignore_errors=True)
     return read_state(spark, state_dir).select("user_id", "value")
 
 

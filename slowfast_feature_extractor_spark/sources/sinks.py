@@ -149,31 +149,6 @@ def feature_table_writer(
     )
 
 
-def write_features_iceberg(
-    df: DataFrame,
-    table: str,
-    ts_col: str = "warc_ts",
-    entity_col: str = "url",
-    buckets: int = 16,
-    mode: str = "createOrReplace",
-) -> None:
-    """Iceberg variant of :func:`write_features`: snapshot-atomic commit
-    to ``table``. ``mode``: ``createOrReplace`` | ``append`` |
-    ``overwritePartitions`` (idempotent per-partition re-run — the verb
-    the checkpointed writer uses). Requires an Iceberg-backed catalog
-    (:func:`iceberg_available`); the parquet path is the sandbox twin
-    with identical downstream plans."""
-    w = feature_table_writer(df, table, ts_col, entity_col, buckets)
-    if mode == "createOrReplace":
-        w.createOrReplace()
-    elif mode == "append":
-        w.append()
-    elif mode == "overwritePartitions":
-        w.overwritePartitions()
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-
-
 def last_snapshot_id(spark: SparkSession, table: str) -> int | None:
     """Latest Iceberg snapshot id of ``table`` (the commit handle the
     snapshot ledger records for lineage/rollback)."""

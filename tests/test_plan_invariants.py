@@ -22,6 +22,7 @@ from __future__ import annotations
 import pytest
 
 from slowfast_feature_extractor_spark.plans.queries import REGISTRY
+from slowfast_feature_extractor_spark.session import query_scope
 
 from conftest import SF_TINY
 
@@ -82,10 +83,13 @@ _PLAN_NAMES = sorted(set(REGISTRY) - _EXECUTES_IN_BUILDER)
 
 @pytest.fixture(scope="module")
 def plans(spark):
+    # one scope per row: a persist left by one builder would otherwise
+    # turn up as an InMemoryTableScan in a later row's plan
     out = {}
     for name in _PLAN_NAMES:
-        df = REGISTRY[name][0](spark, SF_TINY)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
+        with query_scope(spark):
+            df = REGISTRY[name][0](spark, SF_TINY)
+            out[name] = df._jdf.queryExecution().executedPlan().toString()
     return out
 
 

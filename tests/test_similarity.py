@@ -234,6 +234,7 @@ def test_semantic_dedup_cell_local_prune(spark):
 ZERO_VECS = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])]
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 @pytest.mark.parametrize(
     "scorer",
     ["knn_bruteforce", "knn_lsh", "knn_ivf", "embedding_neardup", "semantic_dedup"],
@@ -264,3 +265,29 @@ def test_zero_vector_neither_matches_nor_is_matched(spark, scorer):
     got, want = sorted(map(tuple, got.collect())), sorted(map(tuple, want.collect()))
     assert got == want and len(got) > 0
     assert all(0 not in r[:2] for r in got)  # the zero vector is in no row
+
+
+SHORT_VECS = [
+    (0, [1.0, 0.0]), (1, [0.99, 0.01]), (2, [-1.0, 0.0]), (3, [-0.99, -0.01]),
+    (4, [0.0, 1.0]), (5, [0.01, 0.99]),
+]
+
+
+@pytest.mark.parametrize(
+    "scorer", ["knn_lsh", "embedding_neardup", "embedding_neardup_blocked"]
+)
+def test_sign_bucket_skips_dims_past_vector_end(spark, scorer):
+    """A vector shorter than ``bits`` adds no bit for its missing
+    dimensions, as DuckDB's NULL ``v[j]`` does in the oracles: 2-dim
+    vectors bucket the same under ``bits=4`` as under ``bits=2``
+    instead of raising INVALID_ARRAY_INDEX_IN_ELEMENT_AT under ANSI."""
+    emb = spark.createDataFrame(SHORT_VECS, schema="vec_id long, embedding array<double>")
+
+    def run(bits):
+        if scorer == "knn_lsh":
+            q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+            return SIM.knn_lsh(emb, q, k=2, bits=bits)
+        return getattr(SIM, scorer)(emb, threshold=0.9, bits=bits)
+
+    got, want = (sorted(map(tuple, run(bits).collect())) for bits in (4, 2))
+    assert got == want and len(got) > 0

@@ -318,6 +318,22 @@ def test_warc_scan_reads_files_without_shuffle(spark):
     assert df.count() > 0
 
 
+def test_warc_rows_read_their_own_files(spark):
+    """``warc_scan`` and ``warc_streamed`` each stage the corpus as
+    files; building the second must not delete the files the first
+    row's still-unconsumed DataFrame reads."""
+    from slowfast_feature_extractor_spark.plans.queries import (
+        q_warc_scan,
+        q_warc_streamed,
+    )
+
+    cols = ["shard", "url", "n_bytes", "payload_md5"]
+    scan = q_warc_scan(spark, "/root/testdata/sf0.001").select(cols)
+    streamed = q_warc_streamed(spark, "/root/testdata/sf0.001").select(cols)
+    got = sorted(map(tuple, scan.collect()))
+    assert got == sorted(map(tuple, streamed.collect())) and len(got) > 0
+
+
 def test_cdx_offsets_address_real_bytes(spark):
     """The CDX offsets are computed by closed-form arithmetic, never by
     parsing; this test slices the ACTUAL shard blob at every (offset,
