@@ -26,4 +26,29 @@ UDFs on genuinely non-relational steps (HTML parsing, fixed-length
 resampling).
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _keep_zip_directory(self) -> None:
+    """``zipimporter.invalidate_caches`` for a Python worker: keep the
+    directory read when the importer was made."""
+
+
+# A reused Python worker runs PySpark's ``setup_spark_files`` before
+# every task, and its ``importlib.invalidate_caches()`` makes every
+# zipimporter on the path re-read its archive's directory: pyspark.zip
+# and the spark-core jar, 0.1-0.2 s per task. Those archives cannot
+# change while the worker lives, and an archive added later
+# (``--py-files``, ``addPyFile``) is a new path entry whose new importer
+# reads its own directory. So once a worker has imported this package,
+# its later tasks skip the re-read. Directory finders are still
+# invalidated, so ``.py`` files added later still resolve. The driver
+# never sets ``_is_running_on_worker``; its zipimport stays as it is.
+_files = sys.modules.get("pyspark.core.files")  # loaded by setup_spark_files
+if _files is not None and _files.SparkFiles._is_running_on_worker:
+    import zipimport
+
+    zipimport.zipimporter.invalidate_caches = _keep_zip_directory
+del _files

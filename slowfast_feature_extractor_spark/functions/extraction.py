@@ -29,6 +29,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,11 +63,18 @@ def extract_text(html: bytes | bytearray | None) -> str | None:
     return _WS_RE.sub(" ", s).strip()
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
+def extract_text_udf(html: Column | str) -> Column:
     """Arrow-batched extraction over ``html: binary``. Same code as the
-    oracle, applied per Arrow batch."""
-    return html.map(extract_text)
+    oracle, applied per Arrow batch. The UDF is built on each call: a
+    module-level one keeps the JVM function, and with it the accumulator
+    server, of the first SparkContext it ran in, so after ``stop()`` and
+    a new session every task would report to a closed socket."""
+
+    @F.pandas_udf(T.StringType())
+    def extract_text_udf(html: pd.Series) -> pd.Series:
+        return html.map(extract_text)
+
+    return extract_text_udf(html)
 
 
 # --- charset detection / transcoding ---------------------------------

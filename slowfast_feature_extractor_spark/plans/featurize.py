@@ -296,12 +296,8 @@ def featurize_pages(
     # once per row — the plan below never branches before this point, so
     # Catalyst cannot duplicate the expensive Python stage.
     keep = ["url", "warc_ts"] + ([tiebreak] if tiebreak else [])
-    df = (
-        pages.withColumn(
-            "text", F.coalesce(F.col("text"), extract_text_udf(F.col("html")))
-        )
-        .select(*keep, F.length("text").cast("double").alias("measure"))
-    )
+    text = F.coalesce(F.col("text"), extract_text_udf(F.col("html")))
+    df = pages.select(*keep, F.length(text).cast("double").alias("measure"))
 
     # Stage 2: the temporal stage. Plain path: ONE hash partition on url
     # + ONE in-partition sort serves every window family below (fast
@@ -323,9 +319,10 @@ def featurize_pages(
         # stream)
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     windowed = _windowed(df, order, fast_rows, slow_rows, chunk_trunc)
-    out = windowed.withColumn(
-        "fast_vec", resample_udf(fast_len)(F.col("__fast_raw"))
-    ).withColumn("slow_vec", resample_udf(slow_len)(F.col("__slow_raw")))
+    out = windowed.withColumns({
+        "fast_vec": resample_udf(fast_len)(F.col("__fast_raw")),
+        "slow_vec": resample_udf(slow_len)(F.col("__slow_raw")),
+    })
     zeros = F.array_repeat(F.lit(0.0), slow_len)
     return out.select(
         "url",
@@ -372,8 +369,13 @@ def _windowed(
         hist_frame = w.rowsBetween(Window.unboundedPreceding, -1)
         carry_frame = w.rowsBetween(Window.unboundedPreceding, 0)
 
-        day = F.to_date("warc_ts")
-        is_anchor = F.lag(day).over(w).isNull() | (F.lag(day).over(w) != day)
+        # lag the raw ts, not its date: a lagged date would be projected
+        # below the one window pass, and so shuffled as an extra column.
+        # One lag: a first row (null predecessor) is an anchor, and so is
+        # a null-ts row, whose predecessor is null too (warc_ts leads an
+        # ascending order, nulls first)
+        prev_day = F.to_date(F.lag("warc_ts").over(w))
+        is_anchor = F.coalesce(prev_day != F.to_date("warc_ts"), F.lit(True))
 
         # All window families in ONE pass over one Exchange+Sort; the
         # slow pathway list is masked to anchors (the reference's sparse
@@ -383,22 +385,18 @@ def _windowed(
         # general two-table case uses operators.asof_join). Consecutive
         # Window nodes preserve partitioning+ordering, so no UDF may
         # appear between them: both resample UDFs run once, at the tail,
-        # after every window.
-        return (
-            rows.withColumn("__fast_raw", F.collect_list("measure").over(fast_frame))
-            .withColumn(
-                "__slow_at_anchor",
+        # after every window. __slow_raw reads __slow_at_anchor, so it
+        # comes in a second projection.
+        return rows.withColumns({
+            "__fast_raw": F.collect_list("measure").over(fast_frame),
+            "__slow_at_anchor":
                 F.when(is_anchor, F.collect_list("measure").over(slow_frame)),
-            )
-            .withColumn(
-                "n_hist_rows", F.count(F.when(real, F.lit(1))).over(hist_frame)
-            )
-            .withColumn("max_input_ts", F.max("warc_ts").over(hist_frame))
-            .withColumn(
-                "__slow_raw",
+            "n_hist_rows": F.count(F.when(real, F.lit(1))).over(hist_frame),
+            "max_input_ts": F.max("warc_ts").over(hist_frame),
+        }).withColumns({
+            "__slow_raw":
                 F.last("__slow_at_anchor", ignorenulls=True).over(carry_frame),
-            )
-        )
+        })
 
     if chunk_trunc is None:
         return family(df, Window.partitionBy("url").orderBy(*order), F.lit(True))

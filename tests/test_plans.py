@@ -26,6 +26,13 @@ def test_featurize_single_shuffle(spark, pages_df):
     assert plan.count("ArrowEvalPython") == 2  # extraction head + resamples tail
 
 
+def test_featurize_anchor_test_lags_once(spark, pages_df):
+    """The day-anchor test reads the predecessor's ts through ONE lag
+    window function: Spark keeps a lag written twice as two."""
+    plan = _plan(featurize_pages(pages_df, chunk_trunc=None))
+    assert plan.count("lag(") == 1, plan
+
+
 def test_pushdown_reaches_scan(spark):
     plan = _plan(REGISTRY["pushdown_scan"][0](spark, SF_TINY))
     assert "PushedFilters: [" in plan
