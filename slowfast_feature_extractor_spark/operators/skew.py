@@ -179,7 +179,13 @@ def carry_window(
     shifted by the total of the entity's earlier chunks: their row
     counts, or ``chunk_total`` aggregated over each chunk's output rows
     (that output is persisted, since it then feeds two consumers)."""
-    base = df.withColumn("__chunk", chunk)
+    # the pass carries struct(entity) in the entity column: the plain
+    # arm's window holds NULL-keyed rows as one entity, and the prefix
+    # join below must match them too. Struct equality compares NULL
+    # fields as equal, so that join stays an equi-join on the window's
+    # own partition keys (an eqNullSafe join on entity re-shuffles both
+    # sides)
+    base = df.withColumns({entity: F.struct(entity), "__chunk": chunk})
     carries = chunk_carries(
         base.select(entity, *order_cols, *measures, "__chunk"),
         entity, list(order_cols), carry_rows,
@@ -214,7 +220,10 @@ def carry_window(
         prefix = chunk_prefix_counts(out, entity, chunk_total)
     # the tiny prefix relation joins on the window's own partition keys
     # — the big side keeps its partitioning (no extra exchange)
-    cols = [c for c in out.columns if c not in ("__chunk", "__carry")]
+    cols = [
+        F.col(c).getField(entity).alias(c) if c == entity else F.col(c)
+        for c in out.columns if c not in ("__chunk", "__carry")
+    ]
     return (
         out.join(prefix, [entity, "__chunk"], "left")
         .withColumn(running, F.coalesce(F.col("__prefix"), F.lit(0)) + F.col(running))

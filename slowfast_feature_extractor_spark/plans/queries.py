@@ -50,6 +50,7 @@ from slowfast_feature_extractor_spark.plans.featurize import (
     pit_dual_rate_from,
 )
 from slowfast_feature_extractor_spark.session import _scratch
+from slowfast_feature_extractor_spark.sources import warc as W
 from slowfast_feature_extractor_spark.sources.tables import parallelize_scan
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -317,7 +318,9 @@ WINDOW
 """
 
 
-def _asof_clicks_views(spark, sf_dir, allow_exact: bool) -> DataFrame:
+def _asof_clicks_views(
+    spark, sf_dir, allow_exact: bool, tolerance_seconds: float | None = None
+) -> DataFrame:
     ev = _ev(spark, sf_dir)
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id"
@@ -327,7 +330,8 @@ def _asof_clicks_views(spark, sf_dir, allow_exact: bool) -> DataFrame:
     )
     return asof_join(
         clicks, views, on="ts", by=("user_id",), right_cols=["view_cents"],
-        allow_exact_matches=allow_exact, matched_ts_col="view_ts",
+        allow_exact_matches=allow_exact, tolerance_seconds=tolerance_seconds,
+        matched_ts_col="view_ts",
     ).select("user_id", "ts", "event_id", "view_ts", "view_cents")
 
 
@@ -356,18 +360,7 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 tolerance knob (pandas.merge_asof parity): matches older than
     1 hour are nulled — the reference's stale-buffer eviction expressed
     as a join semantic."""
-    ev = _ev(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id"
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.col("value_cents").alias("view_cents")
-    )
-    return asof_join(
-        clicks, views, on="ts", by=("user_id",), right_cols=["view_cents"],
-        allow_exact_matches=True, tolerance_seconds=3600.0,
-        matched_ts_col="view_ts",
-    ).select("user_id", "ts", "event_id", "view_ts", "view_cents")
+    return _asof_clicks_views(spark, sf_dir, allow_exact=True, tolerance_seconds=3600.0)
 
 
 ORACLE_ASOF_TOLERANCE = f"""
@@ -404,18 +397,28 @@ q_sessionize = functools.partial(_q_sessionize, chunked=False)
 q_sessionize_chunked = functools.partial(_q_sessionize, chunked=True)
 
 
-ORACLE_SESSIONIZE = f"""
-WITH ev AS ({_EV_CENTS_SQL}),
+def _gap_sessions(split: str) -> str:
+    """``WITH ev, lagged, s``: ``s`` is the events (``ev``, with
+    ``value_cents``) plus ``session_idx``, the 1-based 30-minute-gap
+    session index per user in (ts, event_id) order. A row opens a
+    session when its gap to the previous row is ``split`` 30 min:
+    ``>`` is ``sessionize``'s strict split, ``>=`` the [ts, ts+gap)
+    bound of Spark's native session windows."""
+    return f"""WITH ev AS ({_EV_CENTS_SQL}),
 lagged AS (
   SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
 ),
 s AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
+  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) {split} 1800000000
                      THEN 1 ELSE 0 END)
            OVER (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
   FROM lagged
-)
+)"""
+
+
+ORACLE_SESSIONIZE = f"""
+{_gap_sessions('>')}
 SELECT user_id, ts, event_id, session_idx,
        concat(CAST(user_id AS VARCHAR), '#', CAST(session_idx AS VARCHAR)) AS session_id
 FROM s
@@ -440,17 +443,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SESSION_STATS = f"""
-WITH ev AS ({_EV_CENTS_SQL}),
-lagged AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
-),
-s AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-                     THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM lagged
-)
+{_gap_sessions('>')}
 SELECT user_id,
        concat(CAST(user_id AS VARCHAR), '#', CAST(session_idx AS VARCHAR)) AS session_id,
        min(ts) AS session_start, max(ts) AS session_end,
@@ -1069,23 +1062,31 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "lang", TS.langid(F.col("text")).alias("lang_pred"))
 
 
-def _langid_oracle() -> str:
-    score_exprs = []
-    for lang in sorted(TS.LANG_MARKERS):
+def _langid_sql() -> tuple[str, str]:
+    """TS.langid as SQL: the per-language marker-word vote columns
+    ``s_<lang>`` over ``text``, and the argmax CASE over them."""
+    langs = sorted(TS.LANG_MARKERS)
+
+    def votes(lang: str) -> str:
         marks = "['" + "','".join(TS.LANG_MARKERS[lang]) + "']"
-        score_exprs.append(
-            f"len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''), "
+        return (
+            "len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''), "
             f"x -> list_contains({marks}, x))) AS s_{lang}"
         )
-    langs = sorted(TS.LANG_MARKERS)
+
+    scores = ", ".join(map(votes, langs))
     best = "greatest(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
     case = "CASE WHEN " + best + " <= 0 THEN 'und' "
     for lang in langs:
         case += f"WHEN s_{lang} = {best} THEN '{lang}' "
-    case += "ELSE 'und' END"
-    return f"""
-WITH s AS (SELECT doc_id, lang, {", ".join(score_exprs)} FROM documents)
-SELECT doc_id, lang, {case} AS lang_pred FROM s
+    return scores, case + "ELSE 'und' END"
+
+
+_LANGID_SCORES, _LANGID_CASE = _langid_sql()
+
+ORACLE_LANGID = f"""
+WITH s AS (SELECT doc_id, lang, {_LANGID_SCORES} FROM documents)
+SELECT doc_id, lang, {_LANGID_CASE} AS lang_pred FROM s
 """
 
 
@@ -1203,30 +1204,17 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_clean_cte() -> str:
-    score_exprs = []
-    for lang in sorted(TS.LANG_MARKERS):
-        marks = "['" + "','".join(TS.LANG_MARKERS[lang]) + "']"
-        score_exprs.append(
-            f"len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''), "
-            f"x -> list_contains({marks}, x))) AS s_{lang}"
-        )
-    langs = sorted(TS.LANG_MARKERS)
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
-    case = "CASE WHEN " + best + " <= 0 THEN 'und' "
-    for lang in langs:
-        case += f"WHEN s_{lang} = {best} THEN '{lang}' "
-    case += "ELSE 'und' END"
     return f"""b AS (
   SELECT doc_id, text,
     len(list_filter(string_split(text, ' '), x -> x <> '')) AS tok_cnt,
     len(list_filter(string_split(text, ' '),
         x -> list_contains({_STOPS_SQL}, x))) AS stop_cnt,
     length(replace(text, ' ', '')) AS chars,
-    {", ".join(score_exprs)}
+    {_LANGID_SCORES}
   FROM documents
 ),
 m AS (
-  SELECT doc_id, text, {case} AS lang_pred,
+  SELECT doc_id, text, {_LANGID_CASE} AS lang_pred,
     round(least(tok_cnt / 200.0, 1.0) * 0.4
           + (CASE WHEN tok_cnt > 0 THEN CAST(stop_cnt AS DOUBLE) / tok_cnt ELSE 0.0 END) * 0.3
           + least((CASE WHEN tok_cnt > 0 THEN CAST(chars AS DOUBLE) / tok_cnt ELSE 0.0 END) / 8.0, 1.0) * 0.3,
@@ -1321,31 +1309,39 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle() -> str:
-    salted = [
-        _md5i64_sql(f"concat('{i}:', CAST(shingle AS VARCHAR))")
-        for i in range(_N_MINHASH)
-    ]
-    mh_cols = ", ".join(f"min({s}) AS mh{i}" for i, s in enumerate(salted))
+# per-doc salted MinHash signature mh0..mh7 over ``sh``: slot i is the
+# min of md5i64('i:' || shingle) — operators/dedup.minhash_signatures
+_MINHASH_SIG = "SELECT id, {} FROM sh GROUP BY id".format(", ".join(
+    "min({}) AS mh{}".format(_md5i64_sql(f"concat('{i}:', CAST(shingle AS VARCHAR))"), i)
+    for i in range(_N_MINHASH)
+))
+
+
+def _lsh_buckets(sig: str) -> str:
+    """CTEs ``mh`` (the signature relation ``sig``) and ``buckets``
+    (id, band, bucket): each band's rows joined with '|' and hashed
+    with md5i64, one SELECT per band."""
     rows = _N_MINHASH // _N_BANDS
-    band_selects = []
-    for b in range(_N_BANDS):
-        parts = ", '|', ".join(
-            f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows)
-        )
-        band_selects.append(
-            f"SELECT id, {b} AS band, {_md5i64_sql(f'concat({parts})')} AS bucket FROM mh"
-        )
-    buckets = " UNION ALL ".join(band_selects)
-    return f"""
-WITH {_SHINGLE_CTE},
-mh AS (SELECT id, {mh_cols} FROM sh GROUP BY id),
-buckets AS ({buckets}),
-cand AS (
+
+    def band(b: int) -> str:
+        parts = ", '|', ".join(f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows))
+        return f"SELECT id, {b} AS band, {_md5i64_sql(f'concat({parts})')} AS bucket FROM mh"
+
+    return f"mh AS ({sig}),\nbuckets AS ({' UNION ALL '.join(map(band, range(_N_BANDS)))})"
+
+
+# LSH candidates: every pair sharing a (band, bucket), verified by
+# exact Jaccard >= 0.2
+_LSH_VERIFY = f"""cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM buckets a JOIN buckets b USING (band, bucket) WHERE a.id < b.id
 ),
-{_VERIFY_SQL.format(thr=0.2)}
+{_VERIFY_SQL.format(thr=0.2)}"""
+
+ORACLE_DEDUP_MINHASH = f"""
+WITH {_SHINGLE_CTE},
+{_lsh_buckets(_MINHASH_SIG)},
+{_LSH_VERIFY}
 """
 
 
@@ -1374,26 +1370,11 @@ def _minhash_oph_oracle() -> str:
             h = _md5i64_sql(f"concat('{j}:', CAST({s} AS VARCHAR))")
             branches.append(f"WHEN {s} IS NOT NULL THEN {h}")
         dens_cols.append(f"CASE {' '.join(branches)} END AS mh{i}")
-    rows = _N_MINHASH // _N_BANDS
-    band_selects = []
-    for b in range(_N_BANDS):
-        parts = ", '|', ".join(
-            f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows)
-        )
-        band_selects.append(
-            f"SELECT id, {b} AS band, {_md5i64_sql(f'concat({parts})')} AS bucket FROM mh"
-        )
-    buckets = " UNION ALL ".join(band_selects)
     return f"""
 WITH {_SHINGLE_CTE},
 raw AS (SELECT id, {raw_cols} FROM sh GROUP BY id),
-mh AS (SELECT id, {", ".join(dens_cols)} FROM raw),
-buckets AS ({buckets}),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM buckets a JOIN buckets b USING (band, bucket) WHERE a.id < b.id
-),
-{_VERIFY_SQL.format(thr=0.2)}
+{_lsh_buckets(f"SELECT id, {', '.join(dens_cols)} FROM raw")},
+{_LSH_VERIFY}
 """
 
 
@@ -1498,6 +1479,10 @@ FROM cells c LEFT JOIN removed r ON c.vec_id = r.vec_id
 """
 
 _LSH_BITS = 4
+# operators/similarity.sign_bucket: bit j set iff v[j + 1] >= 0
+_SIGN_BUCKET = " + ".join(
+    f"(CASE WHEN v[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END)" for j in range(_LSH_BITS)
+)
 
 
 def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1513,14 +1498,9 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_embedding_lsh_oracle() -> str:
-    bkt = " + ".join(
-        f"(CASE WHEN v[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_LSH_BITS)
-    )
-    return f"""
+ORACLE_DEDUP_EMBEDDING_LSH = f"""
 WITH e AS ({_EMB_DOUBLE}),
-b AS (SELECT vec_id, v, {bkt} AS bkt FROM e)
+b AS (SELECT vec_id, v, {_SIGN_BUCKET} AS bkt FROM e)
 SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
        round(list_cosine_similarity(a.v, b2.v), 6) AS sim
 FROM b a JOIN b b2 ON a.bkt = b2.bkt AND a.vec_id < b2.vec_id
@@ -1576,6 +1556,16 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _knn_top5(order: str, out: str) -> str:
+    """The kNN oracles' tail: rank each query's ``scored`` neighbours by
+    ``order`` (ties to the lower neighbour id), keep the top 5 and
+    select ``query_id, neighbor_id, {out}``."""
+    return f"""r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+                                   ORDER BY {order}, neighbor_id ASC) AS rank
+      FROM scored)
+SELECT query_id, neighbor_id, {out} FROM r WHERE rank <= 5"""
+
+
 ORACLE_KNN_BRUTEFORCE = f"""
 WITH e AS ({_EMB_DOUBLE}),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
@@ -1584,13 +1574,8 @@ scored AS (
          round(list_cosine_similarity(e.v, q.qv), 6) AS sim
   FROM e, q WHERE e.vec_id <> q.query_id
 ),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY sim DESC, neighbor_id ASC) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, rank, sim FROM r WHERE rank <= 5
+{_knn_top5("sim DESC", "rank, sim")}
 """
-
-_LSH_BITS = 4
 
 
 def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1600,23 +1585,16 @@ def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_lsh_oracle() -> str:
-    bucket = " + ".join(
-        f"(CASE WHEN v[{j + 1}] >= 0 THEN {1 << j} ELSE 0 END)" for j in range(_LSH_BITS)
-    )
-    return f"""
+ORACLE_KNN_LSH = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                  {bucket} AS bucket FROM embeddings),
+                  {_SIGN_BUCKET} AS bucket FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM e WHERE vec_id < 10),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
          round(list_cosine_similarity(e.v, q.qv), 6) AS sim
   FROM e JOIN q USING (bucket) WHERE e.vec_id <> q.query_id
 ),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY sim DESC, neighbor_id ASC) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, rank, sim FROM r WHERE rank <= 5
+{_knn_top5("sim DESC", "rank, sim")}
 """
 
 
@@ -1663,14 +1641,11 @@ scored AS (
   FROM assign a JOIN qprobe qp USING (cell)
   WHERE a.vec_id <> qp.query_id
 ),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY sim DESC, neighbor_id ASC) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, rank, sim FROM r WHERE rank <= 5
+{_knn_top5("sim DESC", "rank, sim")}
 """
 
 
-def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_knn_ivfpq(spark: SparkSession, sf_dir: str, n_cells: int | None) -> DataFrame:
     """Product-quantization ANN (operators/similarity.knn_ivfpq):
     64-dim vectors -> 8 subspace codes against deterministic seed
     codebooks; scoring is fully relational ADC (broadcast per-query
@@ -1678,23 +1653,67 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank) — the FAISS memory path where queries never touch the raw
     corpus vectors. Seed codebooks + round-6 distances make the whole
     thing SQL-replayable; a recall pytest covers approximation
-    quality on a clustered fixture."""
+    quality on a clustered fixture.
+
+    - ``knn_ivfpq``: every query scores the whole corpus;
+    - ``knn_ivfpq_ivf`` (``n_cells=8``): the full FAISS IVF-PQ
+      composition — a seed coarse quantizer (the knn_ivf pattern)
+      restricts each query's ADC scoring to its 4 probed cells, so
+      candidates drop from O(N·Q) to O(N·Q·probe/cells), the shape that
+      makes PQ usable at 10^10 vectors; the scoring join just gains the
+      cell equi-key."""
     return SIM.knn_ivfpq(
         _emb(spark, sf_dir), _queries_subset(spark, sf_dir),
-        k=5, m_sub=8, n_codes=16,
+        k=5, m_sub=8, n_codes=16, n_cells=n_cells, n_probe=4,
     )
 
 
-def _knn_ivfpq_oracle(m_sub: int = 8, n_codes: int = 16, sub: int = 8) -> str:
+q_knn_ivfpq = functools.partial(_q_knn_ivfpq, n_cells=None)
+q_knn_ivfpq_ivf = functools.partial(_q_knn_ivfpq, n_cells=8)
+
+
+def _knn_ivfpq_oracle(
+    m_sub: int = 8, n_codes: int = 16, sub: int = 8, n_cells: int | None = None
+) -> str:
+    """Oracle of ``SIM.knn_ivfpq``; with ``n_cells`` (lowest-id seed
+    centroids), each query scores only the corpus vectors of its 4
+    nearest cells (``n_probe=4``)."""
     sl_e = f"e.v[(t.m*{sub}+1):((t.m+1)*{sub})]"
     sl_s = f"s.v[(t.m*{sub}+1):((t.m+1)*{sub})]"
     sl_q = f"q.qv[(t.m*{sub}+1):((t.m+1)*{sub})]"
+    cells = probe = ""
+    lut_join = "JOIN lut l ON l.m = a.m AND l.code = a.code"
+    if n_cells is not None:
+        cells = f"""cseeds AS (
+  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
+  FROM (SELECT * FROM e ORDER BY vec_id LIMIT {n_cells})
+),
+cellassign AS (
+  SELECT vec_id, cell FROM (
+    SELECT e.vec_id, c.cell,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY round(list_distance(e.v, c.cv) ** 2, 6) ASC,
+                                       c.cell ASC) AS rn
+    FROM e CROSS JOIN cseeds c) WHERE rn = 1
+),"""
+        probe = f"""qprobe AS (
+  SELECT query_id, cell FROM (
+    SELECT q.query_id, c.cell,
+           row_number() OVER (PARTITION BY q.query_id
+                              ORDER BY round(list_distance(q.qv, c.cv) ** 2, 6) ASC,
+                                       c.cell ASC) AS rn
+    FROM q CROSS JOIN cseeds c) WHERE rn <= 4
+),"""
+        lut_join = """JOIN cellassign ca ON ca.vec_id = a.vec_id
+  JOIN qprobe qp ON qp.cell = ca.cell
+  JOIN lut l ON l.query_id = qp.query_id AND l.m = a.m AND l.code = a.code"""
     return f"""
 WITH e AS ({_EMB_DOUBLE}),
 seeds AS (
   SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code, v
   FROM (SELECT * FROM e ORDER BY vec_id LIMIT {n_codes})
 ),
+{cells}
 assign AS (
   SELECT vec_id, m, code FROM (
     SELECT e.vec_id, t.m, s.code,
@@ -1704,6 +1723,7 @@ assign AS (
     FROM e CROSS JOIN range(0, {m_sub}) t(m) CROSS JOIN seeds s) WHERE rn = 1
 ),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+{probe}
 lut AS (
   SELECT q.query_id, t.m, s.code,
          round(list_distance({sl_q}, {sl_s}) ** 2, 6) AS d2r
@@ -1711,15 +1731,12 @@ lut AS (
 ),
 scored AS (
   SELECT l.query_id, a.vec_id AS neighbor_id, round(sum(l.d2r), 6) AS adist
-  FROM assign a JOIN lut l ON l.m = a.m AND l.code = a.code
+  FROM assign a
+  {lut_join}
   WHERE a.vec_id <> l.query_id
   GROUP BY l.query_id, a.vec_id
 ),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adist ASC, neighbor_id ASC) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adist
-FROM r WHERE rank <= 5
+{_knn_top5("adist ASC", "CAST(rank AS INT) AS rank, adist")}
 """
 
 
@@ -2076,83 +2093,6 @@ FROM documents
 """
 
 
-def q_knn_ivfpq_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full FAISS IVF-PQ composition: seed coarse quantizer (8
-    cells, the knn_ivf pattern) restricts each query's ADC scoring to
-    its 4 probed cells, so candidates drop from O(N·Q) to
-    O(N·Q·probe/cells) — the shape that makes PQ usable at 10^10
-    vectors. Same deterministic codebooks and relational ADC as
-    ``knn_ivfpq``; the scoring join just gains the cell equi-key."""
-    return SIM.knn_ivfpq(
-        _emb(spark, sf_dir), _queries_subset(spark, sf_dir),
-        k=5, m_sub=8, n_codes=16, n_cells=8, n_probe=4,
-    )
-
-
-def _knn_ivfpq_ivf_oracle(
-    m_sub: int = 8, n_codes: int = 16, sub: int = 8,
-    n_cells: int = 8, n_probe: int = 4,
-) -> str:
-    sl_e = f"e.v[(t.m*{sub}+1):((t.m+1)*{sub})]"
-    sl_s = f"s.v[(t.m*{sub}+1):((t.m+1)*{sub})]"
-    sl_q = f"q.qv[(t.m*{sub}+1):((t.m+1)*{sub})]"
-    return f"""
-WITH e AS ({_EMB_DOUBLE}),
-seeds AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code, v
-  FROM (SELECT * FROM e ORDER BY vec_id LIMIT {n_codes})
-),
-cseeds AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-  FROM (SELECT * FROM e ORDER BY vec_id LIMIT {n_cells})
-),
-cellassign AS (
-  SELECT vec_id, cell FROM (
-    SELECT e.vec_id, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY round(list_distance(e.v, c.cv) ** 2, 6) ASC,
-                                       c.cell ASC) AS rn
-    FROM e CROSS JOIN cseeds c) WHERE rn = 1
-),
-assign AS (
-  SELECT vec_id, m, code FROM (
-    SELECT e.vec_id, t.m, s.code,
-           row_number() OVER (PARTITION BY e.vec_id, t.m
-                              ORDER BY round(list_distance({sl_e}, {sl_s}) ** 2, 6) ASC,
-                                       s.code ASC) AS rn
-    FROM e CROSS JOIN range(0, {m_sub}) t(m) CROSS JOIN seeds s) WHERE rn = 1
-),
-q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-qprobe AS (
-  SELECT query_id, cell FROM (
-    SELECT q.query_id, c.cell,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY round(list_distance(q.qv, c.cv) ** 2, 6) ASC,
-                                       c.cell ASC) AS rn
-    FROM q CROSS JOIN cseeds c) WHERE rn <= {n_probe}
-),
-lut AS (
-  SELECT q.query_id, t.m, s.code,
-         round(list_distance({sl_q}, {sl_s}) ** 2, 6) AS d2r
-  FROM q CROSS JOIN range(0, {m_sub}) t(m) CROSS JOIN seeds s
-),
-scored AS (
-  SELECT l.query_id, a.vec_id AS neighbor_id, round(sum(l.d2r), 6) AS adist
-  FROM assign a
-  JOIN cellassign ca ON ca.vec_id = a.vec_id
-  JOIN qprobe qp ON qp.cell = ca.cell
-  JOIN lut l ON l.query_id = qp.query_id AND l.m = a.m AND l.code = a.code
-  WHERE a.vec_id <> l.query_id
-  GROUP BY l.query_id, a.vec_id
-),
-r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adist ASC, neighbor_id ASC) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adist
-FROM r WHERE rank <= 5
-"""
-
-
 def q_content_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6/P10/J3: bbox-crop analog — a deliberately-incomplete side
     table of byte ranges left-joined on the page key selects the content
@@ -2277,17 +2217,7 @@ def q_featurize_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_FEATURIZE_SESSIONS = f"""
-WITH ev AS ({_EV_CENTS_SQL}),
-lagged AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
-),
-s AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-                     THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM lagged
-),
+{_gap_sessions('>')},
 g AS (
   SELECT user_id, session_idx, count(*) AS n_revisits,
          list(CAST(value_cents AS DOUBLE) ORDER BY ts, event_id) AS series
@@ -2499,33 +2429,66 @@ def _mm_pixel(doc_id: int):
     return px
 
 
-def _mm_image_oracle() -> str:
-    chans = {
-        "r": "(doc_id * 7 + y * 31 + x * 13) % 256",
-        "g": "(doc_id * 11 + y * 17 + x * 5) % 256",
-        "b": "(doc_id * 3 + y * 7 + x * 19) % 256",
-    }
-    full = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        + expr.replace("x", "(t % w)").replace("y", "(t // w)")
-        + f")) AS BIGINT) AS sum_{c}"
-        for c, expr in chans.items()
+_Chan = Callable[[str, str, str], str]
+
+
+def _pixel_sums(chan: _Chan, resized: bool = False) -> str:
+    """The media oracles' channel sums: ``sum_{r,g,b}`` over the full
+    ``w`` × ``h`` raster, or ``rs_sum_{r,g,b}`` over the 8×6
+    nearest-neighbour resize. ``chan(c, x, y)`` is channel ``c``'s SQL
+    at pixel (``x``, ``y``), both given as unparenthesised SQL over the
+    list index ``t``."""
+    n, x, y, pre = (
+        ("48", "((t % 8) * w) // 8", "((t // 8) * h) // 6", "rs_") if resized
+        else ("CAST(w * h AS INT)", "t % w", "t // w", "")
     )
-    rs = ", ".join(
-        "CAST(list_sum(list_transform(range(0, 48), t -> "
-        + expr.replace("x", "(((t % 8) * w) // 8)").replace("y", "(((t // 8) * h) // 6)")
-        + f")) AS BIGINT) AS rs_sum_{c}"
-        for c, expr in chans.items()
+    return ", ".join(
+        f"CAST(list_sum(list_transform(range(0, {n}), t -> {chan(c, x, y)}))"
+        f" AS BIGINT) AS {pre}sum_{c}"
+        for c in "rgb"
     )
+
+
+def _image_oracle(dims: str, bpp: str, chan: _Chan) -> str:
+    """Analytic oracle of an ``image_meta(resize_to=(8, 6))`` row: per
+    document the geometry ``dims`` (SQL defining ``w`` and ``h``), the
+    source ``bpp`` and the full and resized channel sums of ``chan``.
+    Decoded values are layout-independent, so one oracle covers every
+    encoding of the same pixels."""
     return f"""
 WITH p AS (
-  SELECT doc_id, 4 + (doc_id % 13) AS w, 4 + (length(text) % 11) AS h
+  SELECT doc_id, {dims}
   FROM documents
 )
 SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(24 AS INT) AS bpp, {full}, {rs}
+       CAST({bpp} AS INT) AS bpp, {_pixel_sums(chan)}, {_pixel_sums(chan, True)}
 FROM p
 """
+
+
+def _mm_rgb(c: str, x: str, y: str) -> str:
+    """``_mm_pixel``'s channels as SQL."""
+    a, by, bx = {"r": (7, 31, 13), "g": (11, 17, 5), "b": (3, 7, 19)}[c]
+    return f"(doc_id * {a} + ({y}) * {by} + ({x}) * {bx}) % 256"
+
+
+def _palette(index: str, c: str) -> str:
+    """Channel ``c`` of palette entry ``index`` in the palette rows
+    (``((i*37+11)%256, (i*59+23)%256, (i*83+47)%256)``)."""
+    mul, add = {"r": (37, 11), "g": (59, 23), "b": (83, 47)}[c]
+    return f"(({index}) * {mul} + {add}) % 256"
+
+
+def _block_luma(seed: str, by: int, bx: int) -> _Chan:
+    """Flat 8×8 blocks of luma ``(seed + by·(y//8) + bx·(x//8)) % 256``
+    on all three channels (neutral chroma or grayscale: R = G = B)."""
+    return lambda c, x, y: f"({seed} + (({y}) // 8) * {by} + (({x}) // 8) * {bx}) % 256"
+
+
+_MM_IMAGE_DIMS = "4 + (doc_id % 13) AS w, 4 + (length(text) % 11) AS h"
+_MM_JPEG_DIMS = "8 * (1 + doc_id % 3) AS w, 8 * (1 + length(text) % 2) AS h"
+# every 4th JPEG document is single-component grayscale
+_MM_JPEG_BPP = "CASE WHEN doc_id % 4 = 0 THEN 8 ELSE 24 END"
 
 
 def _run_available_now(stream_df, base: str) -> str:
@@ -2639,17 +2602,7 @@ def q_sessionize_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SESSIONIZE_STREAMED = f"""
-WITH ev AS ({_EV_CENTS_SQL}),
-lagged AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
-),
-s AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-                     THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM lagged
-)
+{_gap_sessions('>')}
 SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
        CAST(count(*) AS BIGINT) AS n_revisits,
        COALESCE(CAST(SUM(value_cents) AS BIGINT), 0) AS sum_cents
@@ -2722,7 +2675,7 @@ def _q_mm_png(
       or endianness-confused decoder would surface; filter
       reconstruction at the doubled byte stride, MSB 16→8 reduction).
 
-    All three share ``_mm_png_oracle`` (decoded pixels are
+    All three share ``multimodal_image``'s oracle (decoded pixels are
     layout-independent; only the source bpp follows the bit depth), so
     an inflate, filter-reconstruction, RGBA-stride, pass-geometry,
     per-pass-stride, prior-reset, scatter, byte-order, reduction or
@@ -2749,38 +2702,11 @@ q_multimodal_png_adam7 = functools.partial(_q_mm_png, bitdepth=8, interlace_ever
 q_multimodal_png16 = functools.partial(_q_mm_png, bitdepth=16, interlace_every=3)
 
 
-def _mm_png_oracle(channel_bits: int = 8) -> str:
-    """Analytic oracle for the truecolor PNG rows: channel sums from the
-    shared pixel formula (layout-independent — the same SQL covers the
-    sequential, Adam7, and 16-bit rows; only the reported source bpp
-    depends on ``channel_bits``)."""
-    chans = {
-        "r": "(doc_id * 7 + y * 31 + x * 13) % 256",
-        "g": "(doc_id * 11 + y * 17 + x * 5) % 256",
-        "b": "(doc_id * 3 + y * 7 + x * 19) % 256",
-    }
-    full = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        + expr.replace("x", "(t % w)").replace("y", "(t // w)")
-        + f")) AS BIGINT) AS sum_{c}"
-        for c, expr in chans.items()
-    )
-    rs = ", ".join(
-        "CAST(list_sum(list_transform(range(0, 48), t -> "
-        + expr.replace("x", "(((t % 8) * w) // 8)").replace("y", "(((t // 8) * h) // 6)")
-        + f")) AS BIGINT) AS rs_sum_{c}"
-        for c, expr in chans.items()
-    )
-    return f"""
-WITH p AS (
-  SELECT doc_id, 4 + (doc_id % 13) AS w, 4 + (length(text) % 11) AS h
-  FROM documents
-)
-SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(CASE WHEN doc_id % 4 = 0 THEN {4 * channel_bits} ELSE {3 * channel_bits} END AS INT) AS bpp,
-       {full}, {rs}
-FROM p
-"""
+def _mm_png_oracle(channel_bits: int) -> str:
+    """The truecolor PNG rows: ``multimodal_image``'s pixels, with every
+    4th document RGBA at ``channel_bits`` per channel."""
+    bpp = f"CASE WHEN doc_id % 4 = 0 THEN {4 * channel_bits} ELSE {3 * channel_bits} END"
+    return _image_oracle(_MM_IMAGE_DIMS, bpp, _mm_rgb)
 
 
 def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2870,154 +2796,73 @@ def q_multimodal_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
-def _mm_png_palette_oracle() -> str:
-    # index(x, y) = (doc_id*7 + y*31 + x*13) % 2^bd,
-    # palette[i] = ((i*37+11)%256, (i*59+23)%256, (i*83+47)%256)
-    full = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        "(((doc_id * 7 + (t // w) * 31 + (t % w) * 13) % m)"
-        f" * {mul} + {add}) % 256)) AS BIGINT) AS sum_{c}"
-        for c, mul, add in (("r", 37, 11), ("g", 59, 23), ("b", 83, 47))
-    )
-    rs = ", ".join(
-        "CAST(list_sum(list_transform(range(0, 48), t -> "
-        "(((doc_id * 7 + (((t // 8) * h) // 6) * 31 + (((t % 8) * w) // 8) * 13) % m)"
-        f" * {mul} + {add}) % 256)) AS BIGINT) AS rs_sum_{c}"
-        for c, mul, add in (("r", 37, 11), ("g", 59, 23), ("b", 83, 47))
-    )
-    return f"""
-WITH p AS (
-  SELECT doc_id, 3 + doc_id % 14 AS w, 3 + length(text) % 13 AS h,
+ORACLE_MM_PNG_PALETTE = _image_oracle(
+    """3 + doc_id % 14 AS w, 3 + length(text) % 13 AS h,
          CASE doc_id % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END AS bd,
-         CASE doc_id % 4 WHEN 0 THEN 2 WHEN 1 THEN 4 WHEN 2 THEN 16 ELSE 256 END AS m
-  FROM documents
+         CASE doc_id % 4 WHEN 0 THEN 2 WHEN 1 THEN 4 WHEN 2 THEN 16 ELSE 256 END AS m""",
+    "bd",
+    # index(x, y) = (doc_id*7 + y*31 + x*13) % 2^bd
+    lambda c, x, y: _palette(f"(doc_id * 7 + ({y}) * 31 + ({x}) * 13) % m", c),
 )
-SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(bd AS INT) AS bpp, {full}, {rs}
-FROM p
-"""
 
 
-def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL DCT-compressed-image decode (stdlib baseline JPEG codec:
-    marker walk, canonical Huffman entropy decode, dequantize, exact
-    float64 IDCT, JFIF color convert — operators/multimodal.decode_jpeg)
-    + REAL nearest-neighbor resize: per document a baseline JPEG of
-    flat 8x8 blocks is synthesized (block luma from a doc-dependent
-    formula, neutral chroma so the color convert is bit-exact; every
-    4th document takes the single-component grayscale scan path, and
-    every 5th-remainder-3 color document is encoded NON-interleaved —
-    one full-band scan per component, the T.81 layout the r4 decoder
-    refused) and pushed through the same decode → resize → channel-sum
-    chain as the BMP/PNG rows. The oracle recomputes the sums
-    analytically from the block formula — decoded values are encoding-
-    independent, so the same SQL covers both scan layouts — and a
-    Huffman, dezigzag, dequant, IDCT, scan-coverage, color-convert or
-    resize bug breaks the hash. Reference decode analog:
-    reference/datasets/videoset.py:66-95 (cv2 over compressed frames)."""
+# block-luma constants (doc_id, by, bx) of the sequential and the
+# progressive JPEG rows
+_MM_JPEG_LUMA = {False: (7, 31, 13), True: (11, 29, 17)}
+
+
+def _q_mm_jpeg(spark: SparkSession, sf_dir: str, progressive: bool) -> DataFrame:
+    """REAL DCT-compressed-image decode (stdlib JPEG codec: marker walk,
+    canonical Huffman entropy decode, dequantize, exact float64 IDCT,
+    JFIF color convert — operators/multimodal.decode_jpeg) + REAL
+    nearest-neighbor resize, one builder for two registry rows: per
+    document a JPEG of flat 8x8 blocks is synthesized (block luma from a
+    doc-dependent formula, neutral chroma so the color convert is
+    bit-exact; every 4th document takes the single-component grayscale
+    scan path) and pushed through the same decode → resize → channel-sum
+    chain as the BMP/PNG rows.
+
+    - ``multimodal_jpeg`` (baseline): every 5th-remainder-3 color
+      document is encoded NON-interleaved — one full-band scan per
+      component, the T.81 layout the r4 decoder refused;
+    - ``multimodal_jpeg_prog`` (SOF2: spectral selection + successive
+      approximation — the dominant encoding in real web crawls): the
+      4-phase scan script (DC first Al=1, DC refinement, per-component
+      AC first + AC refinement with EOB-run coding), two-thirds of the
+      documents carrying DRI restart intervals (interval doc_id%3 ∈
+      {1,2}; the remaining third has none).
+
+    The oracle recomputes the sums analytically from the block formula
+    — decoded values are encoding-independent, so the same SQL covers
+    every scan layout — and a Huffman, dezigzag, dequant, IDCT,
+    scan-coverage, scan-script, EOB-run, refinement-bit, restart-reset,
+    color-convert or resize bug breaks the hash. Reference decode
+    analog: reference/datasets/videoset.py:66-95 (cv2 over compressed
+    frames, progressive transparently)."""
+    a, ky, kx = _MM_JPEG_LUMA[progressive]
 
     def make(doc_id: int, tlen: int) -> bytes:
         def bf(bx, by):
-            return ((doc_id * 7 + by * 31 + bx * 13) % 256, 128, 128)
+            return ((doc_id * a + by * ky + bx * kx) % 256, 128, 128)
 
-        return MM.synth_jpeg(
-            8 * (1 + doc_id % 3), 8 * (1 + tlen % 2), bf,
-            gray=(doc_id % 4 == 0), interleaved=(doc_id % 5 != 3),
-        )
+        w, h, gray = 8 * (1 + doc_id % 3), 8 * (1 + tlen % 2), doc_id % 4 == 0
+        if progressive:
+            return MM.synth_jpeg_progressive(
+                w, h, bf, gray=gray, restart_interval=doc_id % 3  # 0 = none, 1, 2
+            )
+        return MM.synth_jpeg(w, h, bf, gray=gray, interleaved=(doc_id % 5 != 3))
 
     img = _synth_media(spark, sf_dir, "image", make)
     return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
-def _mm_jpeg_oracle() -> str:
-    # pixel(x, y) = blockY(x // 8, y // 8) on all three channels
-    # (neutral chroma -> R = G = B = Y exactly)
-    def term(xe: str, ye: str) -> str:
-        return f"(doc_id * 7 + (({ye}) // 8) * 31 + (({xe}) // 8) * 13) % 256"
-
-    full = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        + term("t % w", "t // w")
-        + f")) AS BIGINT) AS sum_{c}"
-        for c in ("r", "g", "b")
-    )
-    rs = ", ".join(
-        "CAST(list_sum(list_transform(range(0, 48), t -> "
-        + term("((t % 8) * w) // 8", "((t // 8) * h) // 6")
-        + f")) AS BIGINT) AS rs_sum_{c}"
-        for c in ("r", "g", "b")
-    )
-    return f"""
-WITH p AS (
-  SELECT doc_id, 8 * (1 + doc_id % 3) AS w, 8 * (1 + length(text) % 2) AS h
-  FROM documents
-)
-SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(CASE WHEN doc_id % 4 = 0 THEN 8 ELSE 24 END AS INT) AS bpp,
-       {full}, {rs}
-FROM p
-"""
+q_multimodal_jpeg = functools.partial(_q_mm_jpeg, progressive=False)
+q_multimodal_jpeg_prog = functools.partial(_q_mm_jpeg, progressive=True)
 
 
-def q_multimodal_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Progressive-JPEG decode (SOF2: spectral selection + successive
-    approximation — the dominant encoding in real web crawls): per
-    document a progressive JPEG of flat 8x8 blocks is synthesized via
-    the 4-phase scan script (DC first Al=1, DC refinement, per-component
-    AC first + AC refinement with EOB-run coding), two-thirds of the
-    documents additionally carrying DRI restart intervals (interval
-    doc_id%3 ∈ {1,2}; the remaining third has none), every 4th
-    document grayscale — then pushed through the SAME decode → resize →
-    channel-sum chain as the sequential `multimodal_jpeg` row
-    (operators/multimodal.decode_jpeg, the SOF2 path). The oracle
-    recomputes the sums analytically from the block formula, so a scan-
-    script, EOB-run, refinement-bit, restart-reset or IDCT bug breaks
-    the hash. Reference decode analog: reference/datasets/videoset.py:
-    66-95 (cv2 handles progressive transparently; so does this engine
-    now)."""
-
-    def make(doc_id: int, tlen: int) -> bytes:
-        def bf(bx, by):
-            return ((doc_id * 11 + by * 29 + bx * 17) % 256, 128, 128)
-
-        return MM.synth_jpeg_progressive(
-            8 * (1 + doc_id % 3), 8 * (1 + tlen % 2), bf,
-            gray=(doc_id % 4 == 0),
-            restart_interval=doc_id % 3,  # 0 = none, 1, 2
-        )
-
-    img = _synth_media(spark, sf_dir, "image", make)
-    return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
-
-
-def _mm_jpeg_prog_oracle() -> str:
-    # same analytic construction as _mm_jpeg_oracle with the
-    # progressive row's block-luma constants (11, 29, 17)
-    def term(xe: str, ye: str) -> str:
-        return f"(doc_id * 11 + (({ye}) // 8) * 29 + (({xe}) // 8) * 17) % 256"
-
-    full = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        + term("t % w", "t // w")
-        + f")) AS BIGINT) AS sum_{c}"
-        for c in ("r", "g", "b")
-    )
-    rs = ", ".join(
-        "CAST(list_sum(list_transform(range(0, 48), t -> "
-        + term("((t % 8) * w) // 8", "((t // 8) * h) // 6")
-        + f")) AS BIGINT) AS rs_sum_{c}"
-        for c in ("r", "g", "b")
-    )
-    return f"""
-WITH p AS (
-  SELECT doc_id, 8 * (1 + doc_id % 3) AS w, 8 * (1 + length(text) % 2) AS h
-  FROM documents
-)
-SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(CASE WHEN doc_id % 4 = 0 THEN 8 ELSE 24 END AS INT) AS bpp,
-       {full}, {rs}
-FROM p
-"""
+def _mm_jpeg_oracle(progressive: bool) -> str:
+    a, ky, kx = _MM_JPEG_LUMA[progressive]
+    return _image_oracle(_MM_JPEG_DIMS, _MM_JPEG_BPP, _block_luma(f"doc_id * {a}", ky, kx))
 
 
 def q_multimodal_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3059,50 +2904,33 @@ def q_multimodal_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.image_meta(img, media_col="image", id_col="doc_id", resize_to=(8, 6))
 
 
-def _mm_jpeg_420_oracle() -> str:
+def _mm_jpeg_420_chan(c: str, xe: str, ye: str) -> str:
     # pixel(x, y): Y from the 8x8 block formula; Cb/Cr from the chroma
     # tile formula (tile = 16 x cth px, cth = 8 for the 4:2:2 docs,
     # 16 for 4:2:0); JFIF color convert replayed as floor(v + 0.5)
     # (== numpy rint here: chroma offsets ±20 keep every fractional
     # part off .5), clipped to 0..255. Mirrors the decoder's float64
     # op order (one multiply, one/two adds) so IEEE results match.
-    def chan(c: str, xe: str, ye: str) -> str:
-        yv = f"((doc_id * 19 + (({ye}) // 8) * 23 + (({xe}) // 8) * 29) % 256)"
-        cx, cy = f"(({xe}) // 16)", f"(({ye}) // cth)"
-        cb = f"(108 + 20 * ((doc_id + {cx} + {cy}) % 3))"
-        cr = f"(108 + 20 * ((doc_id * 2 + {cx} * 3 + {cy}) % 3))"
-        if c == "r":
-            v = f"{yv} + 1.402 * ({cr} - 128)"
-        elif c == "g":
-            v = f"{yv} - 0.344136 * ({cb} - 128) - 0.714136 * ({cr} - 128)"
-        else:
-            v = f"{yv} + 1.772 * ({cb} - 128)"
-        return f"least(255, greatest(0, CAST(floor(({v}) + 0.5) AS BIGINT)))"
+    yv = f"({_block_luma('doc_id * 19', 23, 29)(c, xe, ye)})"
+    cx, cy = f"(({xe}) // 16)", f"(({ye}) // cth)"
+    cb = f"(108 + 20 * ((doc_id + {cx} + {cy}) % 3))"
+    cr = f"(108 + 20 * ((doc_id * 2 + {cx} * 3 + {cy}) % 3))"
+    if c == "r":
+        v = f"{yv} + 1.402 * ({cr} - 128)"
+    elif c == "g":
+        v = f"{yv} - 0.344136 * ({cb} - 128) - 0.714136 * ({cr} - 128)"
+    else:
+        v = f"{yv} + 1.772 * ({cb} - 128)"
+    return f"least(255, greatest(0, CAST(floor(({v}) + 0.5) AS BIGINT)))"
 
-    full = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        + chan(c, "t % w", "t // w")
-        + f")) AS BIGINT) AS sum_{c}"
-        for c in ("r", "g", "b")
-    )
-    rs = ", ".join(
-        "CAST(list_sum(list_transform(range(0, 48), t -> "
-        + chan(c, "((t % 8) * w) // 8", "((t // 8) * h) // 6")
-        + f")) AS BIGINT) AS rs_sum_{c}"
-        for c in ("r", "g", "b")
-    )
-    return f"""
-WITH p AS (
-  SELECT doc_id, 16 * (1 + doc_id % 2) AS w,
+
+ORACLE_MM_JPEG_420 = _image_oracle(
+    """16 * (1 + doc_id % 2) AS w,
          16 * (1 + length(text) % 2) AS h,
-         CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS cth
-  FROM documents
+         CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS cth""",
+    "24",
+    _mm_jpeg_420_chan,
 )
-SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(24 AS INT) AS bpp,
-       {full}, {rs}
-FROM p
-"""
 
 
 def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3136,17 +2964,10 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mm_video_oracle() -> str:
-    # pixel(x, y, src) = (doc_id*7 + src*17 + (y//8)*31 + (x//8)*13) % 256
-    # on all three channels (neutral chroma / grayscale -> R = G = B)
-    sums = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        "(doc_id * 7 + src_frame * 17 + ((t // w) // 8) * 31"
-        f" + ((t % w) // 8) * 13) % 256)) AS BIGINT) AS sum_{c}"
-        for c in ("r", "g", "b")
-    )
+    sums = _pixel_sums(_block_luma("doc_id * 7 + src_frame * 17", 31, 13))
     return f"""
 WITH p AS (
-  SELECT doc_id, 8 * (1 + doc_id % 3) AS w, 8 * (1 + length(text) % 2) AS h,
+  SELECT doc_id, {_MM_JPEG_DIMS},
          2 + doc_id % 7 AS n
   FROM documents
 ), pw AS (
@@ -3161,7 +2982,7 @@ fr AS (
 )
 SELECT doc_id, pathway, frame_idx, src_frame,
        CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(CASE WHEN doc_id % 4 = 0 THEN 8 ELSE 24 END AS INT) AS bpp,
+       CAST({_MM_JPEG_BPP} AS INT) AS bpp,
        {sums}
 FROM (SELECT *, CAST(stride * LEAST(frame_idx, m - 1) AS INT) AS src_frame FROM fr)
 """
@@ -3201,13 +3022,8 @@ def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mm_gif_oracle() -> str:
     # pixel index(x, y, f) = (doc_id*7 + f*29 + y*31 + x*13) % 64
-    # palette[i] = ((i*37+11)%256, (i*59+23)%256, (i*83+47)%256)
-    sums = ", ".join(
-        "CAST(list_sum(list_transform(range(0, CAST(w * h AS INT)), t -> "
-        "(((doc_id * 7 + frame_idx * 29 + (t // w) * 31 + (t % w) * 13) % 64)"
-        f" * {m} + {a}) % 256)) AS BIGINT) AS sum_{c}"
-        for c, m, a in (("r", 37, 11), ("g", 59, 23), ("b", 83, 47))
-    )
+    sums = _pixel_sums(lambda c, x, y: _palette(
+        f"(doc_id * 7 + frame_idx * 29 + ({y}) * 31 + ({x}) * 13) % 64", c))
     return f"""
 WITH p AS (
   SELECT doc_id, 3 + doc_id % 14 AS w, 3 + length(text) % 12 AS h,
@@ -4682,7 +4498,7 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_canonical_oracle() -> str:
     return f"""
-WITH RECURSIVE p AS ({_minhash_oracle()}),
+WITH RECURSIVE p AS ({ORACLE_DEDUP_MINHASH}),
 ed AS (SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p),
 reach(node, r) AS (
   SELECT DISTINCT a, a FROM ed
@@ -5721,26 +5537,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_incremental_oracle() -> str:
-    salted = [
-        _md5i64_sql(f"concat('{i}:', CAST(shingle AS VARCHAR))")
-        for i in range(_N_MINHASH)
-    ]
-    mh_cols = ", ".join(f"min({s}) AS mh{i}" for i, s in enumerate(salted))
-    rows = _N_MINHASH // _N_BANDS
-    band_selects = []
-    for b in range(_N_BANDS):
-        parts = ", '|', ".join(
-            f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows)
-        )
-        band_selects.append(
-            f"SELECT id, {b} AS band, {_md5i64_sql(f'concat({parts})')} AS bucket FROM mh"
-        )
-    buckets = " UNION ALL ".join(band_selects)
-    return f"""
+ORACLE_DEDUP_INCREMENTAL = f"""
 WITH {_SHINGLE_CTE},
-mh AS (SELECT id, {mh_cols} FROM sh GROUP BY id),
-buckets AS ({buckets}),
+{_lsh_buckets(_MINHASH_SIG)},
 k AS (SELECT doc_id, md5(text) AS h, (doc_id % 10) >= 8 AS is_new FROM documents),
 old_h AS (SELECT DISTINCT h FROM k WHERE NOT is_new),
 exact AS (SELECT doc_id FROM k WHERE is_new AND h IN (SELECT h FROM old_h)),
@@ -6541,15 +6340,7 @@ def q_warc_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-file embarrassingly parallel — exactly this plan's shape
     (one shuffle to form shards; real crawls skip it, reading WARCs
     as-is)."""
-    from slowfast_feature_extractor_spark.sources import warc as W
-
-    d = _docs(spark, sf_dir)
-    url = _synth_url()
-    rec = W.warc_record(url, F.col("text"))
-    shards = W.build_shards(
-        d, shard=F.expr("doc_id div 50"), order=F.col("doc_id"), record=rec
-    )
-    return W.parse_shards(shards)
+    return W.parse_shards(_warc_shards(spark, sf_dir, W.build_shards))
 
 
 ORACLE_WARC_PARSE = """
@@ -6575,15 +6366,27 @@ def q_warc_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     change a parsed byte, so a member-boundary, wbits, or framing bug
     breaks the hash. Reference analog: compressed-container decode,
     reference/datasets/videoset.py:66-103."""
-    from slowfast_feature_extractor_spark.sources import warc as W
+    return W.parse_shards_gz(_warc_shards(spark, sf_dir, W.build_shards_gz))
 
-    d = _docs(spark, sf_dir)
-    url = _synth_url()
-    rec = W.warc_record(url, F.col("text"))
-    shards = W.build_shards_gz(
-        d, shard=F.expr("doc_id div 50"), order=F.col("doc_id"), record=rec
+
+def _warc_shards(
+    spark: SparkSession, sf_dir: str, build: Callable[..., DataFrame]
+) -> DataFrame:
+    """The corpus as (shard, blob): one WARC/1.0 response record per
+    document, packed by ``build`` into 50-document shards in doc order."""
+    rec = W.warc_record(_synth_url(), F.col("text"))
+    return build(
+        _docs(spark, sf_dir), shard=F.expr("doc_id div 50"), order=F.col("doc_id"),
+        record=rec,
     )
-    return W.parse_shards_gz(shards)
+
+
+def _warc_files(files: DataFrame) -> DataFrame:
+    """``binaryFile`` rows of ``shard-NNNNN.warc`` files as (shard, blob)."""
+    return files.select(
+        F.regexp_extract(F.col("path"), r"shard-(\d+)\.warc", 1).cast("long").alias("shard"),
+        F.col("content").alias("blob"),
+    )
 
 
 def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6604,16 +6407,8 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode — on a real cluster this fixture step would target shared
     storage (S3/HDFS), while the binaryFile READ path itself is
     storage-agnostic."""
-    from slowfast_feature_extractor_spark.sources import warc as W
-
     wdir = _warc_fixture_dir(spark, sf_dir, _scratch("warc_scan"))
-    files = spark.read.format("binaryFile").load(wdir).select(
-        F.regexp_extract(F.col("path"), r"shard-(\d+)\.warc", 1)
-        .cast("long")
-        .alias("shard"),
-        F.col("content").alias("blob"),
-    )
-    return W.parse_shards(files)
+    return W.parse_shards(_warc_files(spark.read.format("binaryFile").load(wdir)))
 
 
 def _warc_fixture_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
@@ -6621,15 +6416,9 @@ def _warc_fixture_dir(spark: SparkSession, sf_dir: str, base: str) -> str:
     ``base/shards`` (executor tasks write them — no driver collect; a
     real crawl's files already exist, this is fixture construction in
     the crawl's own shape)."""
-    from slowfast_feature_extractor_spark.sources import warc as W
-
     wdir = os.path.join(base, "shards")
     os.makedirs(wdir)
-    d = _docs(spark, sf_dir)
-    rec = W.warc_record(_synth_url(), F.col("text"))
-    shards = W.build_shards(
-        d, shard=F.expr("doc_id div 50"), order=F.col("doc_id"), record=rec
-    )
+    shards = _warc_shards(spark, sf_dir, W.build_shards)
 
     def _write_files(rows):
         for row in rows:
@@ -6654,8 +6443,6 @@ def q_warc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     record emits exactly once because the file source tracks consumed
     filenames) — the production shape for a crawler that drops WARC
     files onto storage continuously."""
-    from slowfast_feature_extractor_spark.sources import warc as W
-
     base = _scratch("warc_streamed")
     wdir = _warc_fixture_dir(spark, sf_dir, base)
     stream = (
@@ -6668,14 +6455,8 @@ def q_warc_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 3)
         .option("pathGlobFilter", "*.warc")
         .load(wdir)
-        .select(
-            F.regexp_extract(F.col("path"), r"shard-(\d+)\.warc", 1)
-            .cast("long")
-            .alias("shard"),
-            F.col("content").alias("blob"),
-        )
     )
-    records = W.parse_shards(stream)
+    records = W.parse_shards(_warc_files(stream))
     out = _run_available_now(records, base)
     return spark.read.parquet(out).select(
         "shard", "url", "n_bytes", "payload_md5"
@@ -7588,18 +7369,7 @@ def q_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SESSIONIZE_NATIVE = f"""
-WITH ev AS ({_EV_CENTS_SQL}),
-lagged AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
-),
-s AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL
-                     OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000
-                     THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM lagged
-)
+{_gap_sessions('>=')}
 SELECT user_id, min(ts) AS session_start,
        max(ts) + INTERVAL 30 MINUTE AS session_end,
        CAST(count(*) AS BIGINT) AS n_events,
@@ -7684,8 +7454,8 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "quantile_sketch": (q_quantile_sketch, ORACLE_QUANTILE_SKETCH),
     # --- never hash-checked (new in r6; knn_ivf oracle is new) ---
     "multimodal_gif": (q_multimodal_gif, _mm_gif_oracle()),
-    "multimodal_png_palette": (q_multimodal_png_palette, _mm_png_palette_oracle()),
-    "multimodal_png_adam7": (q_multimodal_png_adam7, _mm_png_oracle()),
+    "multimodal_png_palette": (q_multimodal_png_palette, ORACLE_MM_PNG_PALETTE),
+    "multimodal_png_adam7": (q_multimodal_png_adam7, _mm_png_oracle(8)),
     "multimodal_png16": (q_multimodal_png16, _mm_png_oracle(16)),
     "charset_detect": (q_charset_detect, ORACLE_CHARSET_DETECT),
     "decontaminate_bloom": (q_decontaminate_bloom, ORACLE_DECONTAMINATE),
@@ -7703,7 +7473,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "mixture_weights": (q_mixture_weights, ORACLE_MIXTURE_WEIGHTS),
     "dedup_canonical": (q_dedup_canonical, _dedup_canonical_oracle()),
     "knn_ivfpq": (q_knn_ivfpq, _knn_ivfpq_oracle()),
-    "knn_ivfpq_ivf": (q_knn_ivfpq_ivf, _knn_ivfpq_ivf_oracle()),
+    "knn_ivfpq_ivf": (q_knn_ivfpq_ivf, _knn_ivfpq_oracle(n_cells=8)),
     "audio_spectral": (q_audio_spectral, ORACLE_AUDIO_SPECTRAL),
     "multimodal_jpeg_lossless": (q_multimodal_jpeg_lossless,
                                  ORACLE_MULTIMODAL_JPEG_LOSSLESS),
@@ -7715,7 +7485,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "jsonl_scan": (q_jsonl_scan, ORACLE_JSONL_SCAN),
     "orc_scan": (q_orc_scan, ORACLE_ORC_SCAN),
     "dedup_spans": (q_dedup_spans, ORACLE_DEDUP_SPANS),
-    "multimodal_jpeg_420": (q_multimodal_jpeg_420, _mm_jpeg_420_oracle()),
+    "multimodal_jpeg_420": (q_multimodal_jpeg_420, ORACLE_MM_JPEG_420),
     "pit_dual_rate_auto": (q_pit_dual_rate_auto, ORACLE_PIT_DUAL_RATE),
     "knn_ivf": (q_knn_ivf, ORACLE_KNN_IVF),
     "cdc_merge": (q_cdc_merge, ORACLE_CDC_MERGE),
@@ -7735,10 +7505,10 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "union_set_ops": (q_union_set_ops, ORACLE_UNION_SET_OPS),
     "except_ops": (q_except_ops, ORACLE_EXCEPT_OPS),
     # --- r5-green but decode path changed this round ---
-    "multimodal_jpeg_prog": (q_multimodal_jpeg_prog, _mm_jpeg_prog_oracle()),
+    "multimodal_jpeg_prog": (q_multimodal_jpeg_prog, _mm_jpeg_oracle(True)),
     "multimodal_video": (q_multimodal_video, _mm_video_oracle()),
     # --- last green r4; code-touched-this-round rows first ---
-    "multimodal_jpeg": (q_multimodal_jpeg, _mm_jpeg_oracle()),
+    "multimodal_jpeg": (q_multimodal_jpeg, _mm_jpeg_oracle(False)),
     "knn_bruteforce": (q_knn_bruteforce, ORACLE_KNN_BRUTEFORCE),
     "knn_ivf_fullprobe": (q_knn_ivf_fullprobe, ORACLE_KNN_BRUTEFORCE),
     "pit_dual_rate": (q_pit_dual_rate, ORACLE_PIT_DUAL_RATE),
@@ -7750,9 +7520,9 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "decontaminate": (q_decontaminate, ORACLE_DECONTAMINATE),
     "dedup_clusters": (q_dedup_clusters, ORACLE_DEDUP_CLUSTERS),
     "dedup_embedding": (q_dedup_embedding, ORACLE_DEDUP_EMBEDDING),
-    "dedup_embedding_lsh": (q_dedup_embedding_lsh, _dedup_embedding_lsh_oracle()),
-    "dedup_incremental": (q_dedup_incremental, _dedup_incremental_oracle()),
-    "dedup_minhash_lsh": (q_dedup_minhash, _minhash_oracle()),
+    "dedup_embedding_lsh": (q_dedup_embedding_lsh, ORACLE_DEDUP_EMBEDDING_LSH),
+    "dedup_incremental": (q_dedup_incremental, ORACLE_DEDUP_INCREMENTAL),
+    "dedup_minhash_lsh": (q_dedup_minhash, ORACLE_DEDUP_MINHASH),
     "dedup_streamed": (q_dedup_streamed, ORACLE_DEDUP_STREAMED),
     "distinct_counts": (q_distinct_counts, ORACLE_DISTINCT_COUNTS),
     "doc_repetition": (q_doc_repetition, ORACLE_DOC_REPETITION),
@@ -7760,14 +7530,14 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "dual_rate_streamed": (q_dual_rate_streamed, ORACLE_DUAL_RATE_STREAMED),
     "featurize_pages_chunked": (q_featurize_pages_chunked, ORACLE_FEATURIZE_PAGES),
     "featurize_sessions": (q_featurize_sessions, ORACLE_FEATURIZE_SESSIONS),
-    "knn_lsh": (q_knn_lsh, _knn_lsh_oracle()),
+    "knn_lsh": (q_knn_lsh, ORACLE_KNN_LSH),
     "lm_unigram_score": (q_lm_unigram_score, ORACLE_LM_UNIGRAM_SCORE),
     "manifest_scan": (q_manifest_scan, ORACLE_MANIFEST_SCAN),
     "multimodal_audio": (q_multimodal_audio, ORACLE_MULTIMODAL_AUDIO),
     "multimodal_frames": (q_multimodal_frames, ORACLE_MULTIMODAL_FRAMES),
-    "multimodal_image": (q_multimodal_image, _mm_image_oracle()),
+    "multimodal_image": (q_multimodal_image, _image_oracle(_MM_IMAGE_DIMS, "24", _mm_rgb)),
     "multimodal_meta": (q_multimodal_meta, ORACLE_MULTIMODAL_META),
-    "multimodal_png": (q_multimodal_png, _mm_png_oracle()),
+    "multimodal_png": (q_multimodal_png, _mm_png_oracle(8)),
     "pagerank2": (q_pagerank2, ORACLE_PAGERANK2),
     "pivot_event_values": (q_pivot_event_values, ORACLE_PIVOT_EVENT_VALUES),
     "resample_series": (q_resample_series, ORACLE_RESAMPLE_SERIES),
@@ -7801,7 +7571,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "crawl_schedule": (q_crawl_schedule, ORACLE_CRAWL_SCHEDULE),
     "dedup_clusters_star": (q_dedup_clusters_star, ORACLE_DEDUP_CLUSTERS),
     "dedup_exact": (q_dedup_exact, ORACLE_DEDUP_EXACT),
-    "dedup_incremental_indexed": (q_dedup_incremental_indexed, _dedup_incremental_oracle()),
+    "dedup_incremental_indexed": (q_dedup_incremental_indexed, ORACLE_DEDUP_INCREMENTAL),
     "dedup_jaccard": (q_dedup_jaccard, ORACLE_DEDUP_JACCARD),
     "dedup_minhash_oph": (q_dedup_minhash_oph, _minhash_oph_oracle()),
     "dedup_passages": (q_dedup_passages, ORACLE_DEDUP_PASSAGES),
@@ -7819,7 +7589,7 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "host_meta_filter": (q_host_meta_filter, ORACLE_HOST_META_FILTER),
     "key_parse": (q_key_parse, ORACLE_KEY_PARSE),
     "lag_lead": (q_lag_lead, ORACLE_LAG_LEAD),
-    "langid": (q_langid, _langid_oracle()),
+    "langid": (q_langid, ORACLE_LANGID),
     "link_graph": (q_link_graph, ORACLE_LINK_GRAPH),
     "margin_entropy": (q_margin_entropy, ORACLE_MARGIN_ENTROPY),
     "part_supplier_revenue": (q_part_supplier_revenue, ORACLE_PART_SUPPLIER_REVENUE),

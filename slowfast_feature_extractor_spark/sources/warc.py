@@ -16,7 +16,7 @@ length-framed format, not from payload heuristics.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,51 +59,72 @@ def build_shards(
     )
 
 
-def parse_shards(shards: DataFrame) -> DataFrame:
-    """Walk each shard blob record-by-record: parse the header block
-    (terminated by CRLFCRLF), slice the payload by Content-Length
-    BYTES, skip the record separator, repeat. Arrow-batched
+_SEP = (CRLF + CRLF).encode()
+_RECORD_SCHEMA = "shard long, url string, n_bytes long, payload_md5 string"
+
+
+def _parse_record(data: bytes, pos: int) -> tuple[str, bytes, int]:
+    """Parse the header block of the record starting at ``pos``
+    (terminated by CRLFCRLF) and slice its payload by Content-Length
+    BYTES: (url, payload, end), ``end`` the offset just past the declared
+    payload. A payload shorter than declared ends before ``end``; the
+    readers check that, and the record magic, against their framing."""
+    hdr_end = data.index(_SEP, pos)
+    headers = {}
+    for line in data[pos:hdr_end].decode("utf-8").split(CRLF)[1:]:
+        k, _, v = line.partition(": ")
+        headers[k] = v
+    start = hdr_end + len(_SEP)
+    end = start + int(headers["Content-Length"])
+    return headers["WARC-Target-URI"], data[start:end], end
+
+
+def _map_records(
+    shards: DataFrame, records: Callable[[int, bytes], Iterator[tuple[str, bytes]]]
+) -> DataFrame:
+    """(shard, blob) → (shard, url, n_bytes, payload_md5), one row per
+    (url, payload) that ``records(shard, blob)`` yields. Arrow-batched
     ``mapInPandas`` — one Python invocation per shard batch, zero
-    per-row Python. Emits (shard, url, n_bytes, payload_md5)."""
+    per-row Python."""
 
     def _batches(it: Iterator) -> Iterator:
         import hashlib
 
         import pandas as pd
 
-        sep = (CRLF + CRLF).encode()
         for pdf in it:
             out = {"shard": [], "url": [], "n_bytes": [], "payload_md5": []}
             for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                data = bytes(blob)
-                pos = 0
-                while pos < len(data):
-                    # startswith(prefix, pos) — NOT data[pos:].startswith —
-                    # a tail slice per record would copy O(records x blob)
-                    if not data.startswith(b"WARC/1.0", pos):
-                        raise ValueError(
-                            f"shard {shard}: bad record magic at byte {pos}"
-                        )
-                    hdr_end = data.index(sep, pos)
-                    headers = {}
-                    for line in data[pos:hdr_end].decode("utf-8").split(CRLF)[1:]:
-                        k, _, v = line.partition(": ")
-                        headers[k] = v
-                    n = int(headers["Content-Length"])
-                    body_start = hdr_end + len(sep)
-                    payload = data[body_start : body_start + n]
-                    if len(payload) != n:
-                        raise ValueError(f"shard {shard}: truncated payload")
+                for url, payload in records(shard, bytes(blob)):
                     out["shard"].append(int(shard))
-                    out["url"].append(headers["WARC-Target-URI"])
-                    out["n_bytes"].append(n)
+                    out["url"].append(url)
+                    out["n_bytes"].append(len(payload))
                     out["payload_md5"].append(hashlib.md5(payload).hexdigest())
-                    pos = body_start + n + len(sep)
             yield pd.DataFrame(out)
 
-    return shards.mapInPandas(
-        _batches, schema="shard long, url string, n_bytes long, payload_md5 string"
-    )
+    return shards.mapInPandas(_batches, schema=_RECORD_SCHEMA)
+
+
+def parse_shards(shards: DataFrame) -> DataFrame:
+    """Walk each shard blob record-by-record: parse the header block
+    (terminated by CRLFCRLF), slice the payload by Content-Length
+    BYTES, skip the record separator, repeat. Emits (shard, url,
+    n_bytes, payload_md5)."""
+
+    def records(shard: int, data: bytes) -> Iterator[tuple[str, bytes]]:
+        pos = 0
+        while pos < len(data):
+            # startswith(prefix, pos) — NOT data[pos:].startswith —
+            # a tail slice per record would copy O(records x blob)
+            if not data.startswith(b"WARC/1.0", pos):
+                raise ValueError(f"shard {shard}: bad record magic at byte {pos}")
+            url, payload, end = _parse_record(data, pos)
+            if end > len(data):
+                raise ValueError(f"shard {shard}: truncated payload")
+            yield url, payload
+            pos = end + len(_SEP)
+
+    return _map_records(shards, records)
 
 
 def build_shards_gz(
@@ -153,62 +174,37 @@ def parse_shards_gz(shards: DataFrame) -> DataFrame:
     Same output schema as :func:`parse_shards` — the compression
     transport must not change a single parsed byte."""
 
-    def _batches(it: Iterator) -> Iterator:
-        import hashlib
+    def records(shard: int, buf: bytes) -> Iterator[tuple[str, bytes]]:
         import zlib
 
-        import pandas as pd
-
-        sep = (CRLF + CRLF).encode()
         CHUNK = 1 << 16
-        for pdf in it:
-            out = {"shard": [], "url": [], "n_bytes": [], "payload_md5": []}
-            for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                buf = bytes(blob)
-                mv = memoryview(buf)
-                pos = 0
-                while pos < len(buf):
-                    # Feed the inflater bounded memoryview slices instead
-                    # of `decompress(buf)` + `buf = do.unused_data`: that
-                    # form COPIES the whole remaining blob once per
-                    # member — O(members x shard bytes), quadratic time
-                    # on a real (GB-scale, 10^4-member) Common Crawl
-                    # shard even though peak memory stays one record.
-                    # Chunked feeding keeps the copy per member bounded
-                    # by CHUNK (unused_data is at most one chunk's tail).
-                    do = zlib.decompressobj(wbits=31)
-                    parts = []
-                    cur = pos
-                    while not do.eof:
-                        if cur >= len(buf):
-                            raise ValueError(
-                                f"shard {shard}: truncated gzip member"
-                            )
-                        chunk = mv[cur : cur + CHUNK]
-                        parts.append(do.decompress(chunk))
-                        cur += len(chunk) - len(do.unused_data)
-                    rec = b"".join(parts)
-                    pos = cur
-                    if not rec.startswith(b"WARC/1.0"):
-                        raise ValueError(f"shard {shard}: bad record magic in member")
-                    hdr_end = rec.index(sep)
-                    headers = {}
-                    for line in rec[:hdr_end].decode("utf-8").split(CRLF)[1:]:
-                        k, _, v = line.partition(": ")
-                        headers[k] = v
-                    n = int(headers["Content-Length"])
-                    body_start = hdr_end + len(sep)
-                    payload = rec[body_start : body_start + n]
-                    if len(payload) != n or rec[body_start + n :] != sep:
-                        raise ValueError(
-                            f"shard {shard}: member/record framing mismatch"
-                        )
-                    out["shard"].append(int(shard))
-                    out["url"].append(headers["WARC-Target-URI"])
-                    out["n_bytes"].append(n)
-                    out["payload_md5"].append(hashlib.md5(payload).hexdigest())
-            yield pd.DataFrame(out)
+        mv = memoryview(buf)
+        pos = 0
+        while pos < len(buf):
+            # Feed the inflater bounded memoryview slices instead
+            # of `decompress(buf)` + `buf = do.unused_data`: that
+            # form COPIES the whole remaining blob once per
+            # member — O(members x shard bytes), quadratic time
+            # on a real (GB-scale, 10^4-member) Common Crawl
+            # shard even though peak memory stays one record.
+            # Chunked feeding keeps the copy per member bounded
+            # by CHUNK (unused_data is at most one chunk's tail).
+            do = zlib.decompressobj(wbits=31)
+            parts = []
+            cur = pos
+            while not do.eof:
+                if cur >= len(buf):
+                    raise ValueError(f"shard {shard}: truncated gzip member")
+                chunk = mv[cur : cur + CHUNK]
+                parts.append(do.decompress(chunk))
+                cur += len(chunk) - len(do.unused_data)
+            rec = b"".join(parts)
+            pos = cur
+            if not rec.startswith(b"WARC/1.0"):
+                raise ValueError(f"shard {shard}: bad record magic in member")
+            url, payload, end = _parse_record(rec, 0)
+            if rec[end:] != _SEP:
+                raise ValueError(f"shard {shard}: member/record framing mismatch")
+            yield url, payload
 
-    return shards.mapInPandas(
-        _batches, schema="shard long, url string, n_bytes long, payload_md5 string"
-    )
+    return _map_records(shards, records)

@@ -30,3 +30,28 @@ def test_entry_contract(spark):
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 20
+
+
+# rows whose plans carry chunk-carry, window-family and Arrow-UDF stages:
+# their outputs must not move with the physical knobs
+_KNOB_ROWS = (
+    "pit_dual_rate", "pit_dual_rate_chunked", "featurize_pages",
+    "featurize_pages_chunked", "sessionize_chunked", "window_dual_rate_chunked",
+)
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [("spark.sql.shuffle.partitions", "1"),
+     ("spark.sql.execution.arrow.maxRecordsPerBatch", "7")],
+)
+def test_rows_match_oracle_under_physical_knob(spark, key, value):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        for name in _KNOB_ROWS:
+            fn, sql = REGISTRY[name]
+            ok, msg = compare(spark, SF_TINY, fn, sql)
+            assert ok, f"{name} with {key}={value}: {msg}"
+    finally:
+        spark.conf.set(key, old)

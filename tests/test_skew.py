@@ -413,3 +413,58 @@ def test_chunk_carries_jvm_matches_bruteforce(spark):
             for ts, v in prior[-slow_rows:]:
                 want.add((u, str(c), str(ts), v))
     assert got == want and len(want) > 0
+
+
+def _null_key_arms(spark, op):
+    """(plain, day-chunked) outputs of ``op`` on one NULL-keyed entity
+    with 2 events on each of 3 days, next to one keyed entity."""
+    import datetime as dt
+
+    from slowfast_feature_extractor_spark.plans.featurize import featurize_pages
+
+    rows = [
+        (user, dt.datetime(2024, 1, 1 + d, 12, 10 * i), 10 * d + i + (user is None) * 100)
+        for user in (None, "u")
+        for d in range(3)
+        for i in range(2)
+    ]
+    ev = spark.createDataFrame(rows, "user_id string, ts timestamp, event_id long")
+    if op == "sessionize":
+        def run(unit):
+            return sessionize(ev, entity="user_id", ts="ts", gap_seconds=1800.0,
+                              tiebreak="event_id", chunk=_chunk(unit))
+    elif op == "dual_rate_features":
+        def run(unit):
+            return dual_rate_features(
+                ev, entity="user_id", ts="ts", measure="event_id", fast_rows=2,
+                slow_rows=4, tiebreak="event_id", chunk=_chunk(unit),
+            )
+    else:
+        pages = ev.select(
+            F.col("user_id").alias("url"), F.col("ts").alias("warc_ts"),
+            F.lit(None).cast("binary").alias("html"),
+            F.repeat(F.lit("x"), F.col("event_id").cast("int")).alias("text"),
+            F.lit("en").alias("lang"),
+        )
+
+        def run(unit):
+            return featurize_pages(pages, fast_rows=2, slow_rows=4, fast_len=2,
+                                   slow_len=2, chunk_trunc=unit)
+
+    def rows_of(df):
+        return sorted(
+            (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()),
+            key=str,
+        )
+
+    return rows_of(run(None)), rows_of(run("day"))
+
+
+@pytest.mark.parametrize("op", ["sessionize", "dual_rate_features", "featurize_pages"])
+def test_chunked_arm_keeps_null_entity_running_counts(spark, op):
+    """A NULL entity is one entity in the plain arm's window; the chunked
+    arm must carry its running count (session index, n_hist_rows) across
+    chunks too, not restart it in every chunk after the first."""
+    plain, chunked = _null_key_arms(spark, op)
+    assert len(plain) == 12
+    assert chunked == plain
