@@ -31,7 +31,7 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -203,12 +203,6 @@ def run_with_checkpoint(
     return _run_pending(
         df, ledger_dir, bucket_col, compute_fn, max_buckets, batch_id, n_buckets, commit
     )
-
-
-def read_output(spark: SparkSession, output_dir: str) -> DataFrame:
-    # partition discovery restores the bucket column from the
-    # bucket=<b> directory layout
-    return spark.read.parquet(output_dir)
 
 
 def run_with_checkpoint_iceberg(

@@ -28,6 +28,7 @@ from slowfast_feature_extractor_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
+from slowfast_feature_extractor_spark.sources.tables import scan_stats
 
 
 def _with_norm(df: DataFrame, vec_col: str, norm_col: str) -> DataFrame:
@@ -249,7 +250,7 @@ def knn_bruteforce_blocked(
     materialization; the planner picks a non-broadcast strategy) instead
     of collecting into an OOM."""
     spark = corpus.sparkSession
-    est = _estimate_rows(queries)
+    est = scan_stats(queries).rows
     if est is not None and est > max_query_rows:
         return _cosine_top_k(
             _with_norm(corpus, vec_col, "__cn"),
@@ -303,36 +304,6 @@ def knn_bruteforce_blocked(
     return _top_k(cand, "query_id", "neighbor_id", "sim", k)
 
 
-def _estimate_rows(df: DataFrame, max_files: int = 256) -> int | None:
-    """Row estimate WITHOUT running a job: exact count from local
-    parquet footers (cheap — footers only) when the scan has a bounded
-    local file set, else Catalyst's rowCount statistic when the table
-    is analyzed, else None. Over-counting (scan-level filters) only
-    inflates the block count, never correctness."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if files and len(files) <= max_files:
-        try:
-            import pyarrow.parquet as pq
-
-            total = 0
-            for f in files:
-                path = f[7:] if f.startswith("file://") else f
-                total += pq.ParquetFile(path).metadata.num_rows
-            return total
-        except Exception:
-            pass
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-    except Exception:
-        pass
-    return None
-
-
 def embedding_neardup_blocked(
     df: DataFrame,
     threshold: float = 0.95,
@@ -382,10 +353,10 @@ def embedding_neardup_blocked(
         src = src.withColumn("__nb", F.lit(int(n_blocks)))
     elif bits is None:
         # single bucket: NO planning-time Spark job (r2 flagged the
-        # df.count() here) — parquet footers give the exact row count
-        # driver-side for a bounded file set; Catalyst's rowCount stat
-        # covers analyzed tables.
-        n = _estimate_rows(df)
+        # df.count() here) — parquet footers give the row count
+        # driver-side (exact up to 256 files, a strided estimate above);
+        # Catalyst's rowCount stat covers analyzed tables.
+        n = scan_stats(df).rows
         if n is None:
             n = df.count()
         src = src.withColumn("__nb", F.lit(int(max(1, -(-n // rows_per_block)))))

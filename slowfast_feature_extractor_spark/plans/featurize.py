@@ -33,6 +33,7 @@ from slowfast_feature_extractor_spark.operators.asof_join import asof_join
 from slowfast_feature_extractor_spark.operators.sessionize import sessionize
 from slowfast_feature_extractor_spark.operators.skew import carry_window
 from slowfast_feature_extractor_spark.operators.windows import dual_rate_features
+from slowfast_feature_extractor_spark.sources.tables import ScanStats, scan_stats
 
 # no finer than featurize_pages' day anchors (see _windowed)
 _CHUNK_TRUNCS = ("day", "week", "month", "year")
@@ -64,35 +65,12 @@ def _plan_is_bare_scan(df: DataFrame) -> bool:
     )
 
 
-def _footer_rows_sampled(df: DataFrame, max_footers: int = 256) -> int | None:
-    """Zero-job row estimate for scans too wide for the exact footer
-    pass (:func:`similarity._estimate_rows` caps at 256 files): read an
-    evenly strided SAMPLE of footers and scale by the file count. A
-    performance-decision estimate, not a correctness input."""
-    try:
-        import pyarrow.parquet as pq
-
-        files = [
-            f[7:] if f.startswith("file://") else f for f in df.inputFiles()
-        ]
-        if not files or not all(f.endswith(".parquet") for f in files):
-            return None
-        stride = max(1, len(files) // max_footers)
-        sample = files[::stride][:max_footers]
-        tot = sum(pq.ParquetFile(p).metadata.num_rows for p in sample)
-        return int(tot * len(files) / len(sample))
-    except Exception:
-        return None
-
-
-def _hot_entity_sketch(
-    df: DataFrame, entity: str, total: int, sample_rows: int = 200_000
-) -> float | None:
+def _hot_entity_sketch(stats: ScanStats, entity: str) -> float | None:
     """DRIVER-side hot-entity estimate with ZERO Spark jobs: read the
     ``entity`` column of parquet row groups spread evenly across the
-    WHOLE scan (pyarrow, footers + a bounded number of column chunks),
-    then scale the sample's max multiplicity by total/sampled (capped
-    at ``total``).
+    footers :func:`scan_stats` read (every file up to 256, an even
+    stride of files above), then scale the sample's max multiplicity
+    by ``stats.rows``/sampled (capped at ``stats.rows``).
 
     The sampled units are chosen up front from the full unit list —
     never by reading in file order until a row budget fills, which
@@ -103,30 +81,15 @@ def _hot_entity_sketch(
     overestimate — the penalty is choosing the chunked plan on a
     uniform corpus (a bounded perf premium, BENCH/SKEW.md), never a
     wrong answer; both plans are value-exact."""
+    units, total = stats.units, stats.rows
+    if not units:
+        return None
     try:
-        import pyarrow.parquet as pq
-
-        files = [
-            f[7:] if f.startswith("file://") else f for f in df.inputFiles()
-        ]
-        if not files or not all(f.endswith(".parquet") for f in files):
-            return None
-        # one pass over footers to lay out (file, row_group) units with
-        # their row counts
-        units: list[tuple[str, int, int]] = []
-        for path in files:
-            meta = pq.ParquetFile(path).metadata
-            units.extend(
-                (path, i, meta.row_group(i).num_rows)
-                for i in range(meta.num_row_groups)
-            )
-        if not units:
-            return None
         # pick the sample SET first — k units evenly strided across the
-        # whole list, k sized so expected rows ≈ sample_rows — then read
-        # all of it (no early break: coverage must span the entire scan)
+        # whole list, k sized so expected rows ≈ 200k — then read all of
+        # it (no early break: coverage must span the entire scan)
         avg = max(1, sum(u[2] for u in units) // len(units))
-        k = max(1, min(len(units), sample_rows // avg))
+        k = max(1, min(len(units), 200_000 // avg))
         stride = max(1, len(units) // k)
         chosen = units[::stride][:k]
 
@@ -135,9 +98,9 @@ def _hot_entity_sketch(
         counts: Counter = Counter()
         sampled = 0
         for path, rg, _ in chosen:
-            col = pq.ParquetFile(path).read_row_group(rg, columns=[entity])
-            counts.update(col.column(0).to_pylist())
-            sampled += col.num_rows
+            col = stats.read_column(path, rg, entity)
+            counts.update(col.to_pylist())
+            sampled += len(col)
         if not sampled:
             return None
         return min(float(total), counts.most_common(1)[0][1] * (total / sampled))
@@ -173,27 +136,19 @@ def auto_chunk_decision(
     Union — the flagship's input shape) the decision runs ZERO Spark
     jobs at ANY input size: parquet footers bound the total below
     ``threshold``, else a driver-side pyarrow row-group sample estimates
-    the hot entity (:func:`_hot_entity_sketch`). Composing a plan never
-    silently executes a corpus scan. For composed plans (footers can
+    the hot entity (:func:`_hot_entity_sketch`), both from one
+    :func:`scan_stats` footer pass. Composing a plan never silently
+    executes a corpus scan. For composed plans (footers can
     under-count a join/explode/union, ADVICE r4) one exact column-pruned
     groupBy count runs, memoized on the plan's semantic hash so repeated
     composition pays once — prefer passing ``chunk_trunc`` explicitly
     there. Either outcome is value-exact; the choice is performance-only."""
-    from slowfast_feature_extractor_spark.operators.similarity import _estimate_rows
-
     if _plan_is_bare_scan(df):
-        # exact footer total up to 256 files; above that, an evenly
-        # strided footer SAMPLE scaled by file count — still zero jobs.
-        # Without this, a >256-file table fell through to the eager
-        # count below, silently violating the zero-job-for-bare-scans
-        # contract exactly where the extra job is most expensive.
-        est = _estimate_rows(df)
-        if est is None:
-            est = _footer_rows_sampled(df)
-        if est is not None:
-            if est < threshold:
+        stats = scan_stats(df)
+        if stats.rows is not None:
+            if stats.rows < threshold:
                 return None
-            hot = _hot_entity_sketch(df, entity, est)
+            hot = _hot_entity_sketch(stats, entity)
             if hot is not None:
                 return "day" if hot >= threshold else None
     try:

@@ -120,23 +120,35 @@ def q_pit_dual_rate_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pit_dual_rate_from(_ev(spark, sf_dir), chunk_trunc="month")
 
 
-ORACLE_PIT_DUAL_RATE = f"""
-WITH ev AS ({_EV_CENTS_SQL}),
-sess AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL
-                      OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
+def _gap_sessions(split: str) -> str:
+    """``WITH ev, lagged, s``: ``s`` is the events (``ev``, with
+    ``value_cents``) plus ``session_idx``, the 1-based 30-minute-gap
+    session index per user in (ts, event_id) order. A row opens a
+    session when its gap to the previous row is ``split`` 30 min:
+    ``>`` is ``sessionize``'s strict split, ``>=`` the [ts, ts+gap)
+    bound of Spark's native session windows."""
+    return f"""WITH ev AS ({_EV_CENTS_SQL}),
+lagged AS (
+  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
+),
+s AS (
+  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) {split} 1800000000
                      THEN 1 ELSE 0 END)
            OVER (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev)
-),
+  FROM lagged
+)"""
+
+
+ORACLE_PIT_DUAL_RATE = f"""
+{_gap_sessions('>')},
 feats AS (
   SELECT *,
     round(avg(value_cents) OVER w_fast, 6) AS fast_avg,
     count(value_cents) OVER w_fast AS fast_cnt,
     round(avg(value_cents) OVER w_slow, 6) AS slow_avg,
     count(value_cents) OVER w_slow AS slow_cnt
-  FROM sess
+  FROM s
   WINDOW w_fast AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING),
          w_slow AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 64 PRECEDING AND 1 PRECEDING)
 ),
@@ -395,26 +407,6 @@ def _q_sessionize(spark: SparkSession, sf_dir: str, chunked: bool) -> DataFrame:
 
 q_sessionize = functools.partial(_q_sessionize, chunked=False)
 q_sessionize_chunked = functools.partial(_q_sessionize, chunked=True)
-
-
-def _gap_sessions(split: str) -> str:
-    """``WITH ev, lagged, s``: ``s`` is the events (``ev``, with
-    ``value_cents``) plus ``session_idx``, the 1-based 30-minute-gap
-    session index per user in (ts, event_id) order. A row opens a
-    session when its gap to the previous row is ``split`` 30 min:
-    ``>`` is ``sessionize``'s strict split, ``>=`` the [ts, ts+gap)
-    bound of Spark's native session windows."""
-    return f"""WITH ev AS ({_EV_CENTS_SQL}),
-lagged AS (
-  SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM ev
-),
-s AS (
-  SELECT *, CAST(SUM(CASE WHEN prev_ts IS NULL OR epoch_us(ts) - epoch_us(prev_ts) {split} 1800000000
-                     THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM lagged
-)"""
 
 
 ORACLE_SESSIONIZE = f"""
@@ -5496,35 +5488,42 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = (F.col("doc_id") % 10) >= 8
     keyed = d.select("doc_id", F.md5("text").alias("h"), is_new.alias("is_new"))
     old_h = keyed.filter(~F.col("is_new")).select("h").distinct()
-    exact = (
-        keyed.filter("is_new").join(old_h, "h", "left_semi").select("doc_id")
-        .withColumn("exact", F.lit(True))
-    )
-    # is_new is a pure function of the id — derive it on the signature
-    # rows instead of joining the corpus back in (the r6 join re-scanned
-    # documents and shuffled n rows just to re-attach (doc_id % 10) >= 8)
     from pyspark import StorageLevel
 
     # old-side and new-side probes both read the band table; persist the
     # tiny per-doc signature relation so the shingle explode + salted
     # hashing runs once per execution
-    sigs = (
-        DD.minhash_signatures(d, num_hashes=_N_MINHASH)
-        .withColumn("is_new", (F.col("id") % 10) >= 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = DD.minhash_signatures(d, num_hashes=_N_MINHASH).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    buckets = _band_bucket_table(sigs, extra_cols=("is_new",))
-    old_b = buckets.filter(~F.col("is_new")).select("band", "bucket").distinct()
+    bands = DD.band_buckets(sigs, _N_MINHASH, _N_BANDS)
+    # is_new is a pure function of the id — derive it on the band rows
+    # instead of joining the corpus back in (the r6 join re-scanned
+    # documents and shuffled n rows just to re-attach (doc_id % 10) >= 8)
+    band_is_new = (F.col("id") % 10) >= 8
+    old_b = bands.filter(~band_is_new).select("band", "bucket").distinct()
+    return _incremental_status(keyed.filter("is_new"), old_h, bands.filter(band_is_new), old_b)
+
+
+def _incremental_status(
+    new: DataFrame, old_h: DataFrame, new_bands: DataFrame, old_b: DataFrame
+) -> DataFrame:
+    """(doc_id, status) for every ``new`` (doc_id, h) row: 'exact' when
+    its md5 ``h`` is in ``old_h``, else 'near' when one of its
+    ``new_bands`` (id, band, bucket) rows is in ``old_b``, else
+    'unique'. Both probes are left-semi joins against the old side."""
+    exact = (
+        new.join(old_h, "h", "left_semi").select("doc_id")
+        .withColumn("exact", F.lit(True))
+    )
     near = (
-        buckets.filter("is_new")
-        .join(old_b, ["band", "bucket"], "left_semi")
+        new_bands.join(old_b, ["band", "bucket"], "left_semi")
         .select(F.col("id").alias("doc_id"))
         .distinct()
         .withColumn("near", F.lit(True))
     )
     return (
-        keyed.filter("is_new")
-        .select("doc_id")
+        new.select("doc_id")
         .join(exact, "doc_id", "left")
         .join(near, "doc_id", "left")
         .select(
@@ -5555,22 +5554,6 @@ SELECT k.doc_id,
             ELSE 'unique' END AS status
 FROM k WHERE k.is_new
 """
-
-
-def _band_bucket_table(sigs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(id, mh0..mhN) signatures → (id, band, bucket int64) — the LSH
-    band table both incremental variants probe. One posexplode over an
-    in-row band-hash array: the r6 union of per-band SELECTs made every
-    consumer re-evaluate the signature aggregation once per band
-    (operators/dedup.band_buckets has the measured profile)."""
-    rows = _N_MINHASH // _N_BANDS
-    per_band = []
-    for b in range(_N_BANDS):
-        cols = [F.col(f"mh{b * rows + r}").cast("string") for r in range(rows)]
-        per_band.append(DD.md5i64(F.concat_ws("|", *cols)))
-    return sigs.select(
-        "id", *extra_cols, F.posexplode(F.array(*per_band)).alias("band", "bucket")
-    )
 
 
 def incremental_index_dir(sf_dir: str) -> str:
@@ -5611,8 +5594,8 @@ def build_incremental_index(spark: SparkSession, sf_dir: str) -> str:
     old.select(F.md5("text").alias("h")).distinct().write.mode("overwrite").parquet(
         os.path.join(staging, "exact")
     )
-    _band_bucket_table(
-        DD.minhash_signatures(old, num_hashes=_N_MINHASH)
+    DD.band_buckets(
+        DD.minhash_signatures(old, num_hashes=_N_MINHASH), _N_MINHASH, _N_BANDS
     ).select("band", "bucket").distinct().write.mode("overwrite").parquet(
         os.path.join(staging, "bands")
     )
@@ -5639,31 +5622,10 @@ def q_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     batch = d.filter((F.col("doc_id") % 10) >= 8)
     keyed = batch.select("doc_id", F.md5("text").alias("h"))
-    exact = (
-        keyed.join(old_h, "h", "left_semi").select("doc_id")
-        .withColumn("exact", F.lit(True))
+    bands = DD.band_buckets(
+        DD.minhash_signatures(batch, num_hashes=_N_MINHASH), _N_MINHASH, _N_BANDS
     )
-    batch_buckets = _band_bucket_table(
-        DD.minhash_signatures(batch, num_hashes=_N_MINHASH)
-    )
-    near = (
-        batch_buckets.join(old_b, ["band", "bucket"], "left_semi")
-        .select(F.col("id").alias("doc_id"))
-        .distinct()
-        .withColumn("near", F.lit(True))
-    )
-    return (
-        keyed.select("doc_id")
-        .join(exact, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact"), F.lit("exact"))
-            .when(F.col("near"), F.lit("near"))
-            .otherwise(F.lit("unique"))
-            .alias("status"),
-        )
-    )
+    return _incremental_status(keyed, old_h, bands, old_b)
 
 
 def q_pagerank2(spark: SparkSession, sf_dir: str) -> DataFrame:

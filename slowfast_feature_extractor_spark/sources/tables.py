@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import math
 import os
+from typing import NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,19 +79,15 @@ def parallelize_scan(
     default 0. Unstat-able inputs skip the gate — at object-store
     scale the input is never this small."""
     sc = df.sparkSession.sparkContext
-    conf = df.sparkSession.conf
     target = sc.defaultParallelism * factor
     threshold = max(2, target // 2)
     try:
         files = df.inputFiles()
-        if len(files) >= threshold:
-            est = _estimated_splits(files, conf)
-            if est is None or est >= threshold:
-                return df
-        if min_bytes > 0:
-            total = _total_bytes(files)
-            if total is not None and total < min_bytes:
-                return df
+        packed = _packed_splits(df, files)
+        if len(files) >= threshold and (packed is None or packed[0] >= threshold):
+            return df
+        if min_bytes > 0 and packed is not None and packed[1] < min_bytes:
+            return df
     except Exception:
         pass  # non-file source: fall through to the partition probe
     if df.rdd.getNumPartitions() < threshold:
@@ -112,49 +110,99 @@ def parallelize_scan(
     return df
 
 
-def _estimated_splits(files: list[str], conf) -> int | None:
-    """Spark's file bin-packing estimate; None when files can't be statted
-    (non-local URIs) — caller then trusts the raw file count."""
-    max_split = _bytes_conf(conf, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
-    open_cost = _bytes_conf(conf, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
-    total = 0
+def _packed_splits(df: DataFrame, files: list[str]) -> tuple[int, int] | None:
+    """(estimated splits, total bytes) of a local file scan, statting
+    each file once. Splits follow Spark's file bin-packing,
+    ceil(Σ(size + openCost) / maxPartitionBytes), with both sizes read
+    from the session's own parsed conf. None when any file is not
+    local or cannot be statted — the caller then trusts the raw file
+    count."""
+    paths = local_paths(files)
+    if paths is None:
+        return None
+    try:
+        sizes = [os.path.getsize(p) for p in paths]
+    except OSError:
+        return None
+    total = sum(sizes)
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    packed = total + len(sizes) * conf.filesOpenCostInBytes()
+    return max(1, math.ceil(packed / conf.filesMaxPartitionBytes())), total
+
+
+def local_paths(files: list[str]) -> list[str] | None:
+    """``inputFiles()`` URIs as local filesystem paths, percent-decoded
+    (a table under ``with space/`` is listed as ``with%20space/``).
+    None when there are no files or any file is not local."""
+    paths = []
     for f in files:
-        path = f[7:] if f.startswith("file://") else f if f.startswith("/") else None
-        if path is None:
+        uri = urlparse(f)
+        if uri.scheme not in ("", "file") or uri.netloc:
             return None
+        paths.append(unquote(uri.path))
+    return paths or None
+
+
+# footers one scan_stats call reads at most; at or below it the row
+# count is exact
+_MAX_FOOTERS = 256
+
+
+class ScanStats(NamedTuple):
+    """Plan-time statistics of a scan, gathered without a Spark job.
+
+    ``rows`` is the exact parquet footer total when the scan has at
+    most 256 local files; above that, the total of an evenly strided
+    256 footers scaled by the file count; for inputs that are not
+    readable parquet files, Catalyst's ``rowCount`` statistic; else
+    None. ``units`` are the read footers' ``(path, row_group, rows)``
+    and ``footers`` their metadata by path (both empty when no footer
+    was read). Scan-level filters make ``rows`` an over-count, so it
+    serves performance decisions only."""
+
+    rows: int | None
+    units: list[tuple[str, int, int]]
+    footers: dict
+
+    def read_column(self, path: str, row_group: int, column: str):
+        """One row group's ``column`` (a pyarrow ChunkedArray), reusing
+        the footer this pass already read."""
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(path, metadata=self.footers[path])
+        return pf.read_row_group(row_group, columns=[column]).column(0)
+
+
+def scan_stats(df: DataFrame) -> ScanStats:
+    """The one footer pass behind every plan-time size decision (the
+    auto-chunk chooser, the blocked ANN guards)."""
+    try:
+        paths = local_paths(df.inputFiles())
+    except Exception:
+        paths = None
+    if paths is not None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         try:
-            total += os.path.getsize(path) + open_cost
-        except OSError:
-            return None
-    return max(1, math.ceil(total / max_split))
-
-
-def _total_bytes(files: list[str]) -> int | None:
-    """Sum of stat-able local file sizes; None when any path is not a
-    local file (the min_bytes gate then stays out of the way)."""
-    total = 0
-    for f in files:
-        path = f[7:] if f.startswith("file://") else f if f.startswith("/") else None
-        if path is None:
-            return None
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
-
-
-def _bytes_conf(conf, key: str, default: int) -> int:
-    raw = str(conf.get(key, str(default))).strip().lower()
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4, "b": 1}
-    # Spark accepts '128m' and '128mb' alike (JavaUtils.byteStringAs);
-    # drop a trailing 'b' after another unit letter so both parse here
-    # instead of falling back to the eager partition probe (ADVICE r3).
-    if len(raw) >= 2 and raw[-1] == "b" and raw[-2] in units and raw[-2] != "b":
-        raw = raw[:-1]
-    if raw and raw[-1] in units:
-        return int(float(raw[:-1]) * units[raw[-1]])
-    return int(raw)
+            sample = paths[:: max(1, len(paths) // _MAX_FOOTERS)][:_MAX_FOOTERS]
+            footers = {p: pq.ParquetFile(p).metadata for p in sample}
+            units = [
+                (p, i, m.row_group(i).num_rows)
+                for p, m in footers.items()
+                for i in range(m.num_row_groups)
+            ]
+            rows = sum(m.num_rows for m in footers.values())
+            return ScanStats(rows * len(paths) // len(sample), units, footers)
+        except (OSError, pa.ArrowException):
+            pass  # not readable parquet: Catalyst's estimate below
+    try:
+        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        if rc.isDefined():
+            return ScanStats(int(str(rc.get())), [], {})
+    except Exception:
+        pass
+    return ScanStats(None, [], {})
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -12,6 +12,9 @@ from slowfast_feature_extractor_spark.sources.pages import gen_pages  # noqa: E4
 
 SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
+# a directory name that ``inputFiles()`` lists percent-encoded
+# (``with%20space%2541dir``): plan-time footer statistics must decode it
+SCAN_DIR_ENCODED = "with space%41dir"
 
 
 @pytest.fixture(scope="session")

@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import SCAN_DIR_ENCODED
 
 from slowfast_feature_extractor_spark.functions.extraction import extract_text
 from slowfast_feature_extractor_spark.functions.vector import resample_to_k_np
@@ -142,12 +143,15 @@ def test_chunked_flagship_rejects_bad_args(pages_df):
         featurize_pages(pages_df, fast_rows=99, slow_rows=8, chunk_trunc="day")
 
 
-def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd):
+@pytest.mark.parametrize("subdir", ["", SCAN_DIR_ENCODED], ids=["plain", "percent_encoded"])
+def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd, subdir):
     """VERDICT r4 #6: composing featurize_pages over a parquet SCAN runs
     ZERO Spark jobs at any input size — below the threshold the footer
     row bound decides, above it the driver-side pyarrow row-group
     sketch decides. The eager groupBy is reserved for composed
-    (join/explode/union) inputs, where footers under-count."""
+    (join/explode/union) inputs, where footers under-count. A table
+    under a directory that ``inputFiles()`` lists percent-encoded
+    (space, ``%``) keeps the contract and the exact footer count."""
     from slowfast_feature_extractor_spark.plans.featurize import (
         _hot_entity_sketch,
         _plan_is_bare_scan,
@@ -155,8 +159,9 @@ def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd):
         featurize_pages,
     )
     from slowfast_feature_extractor_spark.sources.pages import pages_spark_schema
+    from slowfast_feature_extractor_spark.sources.tables import scan_stats
 
-    path = str(tmp_path / "pages.parquet")
+    path = str(tmp_path / subdir / "pages.parquet")
     spark.createDataFrame(pages_pd, schema=pages_spark_schema()).repartition(
         4
     ).write.parquet(path)
@@ -164,6 +169,8 @@ def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd):
     assert _plan_is_bare_scan(df)
     assert not _plan_is_bare_scan(df.unionByName(df))
     assert not _plan_is_bare_scan(df.join(df.select("url"), "url"))
+    stats = scan_stats(df)
+    assert stats.rows == len(pages_pd)  # exact, from footers
 
     tracker = spark.sparkContext.statusTracker()
 
@@ -182,7 +189,7 @@ def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd):
 
     # case 3: total above threshold, hot entity holds >= threshold rows
     # -> sketch flags it -> chunked, zero jobs
-    hot = _hot_entity_sketch(df, "url", n_rows)
+    hot = _hot_entity_sketch(stats, "url")
     per_url = pages_pd.groupby("url").size().max()
     assert hot is not None and hot >= per_url * 0.5
     before = tracker.getJobIdsForGroup(None)
@@ -198,3 +205,33 @@ def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd):
     d2 = auto_chunk_decision(joined, "url", threshold=2)
     assert d2 == "day"
     assert tracker.getJobIdsForGroup(None) == after_first  # memoized
+
+
+def test_auto_chunk_reads_each_footer_once(spark, tmp_path, pages_pd, monkeypatch):
+    """An above-threshold decision on a bare scan takes the row total
+    and the hot-entity sample from ONE footer pass: each file's footer
+    is parsed once, and the sampled row groups are read through the
+    metadata already in hand."""
+    import pyarrow.parquet as pq
+
+    from slowfast_feature_extractor_spark.plans.featurize import auto_chunk_decision
+    from slowfast_feature_extractor_spark.sources.pages import pages_spark_schema
+
+    path = str(tmp_path / "pages.parquet")
+    spark.createDataFrame(pages_pd, schema=pages_spark_schema()).repartition(
+        8
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    footer_reads: dict = {}
+    real = pq.ParquetFile
+
+    def counting(source, *args, **kwargs):
+        if kwargs.get("metadata") is None:
+            footer_reads[source] = footer_reads.get(source, 0) + 1
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    per_url = int(pages_pd.groupby("url").size().max())
+    assert auto_chunk_decision(df, "url", threshold=per_url) == "day"
+    assert len(footer_reads) == 8
+    assert set(footer_reads.values()) == {1}, footer_reads

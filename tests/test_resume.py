@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from slowfast_feature_extractor_spark.operators.resume import (
     ledger_read,
-    read_output,
     run_with_checkpoint,
 )
 from slowfast_feature_extractor_spark.plans.featurize import salted_buckets
@@ -30,7 +29,7 @@ def _compute(part):
 def _rows(spark, out_dir):
     return sorted(
         (r["bucket"], r["user_id"], r["n"], round(r["s"], 6))
-        for r in read_output(spark, out_dir).collect()
+        for r in spark.read.parquet(out_dir).collect()
     )
 
 
@@ -105,7 +104,7 @@ def test_ledger_metrics(spark, tmp_path):
     recs = ledger_read(led)
     assert set(recs) == {r[0] for r in df.select("bucket").distinct().collect()}
     total = sum(rec["n_rows"] for rec in recs.values())
-    assert total == read_output(spark, out).count()
+    assert total == spark.read.parquet(out).count()
     assert all(rec["batch_id"] == "b7" and rec["wall_ms"] >= 0 for rec in recs.values())
 
 

@@ -3,9 +3,11 @@
 from __future__ import annotations
 
 import pytest
+from conftest import SCAN_DIR_ENCODED
 from pyspark.sql import functions as F
 
 from slowfast_feature_extractor_spark.operators import similarity as SIM
+from slowfast_feature_extractor_spark.sources.tables import scan_stats
 
 VECS = [
     (0, [1.0, 0.0, 0.0, 0.0]),
@@ -69,9 +71,11 @@ def test_embedding_neardup_blocked_lsh_restricts_to_sign_bucket(emb):
     assert (0, 4) in out and (0, 1) in out
 
 
-def test_blocked_neardup_no_planning_job(spark, tmp_path):
+@pytest.mark.parametrize("subdir", ["", SCAN_DIR_ENCODED], ids=["plain", "percent_encoded"])
+def test_blocked_neardup_no_planning_job(spark, tmp_path, subdir):
     """n_blocks=None must not run a count() job at plan time: the row
-    estimate comes from parquet footers (VERDICT r2 item 8)."""
+    estimate comes from parquet footers (VERDICT r2 item 8), also for
+    a table whose path ``inputFiles()`` lists percent-encoded."""
     import numpy as np
     import pandas as pd
 
@@ -80,11 +84,10 @@ def test_blocked_neardup_no_planning_job(spark, tmp_path):
         {"vec_id": range(100),
          "embedding": [rng.normal(size=8).astype("float32") for _ in range(100)]}
     )
-    path = str(tmp_path / "emb.parquet")
+    path = str(tmp_path / subdir / "emb.parquet")
     spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>").write.parquet(path)
     df = spark.read.parquet(path)
-    est = SIM._estimate_rows(df)
-    assert est == 100  # exact, from footers, zero Spark jobs
+    assert scan_stats(df).rows == 100  # exact, from footers, zero Spark jobs
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None)
     out = SIM.embedding_neardup_blocked(df, threshold=0.99)  # plan only
@@ -93,11 +96,14 @@ def test_blocked_neardup_no_planning_job(spark, tmp_path):
     assert out.schema.simpleString() == "struct<id_a:bigint,id_b:bigint,sim:double>"
 
 
-def test_knn_blocked_guards_driver_collect(spark, tmp_path):
+@pytest.mark.parametrize("subdir", ["", SCAN_DIR_ENCODED], ids=["plain", "percent_encoded"])
+def test_knn_blocked_guards_driver_collect(spark, tmp_path, subdir):
     """VERDICT r5 #4: above max_query_rows the blocked variant must NOT
     collect the query side to the driver — it falls back to the
     join-based plan (no grouped python node, no broadcast-hinted query
-    side) and stays value-identical to the broadcast path."""
+    side) and stays value-identical to the broadcast path. The guard
+    holds for tables whose paths ``inputFiles()`` lists
+    percent-encoded."""
     import numpy as np
     import pandas as pd
 
@@ -106,12 +112,12 @@ def test_knn_blocked_guards_driver_collect(spark, tmp_path):
         {"vec_id": range(60),
          "embedding": [rng.normal(size=8).astype("float32") for _ in range(60)]}
     )
-    path = str(tmp_path / "emb.parquet")
+    path = str(tmp_path / subdir / "emb.parquet")
     spark.createDataFrame(
         pdf, schema="vec_id long, embedding array<float>"
     ).write.parquet(path)
     corpus = spark.read.parquet(path)
-    qpath = str(tmp_path / "queries.parquet")
+    qpath = str(tmp_path / subdir / "queries.parquet")
     corpus.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     ).write.parquet(qpath)

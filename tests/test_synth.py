@@ -45,24 +45,48 @@ def test_embeddings_shape(spark):
     assert min(flat) >= -1.0 and max(flat) <= 1.0
 
 
-def test_bytes_conf_suffix_parsing():
+def test_bytes_conf_suffix_parsing(spark, tmp_path):
     """ADVICE r3: Spark accepts both '128m' and '128mb' spellings
-    (JavaUtils.byteStringAs); the split estimator must parse both or it
-    silently falls back to the eager partition probe."""
-    from slowfast_feature_extractor_spark.sources.tables import _bytes_conf
+    (JavaUtils.byteStringAs). parallelize_scan's split estimate reads
+    the session's parsed byte sizes, so suffixed values count as bytes
+    instead of sending the scan to the eager partition probe. The table
+    sits under a percent-encoded directory, so the estimate also shows
+    the paths resolve."""
+    import os
 
-    class _Conf(dict):
-        def get(self, k, d=None):
-            return dict.get(self, k, d)
+    from conftest import SCAN_DIR_ENCODED
 
-    for raw, want in (
-        ("134217728", 134217728),
-        ("128m", 128 * 1024**2),
-        ("128mb", 128 * 1024**2),
-        ("1gb", 1024**3),
-        ("64KB", 64 * 1024),
-        ("2tb", 2 * 1024**4),
-        ("512b", 512),
-        ("4194304b", 4194304),
-    ):
-        assert _bytes_conf(_Conf(k=raw), "k", 0) == want, raw
+    from slowfast_feature_extractor_spark.sources.tables import _packed_splits
+
+    path = str(tmp_path / SCAN_DIR_ENCODED / "t.parquet")
+    spark.range(40).repartition(4).write.parquet(path)
+    df = spark.read.parquet(path)
+    files = df.inputFiles()
+    sizes = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path) if f.endswith(".parquet")
+    )
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        # 4 files at 64 MB open cost each: 256 MB + the bytes themselves
+        spark.conf.set(keys[1], "64mb")
+        for raw, want in (("128mb", 3), ("1gb", 1)):
+            spark.conf.set(keys[0], raw)
+            assert _packed_splits(df, files) == (want, sizes), raw
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+
+
+def test_local_paths_decode_input_file_uris():
+    """``inputFiles()`` URIs resolve to percent-decoded local paths; any
+    non-local file (or no file) leaves nothing to stat."""
+    from slowfast_feature_extractor_spark.sources.tables import local_paths
+
+    assert local_paths(
+        ["file:///d/with%20space%2541dir/a.parquet", "file:/d/b.parquet", "/d/c.parquet"]
+    ) == ["/d/with space%41dir/a.parquet", "/d/b.parquet", "/d/c.parquet"]
+    assert local_paths(["file:///d/a.parquet", "s3a://bucket/b.parquet"]) is None
+    assert local_paths(["hdfs://nn:8020/d/a.parquet"]) is None
+    assert local_paths([]) is None
